@@ -8,8 +8,12 @@ The distributed shape (SURVEY.md §4.2, north rule):
                       input partitioning IS the salt, generalizing the
                       explicit `groupBy(keys, salt)` two-level plan. A
                       1000-executor job shuffles only KB-scale states.
-  stage 2 (final):    groupBy(keys) over the tiny state rows +
-                      applyInPandas merge → finalize.
+  stage 2 (final):    grouped: groupBy(keys) over the tiny state rows +
+                      applyInPandas merge → finalize. Global: the driver
+                      collects the per-partition states and folds them
+                      (`merge_states`); past DRIVER_FOLD_MAX_PARTITIONS a
+                      narrow pre-merge stage runs first (treeAggregate's
+                      extra level), so driver memory stays bounded.
 
 An explicit salted variant (`salted=True`) reshuffles rows on
 (keys, pmod(hash, n_salts)) first — useful when upstream partitioning
@@ -29,7 +33,7 @@ stage is the piece Miller never needed and the whole point here.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -37,6 +41,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType
 
 STATE_COL = "__sketch_state"
+
+# A global aggregate folds at most this many partial partitions' states
+# on the driver directly; past it, a pre-merge stage shrinks them first.
+DRIVER_FOLD_MAX_PARTITIONS = 64
+PRE_MERGE_PARTITIONS = 8
 
 
 class SketchSpec:
@@ -69,6 +78,16 @@ class SketchSpec:
             lambda df, of: df.withColumn("__h", F.xxhash64(F.col(of).cast("string")))
         )
         self.deserialize = deserialize
+
+
+def merge_states(deserialize: Callable[[bytes], object], blobs: Iterable) -> object | None:
+    """Fold serialized sketch states into one sketch; None when `blobs`
+    is empty."""
+    merged = None
+    for blob in blobs:
+        sk = deserialize(bytes(blob))
+        merged = sk if merged is None else merged.merge(sk)
+    return merged
 
 
 def _group_key_tuple(key) -> tuple:
@@ -144,44 +163,24 @@ def sketch_aggregate(
     finalize = spec.finalize
 
     if not by:
-        # GLOBAL aggregate: the grouped plan would shuffle the KB-scale
-        # states to one reducer through a full exchange + a final stage
-        # of shuffle.partitions mostly-empty python tasks — measured
-        # ~3s of fixed cost per job regardless of core count, which
-        # caps N-vs-4N scaling efficiency. treeAggregate shape instead:
-        # a NARROW coalesce + in-partition merge collapses the states
-        # to <= 8 rows, the driver merges those (sub-ms; states are
-        # KB), and the one-row result becomes a local DataFrame.
-        def merge_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            merged = None
-            for pdf in batches:
-                for blob in pdf[STATE_COL]:
-                    sk = deser(bytes(blob))
-                    merged = sk if merged is None else merged.merge(sk)
-            if merged is not None:
-                yield pd.DataFrame({STATE_COL: [merged.serialize()]})
+        if partials.rdd.getNumPartitions() > DRIVER_FOLD_MAX_PARTITIONS:
+            # repartition, NOT coalesce: coalesce fuses into the parent
+            # stage and would collapse the partial computation itself to
+            # PRE_MERGE_PARTITIONS tasks. The shuffle moves only states.
+            def merge_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                merged = merge_states(deser, (b for pdf in batches for b in pdf[STATE_COL]))
+                if merged is not None:
+                    yield pd.DataFrame({STATE_COL: [merged.serialize()]})
 
-        state_schema = StructType([StructField(STATE_COL, BinaryType(), False)])
-        # repartition, NOT coalesce: coalesce fuses into the parent stage
-        # and would collapse the partial computation itself to 8 tasks.
-        # The round-robin shuffle moves only KB-scale states.
-        reduced = partials.repartition(8).mapInPandas(merge_partition, schema=state_schema)
-        rows = reduced.collect()
-        spark = df.sparkSession
-        if not rows:
-            return spark.createDataFrame([], schema=out_schema)
-        merged = None
-        for r in rows:
-            sk = deser(bytes(r[STATE_COL]))
-            merged = sk if merged is None else merged.merge(sk)
-        return spark.createDataFrame(finalize(merged), schema=out_schema)
+            partials = partials.repartition(PRE_MERGE_PARTITIONS).mapInPandas(
+                merge_partition, schema=partials.schema
+            )
+        merged = merge_states(deser, (r[STATE_COL] for r in partials.collect()))
+        out = [] if merged is None else finalize(merged)
+        return df.sparkSession.createDataFrame(out, schema=out_schema)
 
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = None
-        for blob in pdf[STATE_COL]:
-            sk = deser(bytes(blob))
-            merged = sk if merged is None else merged.merge(sk)
-        out = finalize(merged)
+        out = finalize(merge_states(deser, pdf[STATE_COL]))
         for c in by:
             out.insert(0, c, pdf[c].iloc[0]) if c not in out.columns else None
         return out[ [c for c in by] + [c for c in out.columns if c not in by] ]

@@ -35,6 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mlrsketch.agg import STATE_COL, merge_states
 from mlrsketch.textextract import EXTRACTOR_VERSION
 
 CHECKPOINT_SCHEMA = StructType(
@@ -97,15 +98,13 @@ def run_resumable_sketch_spec(
     the cluster mostly idle. Here every pending file is read in a single
     `spark.read.parquet(*files)` scan, rows are tagged with their source
     file (`input_file_name`), partial states build per (task x unit) in
-    one `mapInPandas` pass, merge per unit in one small shuffle of
-    KB-scale states, and the per-unit rows land in the checkpoint dir in
-    one append. Wall time is governed by the scan, not the unit count.
+    one `mapInPandas` pass, the driver collects those KB-scale states and
+    folds them per unit, and the per-unit rows land in the checkpoint dir
+    in one append. Wall time is governed by the scan, not the unit count.
 
     Returns (merged_sketch, n_units_recomputed).
     """
     import numpy as np  # noqa: F401 (callers' update fns expect numpy present)
-
-    from mlrsketch.agg import STATE_COL
 
     units = list_units(spark, table_path)
     done = completed_units(spark, ckpt_dir, job_id)
@@ -144,42 +143,24 @@ def run_resumable_sketch_spec(
                     ]
                 )
 
-        deser = spec.deserialize
-
-        def merge_unit(pdf: pd.DataFrame) -> pd.DataFrame:
-            merged = None
-            for blob in pdf[STATE_COL]:
-                sk = deser(bytes(blob))
-                merged = sk if merged is None else merged.merge(sk)
-            return pd.DataFrame(
-                [
-                    {
-                        "__unit": pdf["__unit"].iloc[0],
-                        STATE_COL: merged.serialize(),
-                        "rows_in": int(pdf["rows_in"].sum()),
-                    }
-                ]
-            )
-
-        per_unit = (
-            prepared.mapInPandas(partial, schema=part_schema)
-            .groupBy("__unit")
-            .applyInPandas(merge_unit, schema=part_schema)
-            .collect()
-        )
+        blobs: dict[str, list] = {}
+        unit_rows: dict[str, int] = {}
+        for r in prepared.mapInPandas(partial, schema=part_schema).collect():
+            blobs.setdefault(r["__unit"], []).append(r[STATE_COL])
+            unit_rows[r["__unit"]] = unit_rows.get(r["__unit"], 0) + r["rows_in"]
         wall_ms = int((time.monotonic() - t0) * 1000)
         out = pd.DataFrame(
             [
                 {
                     "job_id": job_id,
-                    "unit_id": by_base[r["__unit"]][0],
-                    "input_fingerprint": by_base[r["__unit"]][1],
+                    "unit_id": by_base[unit][0],
+                    "input_fingerprint": by_base[unit][1],
                     "extractor_version": EXTRACTOR_VERSION,
-                    "rows_in": r["rows_in"],
+                    "rows_in": unit_rows[unit],
                     "wall_ms": wall_ms,
-                    "state": bytes(r[STATE_COL]),
+                    "state": merge_states(spec.deserialize, unit_blobs).serialize(),
                 }
-                for r in per_unit
+                for unit, unit_blobs in blobs.items()
             ]
         )
         spark.createDataFrame(out, schema=CHECKPOINT_SCHEMA).write.mode(
@@ -196,11 +177,7 @@ def _merge_checkpointed(spark, ckpt_dir, job_id, deserialize):
     )
     # latest state per unit (re-runs may append duplicates)
     latest = ckpt.groupBy("unit_id").agg(F.max_by("state", "wall_ms").alias("state"))
-    merged = None
-    for r in latest.collect():
-        sk = deserialize(bytes(r["state"]))
-        merged = sk if merged is None else merged.merge(sk)
-    return merged
+    return merge_states(deserialize, (r["state"] for r in latest.collect()))
 
 
 def run_resumable_sketch(

@@ -1194,8 +1194,10 @@ def _xtab_block(lines: list[str]) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _flags(argv: list[str], known: dict[str, int]):
-    """Parse argv into {flag: value(s)} + positionals; raise on unknown -flags."""
+def _flags(argv: list[str], known: dict[str, int | str]):
+    """Parse argv into {flag: value(s)} + positionals; raise on unknown -flags.
+    Arity 0 is a switch, 1 takes one value (the last occurrence wins), "*"
+    takes one value per occurrence and collects them in order."""
     out: dict[str, object] = {}
     pos: list[str] = []
     i = 0
@@ -1206,6 +1208,9 @@ def _flags(argv: list[str], known: dict[str, int]):
             if nvals == 0:
                 out[a] = True
                 i += 1
+            elif nvals == "*":
+                out.setdefault(a, []).append(argv[i + 1])
+                i += 2
             else:
                 out[a] = argv[i + 1]
                 i += 2
@@ -5317,7 +5322,7 @@ def v_nest(df, argv):
 
 
 def v_reshape(df, argv):
-    fl, _ = _flags(argv, {"-i": 1, "-o": 1, "-r": 1, "-s": 1})
+    fl, _ = _flags(argv, {"-i": 1, "-o": 1, "-r": "*", "-s": 1})
     if "-s" in fl:
         key, val = _csl(fl["-s"])
         if key not in df.columns or val not in df.columns:
@@ -5352,8 +5357,9 @@ def v_reshape(df, argv):
         ).drop("__pk")
     if "-r" in fl:
         # reshape -r is NOT comma-split: each -r is one whole regex
-        # ("regexes can contain commas within them", reshape.go:45)
-        pats = _regexes([fl["-r"]])
+        # ("regexes can contain commas within them", reshape.go:45), and
+        # repeated -r flags accumulate
+        pats = _regexes(fl["-r"])
         measures = [c for c in df.columns if not c.startswith("__") and any(p.search(c) for p in pats)]
     else:
         measures = [m for m in _csl(fl["-i"]) if m in df.columns]

@@ -48,6 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mlrsketch.agg import merge_states
 from mlrsketch.sketches import HyperLogLog
 
 _STATS1_STREAM_ACCS = {
@@ -247,11 +248,7 @@ def read_merged_states(spark, state_dir: str, deserialize, state_col: str = "__s
     """Merge all persisted partial states under `state_dir` into one
     sketch (driver-side; states are KB each)."""
     rows = spark.read.parquet(state_dir).select(state_col).collect()
-    merged = None
-    for r in rows:
-        sk = deserialize(bytes(r[state_col]))
-        merged = sk if merged is None else merged.merge(sk)
-    return merged
+    return merge_states(deserialize, (r[state_col] for r in rows))
 
 
 def stream_sketch_profile(

@@ -508,8 +508,10 @@ def build_bloom(df: DataFrame, of: str, n_bits: int = 1 << 23, n_hashes: int = 7
         deserialize=BloomFilter.deserialize,
     )
     schema = StructType([StructField("state", BinaryType())])
-    row = sketch_aggregate(df, of, spec, by=(), out_schema=schema).collect()[0]
-    return BloomFilter.deserialize(bytes(row["state"]))
+    rows = sketch_aggregate(df, of, spec, by=(), out_schema=schema).collect()
+    if not rows:
+        return BloomFilter(n_bits=n_bits, n_hashes=n_hashes)
+    return BloomFilter.deserialize(bytes(rows[0]["state"]))
 
 
 def bloom_filter_new(df: DataFrame, of: str, bloom: BloomFilter) -> DataFrame:

@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from mlrsketch import pages
+from mlrsketch import agg, pages
 from mlrsketch.verbs import exact as ev
 from mlrsketch.verbs import sketch as sv
 
@@ -173,3 +173,83 @@ def test_bootstrap_ci_sketch_brackets_and_salting(spark, pages_df):
         s = salted[lang]
         for c in ("tl_mean", "tl_ci_lo", "tl_ci_hi"):
             assert abs(r[c] - s[c]) < 1e-9, (lang, c)
+
+
+# ---------------------------------------------------------------------------
+# global (by=()) aggregates: the driver-side fold of partial states
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def lengths_df(pages_df):
+    return pages_df.withColumn("len", F.length("text").cast("double"))
+
+
+def _global_answers(df):
+    return {
+        "hll": sv.count_distinct_hll(df, "url", p=12).collect(),
+        "tdigest": sv.quantiles_tdigest(df, "len", (0.5, 0.9)).collect(),
+        "topk": sv.token_top_k(df, "text", k=10).collect(),
+        "profile": sv.sketch_profile(df, "url", "text", p=12).collect(),
+    }
+
+
+def test_global_fold_empty_input(lengths_df):
+    for name, rows in _global_answers(lengths_df.filter(F.lit(False))).items():
+        assert rows == [], name
+
+
+@pytest.fixture(scope="module")
+def global_base(lengths_df):
+    return _global_answers(lengths_df)
+
+
+@pytest.mark.parametrize("n_parts", [1, 65])
+def test_global_fold_partitioning_invariant(lengths_df, global_base, n_parts):
+    """One partition folds one state; 65 partitions exceed
+    DRIVER_FOLD_MAX_PARTITIONS and run the pre-merge stage first. HLL
+    merges are exact, so the estimates must not move; the quantile
+    sketches must stay within their rank bounds."""
+    assert n_parts == 1 or n_parts > agg.DRIVER_FOLD_MAX_PARTITIONS
+    frame = lengths_df.coalesce(1) if n_parts == 1 else lengths_df.repartition(n_parts)
+    assert frame.rdd.getNumPartitions() == n_parts
+    got = _global_answers(frame)
+    hll_est = global_base["hll"][0]["distinct_count_est"]
+    assert got["hll"][0]["distinct_count_est"] == hll_est
+    assert got["profile"][0]["url_distinct_est"] == hll_est
+
+    s = np.array(lengths_df.select(F.sort_array(F.collect_list("len")).alias("s")).first()["s"])
+    for q, name in ((0.5, "p50"), (0.9, "p90")):
+        rank_err = abs(np.searchsorted(s, got["tdigest"][0][name]) / s.size - q)
+        assert rank_err <= 6.0 * q * (1 - q) / 200 + 0.01, ("tdigest", q, rank_err)
+        rank_err = abs(np.searchsorted(s, got["profile"][0][f"len_{name}"]) / s.size - q)
+        assert rank_err <= 2.0 / 200 + 0.01, ("kll", q, rank_err)
+
+    # Count-Min never undercounts and overcounts by at most e/width * N
+    tok = lengths_df.select(F.explode(F.split("text", " ")).alias("t"))
+    exact = {r["t"]: r["count"] for r in tok.groupBy("t").count().collect()}
+    n_tokens = sum(exact.values())
+    assert len(got["topk"]) == 10
+    for r in got["topk"]:
+        assert exact[r["value"]] <= r["count_est"] <= exact[r["value"]] + np.e / 16384 * n_tokens
+
+
+def test_global_hll_runs_one_stage(spark, pages_df):
+    """A global aggregate is one Python stage (the partial mapInPandas);
+    its states are folded on the driver, not in a merge stage."""
+    sc = spark.sparkContext
+    group = "global-hll-one-stage"
+    sc.setJobGroup(group, "global count_distinct_hll")
+    try:
+        sv.count_distinct_hll(pages_df, "url", p=12)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    assert len(stages) == 1, stages
+
+
+def test_build_bloom_empty_input(pages_df):
+    bloom = sv.build_bloom(pages_df.filter(F.lit(False)), "url", n_bits=1 << 12, n_hashes=3)
+    assert (bloom.n_bits, bloom.n_hashes, bloom.n_inserted) == (1 << 12, 3, 0)
+    assert not bloom.bits.any()

@@ -173,3 +173,12 @@ def test_iceberg_layer_capability_gated(spark):
     assert has_iceberg(spark) is False  # sandbox ships no connector
     df = read_pages(spark, "/root/testdata/sf0.001/documents.parquet")
     assert df.count() == 500
+
+
+def test_reshape_repeated_r_accumulates(spark):
+    # each -r is one whole regex; repeated -r flags select the union
+    from mlrsketch.mlrcli import v_reshape
+
+    df = spark.createDataFrame([(0, 1, 2, 3, 4)], ["__ord", "id", "x1", "y1", "z1"])
+    out = v_reshape(df, ["-r", "^x", "-r", "^y", "-o", "key,value"])
+    assert sorted((r["key"], r["value"]) for r in out.collect()) == [("x1", "2"), ("y1", "3")]

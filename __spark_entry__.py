@@ -1427,7 +1427,8 @@ def oracle_sql() -> dict[str, str]:
             SELECT event_type,
                    s[greatest(1, CAST(ceil(0.5 * n) AS BIGINT))] AS p50,
                    s[greatest(1, CAST(ceil(0.9 * n) AS BIGINT))] AS p90,
-                   CAST(0.000244140625 AS DOUBLE) AS rank_error_bound
+                   -- KLL.error_bound(): 2.296 / k^0.9723 at k=8192
+                   CAST(0.0003597351221608861 AS DOUBLE) AS rank_error_bound
             FROM (SELECT event_type, list_sort(list(value)) AS s,
                          count(value) AS n
                   FROM events GROUP BY 1)
@@ -1470,7 +1471,8 @@ def oracle_sql() -> dict[str, str]:
                    s[greatest(1, CAST(ceil(0.5 * n) AS BIGINT))] AS len_p50,
                    s[greatest(1, CAST(ceil(0.9 * n) AS BIGINT))] AS len_p90,
                    s[greatest(1, CAST(ceil(0.99 * n) AS BIGINT))] AS len_p99,
-                   CAST(0.001953125 AS DOUBLE) AS len_rank_bound,
+                   -- KLL.error_bound(): 2.296 / k^0.9723 at k=1024
+                   CAST(0.0027167972933084344 AS DOUBLE) AS len_rank_bound,
                    top_tokens, top_counts
             FROM base b JOIN tk USING (lang)
         """,

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType
 
+from mlrsketch.session import python_task
+
 STATE_COL = "__sketch_state"
 
 # A global aggregate folds at most this many partial partitions' states
@@ -142,7 +144,7 @@ def partial_states(
             ]
             yield pd.DataFrame(rows, columns=by + [STATE_COL])
 
-    return prepared.mapInPandas(partial, schema=state_schema)
+    return prepared.mapInPandas(python_task(partial), schema=state_schema)
 
 
 def sketch_aggregate(
@@ -173,7 +175,7 @@ def sketch_aggregate(
                     yield pd.DataFrame({STATE_COL: [merged.serialize()]})
 
             partials = partials.repartition(PRE_MERGE_PARTITIONS).mapInPandas(
-                merge_partition, schema=partials.schema
+                python_task(merge_partition), schema=partials.schema
             )
         merged = merge_states(deser, (r[STATE_COL] for r in partials.collect()))
         out = [] if merged is None else finalize(merged)
@@ -185,4 +187,4 @@ def sketch_aggregate(
             out.insert(0, c, pdf[c].iloc[0]) if c not in out.columns else None
         return out[ [c for c in by] + [c for c in out.columns if c not in by] ]
 
-    return partials.groupBy(*by).applyInPandas(final, schema=out_schema)
+    return partials.groupBy(*by).applyInPandas(python_task(final), schema=out_schema)

@@ -36,6 +36,7 @@ from pyspark.sql.types import (
 )
 
 from mlrsketch.agg import STATE_COL, merge_states
+from mlrsketch.session import python_task
 from mlrsketch.textextract import EXTRACTOR_VERSION
 
 CHECKPOINT_SCHEMA = StructType(
@@ -145,7 +146,7 @@ def run_resumable_sketch_spec(
 
         blobs: dict[str, list] = {}
         unit_rows: dict[str, int] = {}
-        for r in prepared.mapInPandas(partial, schema=part_schema).collect():
+        for r in prepared.mapInPandas(python_task(partial), schema=part_schema).collect():
             blobs.setdefault(r["__unit"], []).append(r[STATE_COL])
             unit_rows[r["__unit"]] = unit_rows.get(r["__unit"], 0) + r["rows_in"]
         wall_ms = int((time.monotonic() - t0) * 1000)

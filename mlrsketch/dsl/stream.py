@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from mlrsketch.dsl import interp as MI
+from mlrsketch.session import python_task
 
 
 def _schema_of(sample_cols: list[tuple[str, str]]) -> StructType:
@@ -134,7 +135,7 @@ def put_stream(
     def apply_fn(pdf):
         return _run_group(pdf, prog, mode_, eo, in_cols, out_cols, oc)
 
-    out = df.groupBy(*group_names).applyInPandas(apply_fn, schema=out_schema)
+    out = df.groupBy(*group_names).applyInPandas(python_task(apply_fn), schema=out_schema)
     if "__g" in out.columns:
         out = out.drop("__g")
     return out

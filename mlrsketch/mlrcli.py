@@ -16,6 +16,7 @@ import shlex
 
 from pyspark.sql import functions as F
 
+from mlrsketch.session import python_task
 from mlrsketch.verbs import exact as ev
 
 REF = "/root/reference/test"
@@ -2839,7 +2840,7 @@ def v_reorder(df, argv):
                 return out
 
             from pyspark.sql.types import ArrayType, StringType
-            ud = F.udf(rework, ArrayType(StringType()))
+            ud = F.udf(python_task(rework), ArrayType(StringType()))
             if "__keys" not in df.columns:
                 df = df.withColumn(
                     "__keys", F.array(*[F.lit(c) for c in cols])

@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from mlrsketch.session import python_task
+
 SEED = 42
 VOCAB_SIZE = 50_000
 LANGS = ["en", "ru", "de", "ja", "fr", "zh"] + [
@@ -107,7 +109,7 @@ def generate_pages(spark: SparkSession, n_rows: int, partitions: int | None = No
                 out_rows, columns=["row_id", "url", "warc_ts", "html", "text", "lang"]
             )
 
-    return base.mapInPandas(gen, schema=_SCHEMA)
+    return base.mapInPandas(python_task(gen), schema=_SCHEMA)
 
 
 def write_pages(spark: SparkSession, n_rows: int, path: str, partitions: int | None = None) -> None:

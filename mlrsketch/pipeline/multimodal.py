@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mlrsketch.session import python_task
+
 IMAGE_META_SCHEMA = StructType(
     [
         StructField("width", IntegerType()),
@@ -75,7 +77,7 @@ def image_features(df: DataFrame, bin_col: str = "payload", id_col: str = "doc_i
                 feats.append(img.reshape(-1, 3).mean(axis=0).astype(np.float32).tolist())
             yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
 
-    return df.select(id_col, bin_col).mapInPandas(extract, schema=schema)
+    return df.select(id_col, bin_col).mapInPandas(python_task(extract), schema=schema)
 
 
 def frame_sample(df: DataFrame, bin_col: str = "payload", every_nth: int = 10) -> DataFrame:
@@ -100,7 +102,7 @@ def frame_sample(df: DataFrame, bin_col: str = "payload", every_nth: int = 10) -
             out["frame_idx"] = list(idxs)
             yield out
 
-    return df.mapInPandas(sample, schema=out_schema)
+    return df.mapInPandas(python_task(sample), schema=out_schema)
 
 
 def attach_fake_payload(df: DataFrame, from_col: str = "text") -> DataFrame:

@@ -16,6 +16,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mlrsketch.session import python_task
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
@@ -148,7 +150,7 @@ def ivf_index(
             pdf["__ivf_bucket"] = (m @ b_cent.value.T).argmax(axis=1).astype(np.int32)
             yield pdf
 
-    return df.mapInPandas(assign, schema=out_schema), cent
+    return df.mapInPandas(python_task(assign), schema=out_schema), cent
 
 
 def ivf_topk(

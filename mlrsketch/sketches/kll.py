@@ -10,13 +10,17 @@ Structure: a hierarchy of compactors; level h holds items of weight 2^h.
 When level h overflows its capacity k*c^(depth-1-h) (c = 2/3), the level
 is sorted and alternate elements (random even/odd offset) are promoted
 to level h+1. Published guarantee: additive rank error eps with constant
-probability for k = O((1/eps) * sqrt(log(1/delta))); in practice the
-normalized rank error is ~ 1.7/k single-stream and bounded under
-arbitrary merges (mergeability proven in the paper).
+probability for k = O((1/eps) * sqrt(log(1/delta))), bounded under
+arbitrary merges (mergeability proven in the paper). `error_bound()`
+reports Apache DataSketches' empirical single-sided 99% bound,
+2.296/k^0.9723 (1.33% at k=200).
 
-The compaction coin uses a counter-seeded splitmix64 so runs are
-deterministic for tests while keeping the unbiasedness argument
-(each offset choice equiprobable across compactions).
+The compaction coin is a counter-seeded splitmix64, so runs are
+deterministic while each offset choice stays equiprobable. The counter
+starts from a hash of the state's first input value: partial states
+built over different partitions flip independent coins. Were every
+state to start at 0, all partitions would flip the same coin sequence
+and their compaction errors would add up instead of cancelling.
 """
 
 from __future__ import annotations
@@ -71,6 +75,9 @@ class KLL:
         v = v[~np.isnan(v)]
         if v.size == 0:
             return
+        if self.n == 0:
+            # 31 bits: the counter is serialized as a uint32
+            self._coin_ctr = int(splitmix64(v[:1].view(np.uint64))[0] >> np.uint64(33))
         # feed in capacity-sized chunks so level 0 never grows unboundedly
         cap = max(self._capacity(0), 8)
         for i in range(0, v.size, cap):
@@ -123,11 +130,11 @@ class KLL:
         return float(wt[:j].sum() / wt.sum())
 
     def error_bound(self) -> float:
-        """Practical normalized rank-error envelope ~ 2.0/k (paper gives
-        eps = O(1/k) up to sqrt(log 1/delta) factors; the Apache
-        DataSketches implementation reports ~1.65/k at 99% confidence
-        for the same compaction scheme)."""
-        return 2.0 / self.k
+        """Normalized rank-error bound at 99% confidence, single-sided:
+        Apache DataSketches' empirical fit 2.296/k^0.9723 for the same
+        compaction scheme (0.0133 at k=200; the paper gives eps = O(1/k)
+        up to sqrt(log 1/delta) factors)."""
+        return 2.296 / self.k**0.9723
 
     # -- serde -------------------------------------------------------------
     def serialize(self) -> bytes:

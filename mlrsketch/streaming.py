@@ -49,6 +49,7 @@ from pyspark.sql.types import (
 )
 
 from mlrsketch.agg import merge_states
+from mlrsketch.session import python_task
 from mlrsketch.sketches import HyperLogLog
 
 _STATS1_STREAM_ACCS = {
@@ -161,7 +162,7 @@ def stream_count_distinct_hll(
         yield pd.DataFrame([row])
 
     return prepared.groupBy(*by).applyInPandasWithState(
-        update, out_schema, state_schema, "update", timeout
+        python_task(update), out_schema, state_schema, "update", timeout
     )
 
 
@@ -217,7 +218,7 @@ def stream_quantiles_kll(
         yield pd.DataFrame([row])
 
     return prepared.groupBy(*by).applyInPandasWithState(
-        update, out_schema, state_schema, "update", timeout
+        python_task(update), out_schema, state_schema, "update", timeout
     )
 
 
@@ -359,5 +360,5 @@ def stream_sketch_profile(
         yield pd.DataFrame([row])
 
     return prepared.groupBy(*by).applyInPandasWithState(
-        update, out_schema, state_schema, "update", timeout
+        python_task(update), out_schema, state_schema, "update", timeout
     )

@@ -27,6 +27,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mlrsketch.session import python_task
+
 # ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
@@ -957,7 +959,12 @@ def percentiles_rank(
     ordered = ordered.localCheckpoint(eager=True)  # pin range placement
     tagged = ordered.withColumn("__mid", F.monotonically_increasing_id())
     pid_of = F.shiftright("__mid", 33).cast("int")
-    gkey = F.concat_ws("\x01", *[F.col(c).cast("string") for c in by]) if by else F.lit("")
+    # length-prefixed parts keep the key injective: a null (absent)
+    # group, a "" (void) group and values holding the separator stay apart
+    gkey = F.concat(*[
+        F.coalesce(F.concat(F.length(s).cast("string"), F.lit(":"), s), F.lit("-"))
+        for s in (F.col(c).cast("string") for c in by)
+    ]) if by else F.lit("")
     # per-(partition, group) row counts; groups are contiguous in the
     # range-sorted layout, so these yield both start indexes and offsets
     pg = (
@@ -2613,7 +2620,9 @@ def bootstrap_ci_hash(
     Output: (by..., {value}_mean, {value}_ci_lo, {value}_ci_hi)."""
     by, key = _cols(by), _cols(key)
     cents = F.round(F.col(value) * 100).cast("long")
-    base = df.select(
+    # a null value has no cents: it must not add its multiplicity to the
+    # boot denominators either
+    base = df.filter(F.col(value).isNotNull()).select(
         *by, cents.alias("__cents"),
         F.concat_ws(":", *[F.col(k).cast("string") for k in key]).alias("__k"),
     )
@@ -2687,7 +2696,7 @@ def bootstrap_ci(
         return pd.DataFrame([row])
 
     grouped = df.groupBy(*by) if by else df.groupBy()
-    return grouped.applyInPandas(per_group, schema=schema)
+    return grouped.applyInPandas(python_task(per_group), schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3138,4 +3147,4 @@ def logireg(df: DataFrame, x: str, y: str, by: Sequence[str] = (),
         return pd.DataFrame([row])
 
     grouped = df.groupBy(*by) if by else df.groupBy()
-    return grouped.applyInPandas(fit, schema=schema)
+    return grouped.applyInPandas(python_task(fit), schema=schema)

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from mlrsketch.agg import STATE_COL, SketchSpec, partial_states, sketch_aggregate
+from mlrsketch.session import python_task
 from mlrsketch.sketches import (
     KLL,
     BloomFilter,
@@ -149,7 +150,7 @@ def theta_sketches_by_group(
     schema = StructType(
         [df.schema[group_col], StructField(STATE_COL, BinaryType(), False)]
     )
-    rows = partials.groupBy(group_col).applyInPandas(merge_group, schema=schema).collect()
+    rows = partials.groupBy(group_col).applyInPandas(python_task(merge_group), schema=schema).collect()
     return {r[group_col]: ThetaSketch.deserialize(bytes(r[STATE_COL])) for r in rows}
 
 
@@ -251,7 +252,8 @@ def quantiles_kll(
     k: int = 200,
     salted: bool = False,
 ) -> DataFrame:
-    """Approximate grouped quantiles via KLL (uniform rank error ~2/k)."""
+    """Approximate grouped quantiles via KLL (uniform rank error
+    2.296/k^0.9723 at 99% confidence: 1.33% at k=200)."""
     spec = _quantile_spec(
         lambda: KLL(k=k), KLL.deserialize, qs, lambda sk: sk.error_bound()
     )
@@ -532,7 +534,7 @@ def bloom_filter_new(df: DataFrame, of: str, bloom: BloomFilter) -> DataFrame:
             yield pdf[mask]
 
     prepared = df.withColumn("__h", F.xxhash64(F.col(of).cast("string")))
-    return prepared.mapInPandas(keep_new, schema=prepared.schema).drop("__h")
+    return prepared.mapInPandas(python_task(keep_new), schema=prepared.schema).drop("__h")
 
 
 # ---------------------------------------------------------------------------
@@ -566,7 +568,7 @@ def ewma_pandas(
         return pdf
 
     grouped = df.groupBy(*by) if by else df.groupBy()
-    return grouped.applyInPandas(per_group, schema=schema)
+    return grouped.applyInPandas(python_task(per_group), schema=schema)
 
 
 # ---------------------------------------------------------------------------

@@ -288,6 +288,52 @@ class TestKLL:
         kl.update_batch(rng.uniform(0, 1, 5_000))
         assert KLL.deserialize(kl.serialize()).quantile(0.5) == kl.quantile(0.5)
 
+    def test_error_bound_is_datasketches_99pct(self):
+        assert abs(KLL(200).error_bound() - 0.013295) < 1e-6
+        assert KLL(100).error_bound() > KLL(200).error_bound()
+
+    def test_partial_states_flip_independent_coins(self, rng):
+        a, b, a2 = KLL(200), KLL(200), KLL(200)
+        xs, ys = rng.uniform(0, 1, 5_000), rng.uniform(0, 1, 5_000)
+        a.update_batch(xs)
+        b.update_batch(ys)
+        a2.update_batch(xs)
+        assert a._coin_ctr != b._coin_ctr
+        assert a.serialize() == a2.serialize()  # reruns stay deterministic
+
+    def test_merged_partials_within_bound_on_benchmark_pages(self):
+        """The benchmark's seed-301 pages: en text lengths over four
+        10k-row partitions, merged in the order (1, 3, 2, 0), put p90
+        0.0101 from its true rank when every partition flipped the same
+        coins and the bound was 2/k."""
+        import importlib.util
+        import pathlib
+
+        import pyarrow.compute as pc
+
+        path = pathlib.Path(__file__).resolve().parent.parent / "perfbench" / "gen.py"
+        spec = importlib.util.spec_from_file_location("perfbench_gen", path)
+        gen = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(gen)
+        t = gen.pages_table(40_000, 301)
+        lens = pc.utf8_length(t["text"]).to_numpy(zero_copy_only=False).astype(np.float64)
+        en = t["lang"].to_numpy(zero_copy_only=False) == "en"
+        blobs = []
+        for i in range(4):
+            sl = slice(10_000 * i, 10_000 * (i + 1))
+            part = KLL(200)
+            part.update_batch(lens[sl][en[sl]])
+            blobs.append(part.serialize())
+        m = KLL.deserialize(blobs[1])
+        for i in (3, 2, 0):
+            m.merge(KLL.deserialize(blobs[i]))
+        s = np.sort(lens[en])
+        for q in (0.5, 0.9, 0.99):
+            est = m.quantile(q)
+            lo, hi = np.searchsorted(s, est, "left") / s.size, np.searchsorted(s, est, "right") / s.size
+            err = 0.0 if lo <= q <= hi else min(abs(q - lo), abs(q - hi))
+            assert err <= m.error_bound(), f"p{q}: rank err {err:.4f} > {m.error_bound():.4f}"
+
 
 class TestHashing:
     def test_hash_strings_distinct_and_deterministic(self):

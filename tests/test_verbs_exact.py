@@ -314,3 +314,38 @@ def test_percentiles_rank_matches_window_free(spark):
         n = 10_001 // 3 + (1 if int(r["g"]) < 10_001 % 3 else 0)
         vals = sorted(float(x["v"]) for x in df.filter(F.col("g") == r["g"]).collect())
         assert r["v_p30"] == vals[min(max(int(0.3 * n), 0), n - 1)]
+
+
+def test_percentiles_rank_keeps_null_and_void_groups_apart(spark):
+    """Miller's absent vs void: a null group and a "" group are two rank
+    runs, and so are multi-key groups that only differ in where a null
+    or an empty string sits."""
+    rows = [(None, "x", float(v)) for v in (1, 2, 3)] + [("", "x", float(v)) for v in (100, 200)] + [
+        ("x", None, 10.0), ("x", "", 20.0), (None, "x", 4.0)]
+    df = spark.createDataFrame(rows, "g string, h string, v double")
+    one = {r["g"]: r["v_p50"] for r in ev.percentiles_rank(df, "v", [50], by=["g"]).collect()}
+    assert one == {None: 2.5, "": 150.0, "x": 15.0}
+    two = {(r["g"], r["h"]): r["v_p50"]
+           for r in ev.percentiles_rank(df, "v", [50], by=["g", "h"]).collect()}
+    assert two == {(None, "x"): 2.5, ("", "x"): 150.0, ("x", None): 10.0, ("x", ""): 20.0}
+
+
+def test_bootstrap_ci_hash_skips_null_values(spark):
+    """A null value adds nothing to a boot mean, neither to its sum nor to
+    its multiplicity: the CI equals the one over the non-null rows."""
+    base = spark.range(0, 400).select(
+        (F.col("id") % 2).cast("string").alias("g"),
+        (F.col("id") * 0.5 + 1).alias("v"),
+        F.col("id").alias("k"),
+    )
+    nulls = spark.range(400, 800).select(
+        (F.col("id") % 2).cast("string").alias("g"),
+        F.lit(None).cast("double").alias("v"),
+        F.col("id").alias("k"),
+    )
+    got = sorted(map(tuple, ev.bootstrap_ci_hash(base.unionByName(nulls), "v", ["k"], by=["g"],
+                                                 n_boot=40).collect()))
+    want = sorted(map(tuple, ev.bootstrap_ci_hash(base, "v", ["k"], by=["g"], n_boot=40).collect()))
+    assert got == want
+    for r in got:
+        assert r[2] <= r[1] <= r[3]

@@ -105,9 +105,11 @@ def partial_states(
     n_salts: int = 64,
 ) -> DataFrame:
     """Stage 1 only: per-(input partition x group) serialized sketch
-    states as (by..., __sketch_state:binary) rows. Used standalone by
-    the streaming foreachBatch sink and the checkpoint layer; composed
-    with the final merge by `sketch_aggregate`."""
+    states as (by..., __sketch_state:binary) rows; a group with no rows
+    has no state row. Composed with the final merge by
+    `sketch_aggregate`; used standalone by the checkpoint layer (keyed
+    by source file, `by=["__unit"]`) and by streaming foreachBatch
+    sinks."""
     by = list(by)
     prepared = spec.prepare(df, of).select(*by, *spec.internal_cols)
     if salted:

@@ -14,11 +14,13 @@ Three layers:
   windows — built-in aggregates only, so Spark's incremental state
   store handles partial aggregation per micro-batch (the streaming
   analogue of our batch partial/final split).
-- stream_count_distinct_hll: `count-distinct` as a CUSTOM STATEFUL
-  operator via applyInPandasWithState — the group's HLL sketch IS the
-  state (serialized bytes), updated per micro-batch with the same
-  vectorized core as the batch path, emitting a running estimate.
-  Because HLL merge is associative and commutative, late/out-of-order
+- stream_count_distinct_hll / stream_quantiles_kll /
+  stream_sketch_profile: sketches as CUSTOM STATEFUL operators — one
+  grouped-state body (`_stateful_sketch`) where the group's
+  serialized sketch IS the state, driven by the same SketchSpec
+  factories as the batch verbs (mlrsketch.verbs.sketch), so a stream
+  and a batch query over the same rows build the same sketch. Because
+  every sketch merge is associative and commutative, late/out-of-order
   data needs no special-casing: updates commute.
 - sketch_foreach_batch: micro-batch → partial sketch states appended
   to a parquet state directory (same layout as mlrsketch.checkpoint),
@@ -39,18 +41,18 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BinaryType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
-from mlrsketch.agg import merge_states
+from mlrsketch.agg import SketchSpec, merge_states
 from mlrsketch.session import python_task
-from mlrsketch.sketches import HyperLogLog
+from mlrsketch.verbs.sketch import (
+    _DISTINCT_FIELDS,
+    _PROFILE_FIELDS,
+    _hll_spec,
+    _kll_spec,
+    _profile_spec,
+    _quantile_fields,
+)
 
 _STATS1_STREAM_ACCS = {
     "count": F.count,
@@ -104,6 +106,55 @@ def stream_stats1(
     )
 
 
+def _stateful_sketch(
+    sdf: DataFrame,
+    of: str,
+    spec: SketchSpec,
+    by: Sequence[str],
+    fields: Sequence[StructField],
+    timeout: str,
+) -> DataFrame:
+    """Run `spec` as a custom stateful streaming operator over
+    `groupBy(by)` (pandas grouped state, output mode "update").
+
+    State per group = the serialized sketch plus its micro-batch count.
+    Each micro-batch is prepared JVM-side by `spec.prepare` (xxhash64,
+    casts: the batch path's columns), folded into the state sketch with
+    `spec.update`, and the operator emits the group's running answer:
+    by..., the `fields` columns of `spec.finalize`, n_batches. Updates
+    commute, so out-of-order arrival changes nothing — the defining
+    property that makes sketches the right streaming state.
+    """
+    by = list(by)
+    names = [f.name for f in fields]
+    out_schema = StructType(
+        [sdf.schema[c] for c in by] + list(fields) + [StructField("n_batches", LongType())]
+    )
+    state_schema = StructType(
+        [StructField("sketch", BinaryType()), StructField("n_batches", LongType())]
+    )
+    prepared = spec.prepare(sdf, of).select(*by, *spec.internal_cols)
+    internal = spec.internal_cols
+    make, update, finalize, deserialize = spec.make, spec.update, spec.finalize, spec.deserialize
+
+    def step(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            blob, n_batches = state.get
+            sk = deserialize(bytes(blob))
+        else:
+            sk, n_batches = make(), 0
+        for pdf in pdfs:
+            update(sk, pdf[internal])
+        n_batches += 1
+        state.update((sk.serialize(), n_batches))
+        out = finalize(sk)[names].assign(n_batches=n_batches, **dict(zip(by, key)))
+        yield out[by + names + ["n_batches"]]
+
+    return prepared.groupBy(*by).applyInPandasWithState(
+        python_task(step), out_schema, state_schema, "update", timeout
+    )
+
+
 def stream_count_distinct_hll(
     sdf: DataFrame,
     of: str,
@@ -112,58 +163,10 @@ def stream_count_distinct_hll(
     timeout: str = GroupStateTimeout.NoTimeout,
 ) -> DataFrame:
     """`count-distinct -f of -g by` as a custom stateful streaming
-    operator (applyInPandasWithState).
-
-    State per group = one serialized HLL (2^p bytes). Each micro-batch
-    hashes its rows JVM-side (xxhash64, same as the batch path), the
-    Python side unions them into the state sketch, and the operator
-    emits the group's running (estimate, error_bound). Updates commute,
-    so out-of-order arrival changes nothing — the defining property
-    that makes sketches the right streaming state.
-
-    Output mode must be "update".
-    """
-    by = list(by)
-    import numpy as np
-
-    by_fields = [sdf.schema[c] for c in by]
-    out_schema = StructType(
-        by_fields
-        + [
-            StructField("distinct_count_est", DoubleType()),
-            StructField("error_bound", DoubleType()),
-            StructField("n_batches", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("sketch", BinaryType()), StructField("n_batches", LongType())]
-    )
-
-    prepared = sdf.withColumn("__h", F.xxhash64(F.col(of).cast("string"))).select(
-        *by, "__h"
-    )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            blob, n_batches = state.get
-            hll = HyperLogLog.deserialize(bytes(blob))
-        else:
-            hll, n_batches = HyperLogLog(p=p), 0
-        for pdf in pdfs:
-            hll.update_hashes(pdf["__h"].to_numpy(dtype=np.int64))
-        n_batches += 1
-        state.update((hll.serialize(), n_batches))
-        row = dict(zip(by, key))
-        row["distinct_count_est"] = hll.estimate()
-        row["error_bound"] = hll.error_bound()
-        row["n_batches"] = n_batches
-        yield pd.DataFrame([row])
-
-    return prepared.groupBy(*by).applyInPandasWithState(
-        python_task(update), out_schema, state_schema, "update", timeout
-    )
+    operator: the group's HLL (2^p bytes, or the sparse hash list) is
+    the state, emitting the running (distinct_count_est, error_bound,
+    n_batches). Output mode must be "update"."""
+    return _stateful_sketch(sdf, of, _hll_spec(p), by, _DISTINCT_FIELDS, timeout)
 
 
 def stream_quantiles_kll(
@@ -176,50 +179,9 @@ def stream_quantiles_kll(
 ) -> DataFrame:
     """`stats1 -a p50,p90,...` as a custom stateful streaming operator:
     the group's KLL sketch is the state, updated per micro-batch,
-    emitting running quantile estimates. Same mergeable-state shape as
-    stream_count_distinct_hll; output mode "update"."""
-    import numpy as np
-
-    from mlrsketch.sketches import KLL
-
-    by = list(by)
-    by_fields = [sdf.schema[c] for c in by]
-    qcols = [f"p{str(q * 100).rstrip('0').rstrip('.').replace('.', '_')}" for q in qs]
-    out_schema = StructType(
-        by_fields
-        + [StructField(c, DoubleType()) for c in qcols]
-        + [
-            StructField("rank_error_bound", DoubleType()),
-            StructField("n_batches", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("sketch", BinaryType()), StructField("n_batches", LongType())]
-    )
-    prepared = sdf.withColumn("__v", F.col(of).cast("double")).select(*by, "__v")
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            blob, n_batches = state.get
-            sk = KLL.deserialize(bytes(blob))
-        else:
-            sk, n_batches = KLL(k=k), 0
-        for pdf in pdfs:
-            sk.update_batch(pdf["__v"].to_numpy(dtype=np.float64))
-        n_batches += 1
-        state.update((sk.serialize(), n_batches))
-        row = dict(zip(by, key))
-        for q, c in zip(qs, qcols):
-            row[c] = sk.quantile(q)
-        row["rank_error_bound"] = sk.error_bound()
-        row["n_batches"] = n_batches
-        yield pd.DataFrame([row])
-
-    return prepared.groupBy(*by).applyInPandasWithState(
-        python_task(update), out_schema, state_schema, "update", timeout
-    )
+    emitting running quantile estimates, rank_error_bound and
+    n_batches. Output mode "update"."""
+    return _stateful_sketch(sdf, of, _kll_spec(k, qs), by, _quantile_fields(qs), timeout)
 
 
 def sketch_foreach_batch(
@@ -274,91 +236,15 @@ def stream_sketch_profile(
 
     State per group = 2^p (or the sparse list below m/4) + O(kll_k) +
     depth*width*8 bytes — independent of rows seen, the property that
-    makes a 10^12-page continuous ingest viable. Output mode "update".
+    makes a 10^12-page continuous ingest viable. Output mode "update";
+    columns by..., url_distinct_est, url_distinct_bound, len_p50/p90/
+    p99, top_tokens (comma-joined, scalar-friendly), n_batches.
     """
-    import numpy as np
-
-    from mlrsketch.sketches import KLL
-    from mlrsketch.sketches.cms import TopKSketch
-    from mlrsketch.sketches.hashing import hash_strings
-    from mlrsketch.sketches.multi import MultiSketch
-
-    by = list(by)
-    by_fields = [sdf.schema[c] for c in by]
-    out_schema = StructType(
-        by_fields
-        + [
-            StructField("url_distinct_est", DoubleType()),
-            StructField("url_distinct_bound", DoubleType()),
-            StructField("len_p50", DoubleType()),
-            StructField("len_p90", DoubleType()),
-            StructField("len_p99", DoubleType()),
-            StructField("top_tokens", StringType()),  # csv, scalar-friendly
-            StructField("n_batches", LongType()),
-        ]
+    spec = _profile_spec(url_col, text_col, p, kll_k, top_k, cms_depth, cms_width)
+    profile = spec.finalize
+    spec.finalize = lambda sk: profile(sk).assign(
+        top_tokens=lambda d: [",".join(t) for t in d["top_tokens"]]
     )
-    state_schema = StructType(
-        [StructField("sketch", BinaryType()), StructField("n_batches", LongType())]
-    )
-    deserializers = {
-        "hll": HyperLogLog.deserialize,
-        "kll": KLL.deserialize,
-        "topk": TopKSketch.deserialize,
-    }
-
-    prepared = sdf.withColumn(
-        "__h_url", F.xxhash64(F.col(url_col).cast("string"))
-    ).withColumn("__tl", F.length(F.col(text_col)).cast("double")).withColumn(
-        "__text", F.col(text_col).cast("string")
-    ).select(*by, "__h_url", "__tl", "__text")
-
-    def make() -> MultiSketch:
-        return MultiSketch(
-            {
-                "hll": HyperLogLog(p=p),
-                "kll": KLL(k=kll_k),
-                "topk": TopKSketch(
-                    depth=cms_depth, width=cms_width, capacity=4 * top_k + 1024
-                ),
-            }
-        )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        from collections import Counter
-
-        if state.exists:
-            blob, n_batches = state.get
-            sk = MultiSketch.deserialize(bytes(blob), deserializers)
-        else:
-            sk, n_batches = make(), 0
-        for pdf in pdfs:
-            sk.parts["hll"].update_hashes(pdf["__h_url"].to_numpy(dtype=np.int64))
-            tl = pdf["__tl"].to_numpy(dtype=np.float64)
-            tl = tl[~np.isnan(tl)]
-            if tl.size:
-                sk.parts["kll"].update_batch(tl)
-            c: Counter = Counter()
-            for t in pdf["__text"]:
-                if t is not None:
-                    c.update(t.split(" "))
-            if c:
-                vals = np.array(list(c.keys()), dtype=object)
-                cnts = np.fromiter(c.values(), dtype=np.int64, count=len(c))
-                sk.parts["topk"].update_hashed(vals, hash_strings(vals), cnts)
-        n_batches += 1
-        state.update((sk.serialize(), n_batches))
-        row = dict(zip(by, key))
-        row["url_distinct_est"] = sk.parts["hll"].estimate()
-        row["url_distinct_bound"] = sk.parts["hll"].error_bound()
-        row["len_p50"] = sk.parts["kll"].quantile(0.5)
-        row["len_p90"] = sk.parts["kll"].quantile(0.9)
-        row["len_p99"] = sk.parts["kll"].quantile(0.99)
-        row["top_tokens"] = ",".join(t for t, _ in sk.parts["topk"].top(top_k))
-        row["n_batches"] = n_batches
-        yield pd.DataFrame([row])
-
-    return prepared.groupBy(*by).applyInPandasWithState(
-        python_task(update), out_schema, state_schema, "update", timeout
-    )
+    # url_distinct_est/bound and len_p50/p90/p99, then csv tokens
+    fields = _PROFILE_FIELDS[:5] + [StructField("top_tokens", StringType())]
+    return _stateful_sketch(sdf, url_col, spec, by, fields, timeout)

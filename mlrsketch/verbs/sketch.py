@@ -18,10 +18,16 @@ inputs, with the sketch's published error bound attached:
 
 All run the two-level partial/final plan in mlrsketch.agg: per-partition
 Arrow-batched partials, associative merge, single KB-scale shuffle.
+
+The `_*_spec` factories below are the only code that knows how a sketch
+family ingests a batch and reports its result; the batch verbs, the
+stateful streaming operators (mlrsketch.streaming) and resumable
+checkpoints (mlrsketch.checkpoint) all run them.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Sequence
 
 import numpy as np
@@ -38,11 +44,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mlrsketch.agg import STATE_COL, SketchSpec, partial_states, sketch_aggregate
+from mlrsketch.agg import STATE_COL, SketchSpec, sketch_aggregate
 from mlrsketch.session import python_task
 from mlrsketch.sketches import (
     KLL,
     BloomFilter,
+    BootstrapCI,
     HyperLogLog,
     TDigest,
     ThetaSketch,
@@ -51,14 +58,178 @@ from mlrsketch.sketches import (
     theta_intersect,
     theta_union,
 )
+from mlrsketch.sketches.hashing import hash_strings
+from mlrsketch.sketches.multi import MultiSketch
 
 
-def _by_fields(df: DataFrame, by: Sequence[str]):
-    return [df.schema[c] for c in by]
+def _schema(df: DataFrame, by: Sequence[str], fields: Sequence[StructField]) -> StructType:
+    """Output schema of a grouped verb: the group keys' fields, then `fields`."""
+    return StructType([df.schema[c] for c in by] + list(fields))
 
 
 # ---------------------------------------------------------------------------
-# distinct count (HLL++)
+# sketch specs: how each sketch family ingests a batch and reports
+# ---------------------------------------------------------------------------
+
+_DISTINCT_FIELDS = [
+    StructField("distinct_count_est", DoubleType()),
+    StructField("error_bound", DoubleType()),
+]
+_TOP_FIELDS = [StructField("value", StringType()), StructField("count_est", LongType())]
+_PROFILE_FIELDS = [
+    StructField("url_distinct_est", DoubleType()),
+    StructField("url_distinct_bound", DoubleType()),
+    StructField("len_p50", DoubleType()),
+    StructField("len_p90", DoubleType()),
+    StructField("len_p99", DoubleType()),
+    StructField("len_rank_bound", DoubleType()),
+    StructField("top_tokens", ArrayType(StringType())),
+    StructField("top_counts", ArrayType(LongType())),
+]
+
+
+def _update_hashes(sk, pdf: pd.DataFrame) -> None:
+    sk.update_hashes(pdf["__h"].to_numpy(dtype=np.int64))
+
+
+def _distinct_rows(sk) -> pd.DataFrame:
+    return pd.DataFrame({"distinct_count_est": [sk.estimate()], "error_bound": [sk.error_bound()]})
+
+
+def _hll_spec(p: int) -> SketchSpec:
+    return SketchSpec(
+        make=lambda: HyperLogLog(p=p),
+        update=_update_hashes,
+        finalize=_distinct_rows,
+        deserialize=HyperLogLog.deserialize,
+    )
+
+
+def _theta_spec(k: int) -> SketchSpec:
+    return SketchSpec(
+        make=lambda: ThetaSketch(k=k),
+        update=_update_hashes,
+        finalize=_distinct_rows,
+        deserialize=ThetaSketch.deserialize,
+    )
+
+
+def _qcol(q: float) -> str:
+    """Output column of quantile q: 0.5 -> p50, 0.999 -> p99_9."""
+    return f"p{str(q * 100).rstrip('0').rstrip('.').replace('.', '_')}"
+
+
+def _quantile_fields(qs: Sequence[float]) -> list[StructField]:
+    return [StructField(_qcol(q), DoubleType()) for q in qs] + [
+        StructField("rank_error_bound", DoubleType())
+    ]
+
+
+def _quantile_spec(make_sketch, deserialize, qs: Sequence[float], bound_fn) -> SketchSpec:
+    def finalize(sk) -> pd.DataFrame:
+        row = {_qcol(q): sk.quantile(q) for q in qs}
+        row["rank_error_bound"] = bound_fn(sk)
+        return pd.DataFrame([row])
+
+    return SketchSpec(
+        make=make_sketch,
+        update=lambda sk, pdf: sk.update_batch(pdf["__v"].to_numpy(dtype=np.float64)),
+        finalize=finalize,
+        internal_cols=("__v",),
+        prepare=lambda df, of: df.withColumn("__v", F.col(of).cast("double")),
+        deserialize=deserialize,
+    )
+
+
+def _kll_spec(k: int, qs: Sequence[float]) -> SketchSpec:
+    return _quantile_spec(lambda: KLL(k=k), KLL.deserialize, qs, lambda sk: sk.error_bound())
+
+
+def _top_rows(k: int):
+    def finalize(sk: TopKSketch) -> pd.DataFrame:
+        rows = sk.top(k)
+        return pd.DataFrame({"value": [r[0] for r in rows], "count_est": [r[1] for r in rows]})
+
+    return finalize
+
+
+def _add_tokens(sk: TopKSketch, texts, sep: str = " ") -> None:
+    """Fold the `sep`-split tokens of a batch of texts into `sk`; null
+    texts are skipped. Counter over split lists beats pandas
+    explode+value_counts ~2.3x (no 10^6-element object Series
+    materialized), and only the DISTINCT tokens are hashed."""
+    c: Counter = Counter()
+    for t in texts:
+        if t is not None:
+            c.update(t.split(sep))
+    if c:
+        vals = np.array(list(c.keys()), dtype=object)
+        cnts = np.fromiter(c.values(), dtype=np.int64, count=len(c))
+        sk.update_hashed(vals, hash_strings(vals), cnts)
+
+
+def _profile_spec(
+    url_col: str, text_col: str, p: int, kll_k: int, top_k: int, cms_depth: int, cms_width: int
+) -> SketchSpec:
+    """HLL of `url_col`, KLL of text length and top-k tokens of
+    `text_col` as one MultiSketch; finalize emits `_PROFILE_FIELDS`."""
+    deserializers = {
+        "hll": HyperLogLog.deserialize,
+        "kll": KLL.deserialize,
+        "topk": TopKSketch.deserialize,
+    }
+
+    def make() -> MultiSketch:
+        return MultiSketch(
+            {
+                "hll": HyperLogLog(p=p),
+                "kll": KLL(k=kll_k),
+                "topk": TopKSketch(depth=cms_depth, width=cms_width, capacity=4 * top_k + 1024),
+            }
+        )
+
+    def update(sk: MultiSketch, pdf: pd.DataFrame) -> None:
+        sk.parts["hll"].update_hashes(pdf["__h_url"].to_numpy(dtype=np.int64))
+        tl = pdf["__tl"].to_numpy(dtype=np.float64)
+        tl = tl[~np.isnan(tl)]  # null text has no length
+        if tl.size:
+            sk.parts["kll"].update_batch(tl)
+        _add_tokens(sk.parts["topk"], pdf["__text"])
+
+    def finalize(sk: MultiSketch) -> pd.DataFrame:
+        hll, kll, topk = sk.parts["hll"], sk.parts["kll"], sk.parts["topk"]
+        top = topk.top(top_k)
+        return pd.DataFrame(
+            [
+                {
+                    "url_distinct_est": hll.estimate(),
+                    "url_distinct_bound": hll.error_bound(),
+                    "len_p50": kll.quantile(0.5),
+                    "len_p90": kll.quantile(0.9),
+                    "len_p99": kll.quantile(0.99),
+                    "len_rank_bound": kll.error_bound(),
+                    "top_tokens": [t for t, _ in top],
+                    "top_counts": [c for _, c in top],
+                }
+            ]
+        )
+
+    return SketchSpec(
+        make=make,
+        update=update,
+        finalize=finalize,
+        internal_cols=("__h_url", "__tl", "__text"),
+        prepare=lambda df, of: (
+            df.withColumn("__h_url", F.xxhash64(F.col(url_col).cast("string")))
+            .withColumn("__tl", F.length(F.col(text_col)).cast("double"))
+            .withColumn("__text", F.col(text_col).cast("string"))
+        ),
+        deserialize=lambda b: MultiSketch.deserialize(b, deserializers),
+    )
+
+
+# ---------------------------------------------------------------------------
+# distinct count (HLL++, theta / KMV) and theta set operations
 # ---------------------------------------------------------------------------
 
 
@@ -69,44 +240,8 @@ def count_distinct_hll(
 
     Output: by..., distinct_count_est:double, error_bound:double.
     """
-    spec = SketchSpec(
-        make=lambda: HyperLogLog(p=p),
-        update=lambda sk, pdf: sk.update_hashes(pdf["__h"].to_numpy(dtype=np.int64)),
-        finalize=lambda sk: pd.DataFrame(
-            {
-                "distinct_count_est": [sk.estimate()],
-                "error_bound": [sk.error_bound()],
-            }
-        ),
-        deserialize=HyperLogLog.deserialize,
-    )
-    schema = StructType(
-        list(_by_fields(df, by))
-        + [
-            StructField("distinct_count_est", DoubleType()),
-            StructField("error_bound", DoubleType()),
-        ]
-    )
-    return sketch_aggregate(df, of, spec, by=by, out_schema=schema, salted=salted)
-
-
-# ---------------------------------------------------------------------------
-# distinct count + set operations (theta / KMV)
-# ---------------------------------------------------------------------------
-
-
-def _theta_spec(k: int) -> SketchSpec:
-    return SketchSpec(
-        make=lambda: ThetaSketch(k=k),
-        update=lambda sk, pdf: sk.update_hashes(pdf["__h"].to_numpy(dtype=np.int64)),
-        finalize=lambda sk: pd.DataFrame(
-            {
-                "distinct_count_est": [sk.estimate()],
-                "error_bound": [sk.error_bound()],
-            }
-        ),
-        deserialize=ThetaSketch.deserialize,
-    )
+    schema = _schema(df, by, _DISTINCT_FIELDS)
+    return sketch_aggregate(df, of, _hll_spec(p), by=by, out_schema=schema, salted=salted)
 
 
 def count_distinct_theta(
@@ -118,40 +253,8 @@ def count_distinct_theta(
     algebra (see theta_set_ops); error_bound is 0 while the group has
     fewer than k distinct values (exact mode), else ~1/sqrt(k-1).
     """
-    schema = StructType(
-        list(_by_fields(df, by))
-        + [
-            StructField("distinct_count_est", DoubleType()),
-            StructField("error_bound", DoubleType()),
-        ]
-    )
+    schema = _schema(df, by, _DISTINCT_FIELDS)
     return sketch_aggregate(df, of, _theta_spec(k), by=by, out_schema=schema, salted=salted)
-
-
-def theta_sketches_by_group(
-    df: DataFrame, of: str, group_col: str, k: int = 4096
-) -> dict:
-    """One merged ThetaSketch of `of`'s distinct values per value of
-    `group_col`. Distributed two-level plan: per-partition partial
-    states (mapInPandas), one KB-scale shuffle of states, per-group
-    merge; only the k-hash final states reach the driver."""
-    spec = _theta_spec(k)
-    partials = partial_states(df, of, spec, by=[group_col])
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = None
-        for blob in pdf[STATE_COL]:
-            sk = ThetaSketch.deserialize(bytes(blob))
-            merged = sk if merged is None else merged.merge(sk)
-        return pd.DataFrame(
-            {group_col: [pdf[group_col].iloc[0]], STATE_COL: [merged.serialize()]}
-        )
-
-    schema = StructType(
-        [df.schema[group_col], StructField(STATE_COL, BinaryType(), False)]
-    )
-    rows = partials.groupBy(group_col).applyInPandas(python_task(merge_group), schema=schema).collect()
-    return {r[group_col]: ThetaSketch.deserialize(bytes(r[STATE_COL])) for r in rows}
 
 
 def theta_set_ops(
@@ -171,8 +274,16 @@ def theta_set_ops(
     Output (one row): union_est, intersect_est, a_not_b_est,
     b_not_a_est, jaccard_est, error_bound.
     """
+    # the grouped two-level plan over the two groups, finalizing each
+    # group to its merged state; only two O(k) states reach the driver
+    spec = _theta_spec(k)
+    spec.finalize = lambda sk: pd.DataFrame({STATE_COL: [sk.serialize()]})
     pair = df.filter(F.col(group_col).isin([group_a, group_b]))
-    sketches = theta_sketches_by_group(pair, of, group_col, k=k)
+    state_schema = _schema(df, [group_col], [StructField(STATE_COL, BinaryType())])
+    states = sketch_aggregate(pair, of, spec, by=[group_col], out_schema=state_schema)
+    sketches = {
+        r[group_col]: ThetaSketch.deserialize(bytes(r[STATE_COL])) for r in states.collect()
+    }
     ska = sketches.get(group_a, ThetaSketch(k=k))
     skb = sketches.get(group_b, ThetaSketch(k=k))
     un = theta_union(ska, skb)
@@ -199,31 +310,6 @@ def theta_set_ops(
 # ---------------------------------------------------------------------------
 
 
-def _quantile_spec(make_sketch, deserialize, qs: Sequence[float], bound_fn):
-    def finalize(sk) -> pd.DataFrame:
-        row = {f"p{str(q * 100).rstrip('0').rstrip('.').replace('.', '_')}": sk.quantile(q) for q in qs}
-        row["rank_error_bound"] = bound_fn(sk)
-        return pd.DataFrame([row])
-
-    return SketchSpec(
-        make=make_sketch,
-        update=lambda sk, pdf: sk.update_batch(pdf["__v"].to_numpy(dtype=np.float64)),
-        finalize=finalize,
-        internal_cols=("__v",),
-        prepare=lambda df, of: df.withColumn("__v", F.col(of).cast("double")),
-        deserialize=deserialize,
-    )
-
-
-def _quantile_schema(df, by, qs):
-    names = [f"p{str(q * 100).rstrip('0').rstrip('.').replace('.', '_')}" for q in qs]
-    return StructType(
-        list(_by_fields(df, by))
-        + [StructField(n, DoubleType()) for n in names]
-        + [StructField("rank_error_bound", DoubleType())]
-    )
-
-
 def quantiles_tdigest(
     df: DataFrame,
     of: str,
@@ -239,9 +325,8 @@ def quantiles_tdigest(
         qs,
         lambda sk: sk.rank_error_bound(0.5),
     )
-    return sketch_aggregate(
-        df, of, spec, by=by, out_schema=_quantile_schema(df, by, qs), salted=salted
-    )
+    schema = _schema(df, by, _quantile_fields(qs))
+    return sketch_aggregate(df, of, spec, by=by, out_schema=schema, salted=salted)
 
 
 def quantiles_kll(
@@ -254,12 +339,8 @@ def quantiles_kll(
 ) -> DataFrame:
     """Approximate grouped quantiles via KLL (uniform rank error
     2.296/k^0.9723 at 99% confidence: 1.33% at k=200)."""
-    spec = _quantile_spec(
-        lambda: KLL(k=k), KLL.deserialize, qs, lambda sk: sk.error_bound()
-    )
-    return sketch_aggregate(
-        df, of, spec, by=by, out_schema=_quantile_schema(df, by, qs), salted=salted
-    )
+    schema = _schema(df, by, _quantile_fields(qs))
+    return sketch_aggregate(df, of, _kll_spec(k, qs), by=by, out_schema=schema, salted=salted)
 
 
 # ---------------------------------------------------------------------------
@@ -294,26 +375,17 @@ def most_frequent_cms(
             g.to_numpy(dtype=np.int64),
         )
 
-    def finalize(sk: TopKSketch) -> pd.DataFrame:
-        rows = sk.top(k)
-        return pd.DataFrame(
-            {"value": [r[0] for r in rows], "count_est": [r[1] for r in rows]}
-        )
-
     spec = SketchSpec(
         make=lambda: TopKSketch(depth=depth, width=width, capacity=capacity),
         update=update,
-        finalize=finalize,
+        finalize=_top_rows(k),
         internal_cols=("__v", "__h"),
         prepare=lambda df, of: df.withColumn("__v", F.col(of).cast("string")).withColumn(
             "__h", F.xxhash64(F.col("__v"))
         ),
         deserialize=TopKSketch.deserialize,
     )
-    schema = StructType(
-        list(_by_fields(df, by))
-        + [StructField("value", StringType()), StructField("count_est", LongType())]
-    )
+    schema = _schema(df, by, _TOP_FIELDS)
     return sketch_aggregate(df, of, spec, by=by, out_schema=schema, salted=salted)
 
 
@@ -338,47 +410,18 @@ def token_top_k(
     1M docs that round-trip alone costs ~16s vs ~2s for shipping each
     text once (measured, BENCH_scaling). Instead the document string
     crosses Arrow once and tokenization happens inside the batch
-    (pandas str.split/explode, C-level), with only the ~vocab-sized
-    distinct set hashed per batch. Same estimates, same bounds.
+    (`_add_tokens`), with only the ~vocab-sized distinct set hashed per
+    batch. Same estimates, same bounds.
     """
-
-    def update(sk: TopKSketch, pdf: pd.DataFrame) -> None:
-        # Counter over split lists beats pandas explode+value_counts
-        # ~2.3x (no 10^6-element object Series materialized); only the
-        # DISTINCT tokens are hashed.
-        from collections import Counter
-
-        from mlrsketch.sketches.hashing import hash_strings
-
-        c: Counter = Counter()
-        for t in pdf["__text"]:
-            if t is None:  # null/missing text must not fail the job
-                continue
-            c.update(t.split(sep))
-        if not c:
-            return
-        vals = np.array(list(c.keys()), dtype=object)
-        cnts = np.fromiter(c.values(), dtype=np.int64, count=len(c))
-        sk.update_hashed(vals, hash_strings(vals), cnts)
-
-    def finalize(sk: TopKSketch) -> pd.DataFrame:
-        rows = sk.top(k)
-        return pd.DataFrame(
-            {"value": [r[0] for r in rows], "count_est": [r[1] for r in rows]}
-        )
-
     spec = SketchSpec(
         make=lambda: TopKSketch(depth=depth, width=width, capacity=capacity),
-        update=update,
-        finalize=finalize,
+        update=lambda sk, pdf: _add_tokens(sk, pdf["__text"], sep),
+        finalize=_top_rows(k),
         internal_cols=("__text",),
         prepare=lambda df, of: df.withColumn("__text", F.col(of).cast("string")),
         deserialize=TopKSketch.deserialize,
     )
-    schema = StructType(
-        list(_by_fields(df, by))
-        + [StructField("value", StringType()), StructField("count_est", LongType())]
-    )
+    schema = _schema(df, by, _TOP_FIELDS)
     return sketch_aggregate(df, text_col, spec, by=by, out_schema=schema, salted=salted)
 
 
@@ -412,86 +455,8 @@ def sketch_profile(
     Output: by..., url_distinct_est, url_distinct_bound, len_p50/p90/
     p99, len_rank_bound, top_tokens:array<string>, top_counts:array<long>.
     """
-    from mlrsketch.sketches.hashing import hash_strings
-    from mlrsketch.sketches.multi import MultiSketch
-
-    def make() -> MultiSketch:
-        return MultiSketch(
-            {
-                "hll": HyperLogLog(p=p),
-                "kll": KLL(k=kll_k),
-                "topk": TopKSketch(depth=cms_depth, width=cms_width, capacity=4 * top_k + 1024),
-            }
-        )
-
-    def update(sk: MultiSketch, pdf: pd.DataFrame) -> None:
-        from collections import Counter
-
-        sk.parts["hll"].update_hashes(pdf["__h_url"].to_numpy(dtype=np.int64))
-        tl = pdf["__tl"].to_numpy(dtype=np.float64)
-        tl = tl[~np.isnan(tl)]  # null text has no length
-        if tl.size:
-            sk.parts["kll"].update_batch(tl)
-        c: Counter = Counter()
-        for t in pdf["__text"]:
-            if t is None:
-                continue
-            c.update(t.split(" "))
-        if not c:
-            return
-        vals = np.array(list(c.keys()), dtype=object)
-        cnts = np.fromiter(c.values(), dtype=np.int64, count=len(c))
-        sk.parts["topk"].update_hashed(vals, hash_strings(vals), cnts)
-
-    def finalize(sk: MultiSketch) -> pd.DataFrame:
-        hll, kll, topk = sk.parts["hll"], sk.parts["kll"], sk.parts["topk"]
-        top = topk.top(top_k)
-        return pd.DataFrame(
-            [
-                {
-                    "url_distinct_est": hll.estimate(),
-                    "url_distinct_bound": hll.error_bound(),
-                    "len_p50": kll.quantile(0.5),
-                    "len_p90": kll.quantile(0.9),
-                    "len_p99": kll.quantile(0.99),
-                    "len_rank_bound": kll.error_bound(),
-                    "top_tokens": [t for t, _ in top],
-                    "top_counts": [c for _, c in top],
-                }
-            ]
-        )
-
-    deserializers = {
-        "hll": HyperLogLog.deserialize,
-        "kll": KLL.deserialize,
-        "topk": TopKSketch.deserialize,
-    }
-
-    spec = SketchSpec(
-        make=make,
-        update=update,
-        finalize=finalize,
-        internal_cols=("__h_url", "__tl", "__text"),
-        prepare=lambda df, of: (
-            df.withColumn("__h_url", F.xxhash64(F.col(url_col).cast("string")))
-            .withColumn("__tl", F.length(F.col(text_col)).cast("double"))
-            .withColumn("__text", F.col(text_col).cast("string"))
-        ),
-        deserialize=lambda b: MultiSketch.deserialize(b, deserializers),
-    )
-    schema = StructType(
-        list(_by_fields(df, by))
-        + [
-            StructField("url_distinct_est", DoubleType()),
-            StructField("url_distinct_bound", DoubleType()),
-            StructField("len_p50", DoubleType()),
-            StructField("len_p90", DoubleType()),
-            StructField("len_p99", DoubleType()),
-            StructField("len_rank_bound", DoubleType()),
-            StructField("top_tokens", ArrayType(StringType())),
-            StructField("top_counts", ArrayType(LongType())),
-        ]
-    )
+    spec = _profile_spec(url_col, text_col, p, kll_k, top_k, cms_depth, cms_width)
+    schema = _schema(df, by, _PROFILE_FIELDS)
     return sketch_aggregate(df, url_col, spec, by=by, out_schema=schema, salted=salted)
 
 
@@ -599,33 +564,23 @@ def bootstrap_ci_sketch(
     (applyInPandas index resampling) and exact.bootstrap_ci_hash (the
     engine-portable oracle variant) are the test-scale references it is
     validated against (tests/test_sketch_verbs_spark.py)."""
-    from mlrsketch.sketches.bootci import BootstrapCI
 
     def prepare(d: DataFrame, of: str) -> DataFrame:
         return d.withColumn(
             "__h", F.xxhash64(F.coalesce(F.col(key).cast("string"), F.lit("")))
         ).withColumn("__v", F.col(of).cast("double"))
 
+    names = (f"{value}_mean", f"{value}_ci_lo", f"{value}_ci_hi")
     spec = SketchSpec(
         make=lambda: BootstrapCI(n_boot=n_boot, lo=lo, hi=hi, seed=seed),
         update=lambda sk, pdf: sk.update(
             pdf["__h"].to_numpy(dtype=np.int64),
             pdf["__v"].to_numpy(dtype=np.float64),
         ),
-        finalize=lambda sk: pd.DataFrame(
-            [dict(zip((f"{value}_mean", f"{value}_ci_lo", f"{value}_ci_hi"),
-                      sk.result()))]
-        ),
+        finalize=lambda sk: pd.DataFrame([dict(zip(names, sk.result()))]),
         internal_cols=("__h", "__v"),
         prepare=prepare,
         deserialize=BootstrapCI.deserialize,
     )
-    schema = StructType(
-        list(_by_fields(df, by))
-        + [
-            StructField(f"{value}_mean", DoubleType()),
-            StructField(f"{value}_ci_lo", DoubleType()),
-            StructField(f"{value}_ci_hi", DoubleType()),
-        ]
-    )
+    schema = _schema(df, by, [StructField(n, DoubleType()) for n in names])
     return sketch_aggregate(df, value, spec, by=by, out_schema=schema, salted=salted)

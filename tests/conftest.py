@@ -1,11 +1,15 @@
 from __future__ import annotations
 
+import pathlib
 import sys
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, ahead of any installed or
+# other checkout's mlrsketch
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 
 @pytest.fixture(scope="session")

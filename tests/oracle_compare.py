@@ -10,6 +10,7 @@ pytest.
 from __future__ import annotations
 
 import math
+import os
 import sys
 from datetime import date, datetime
 
@@ -96,7 +97,7 @@ def compare(spark, sf_dir: str, names: list[str] | None = None, verbose: bool = 
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from mlrsketch.session import get_spark
 
     spark = get_spark(cores=16, shuffle_partitions=16)

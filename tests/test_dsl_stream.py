@@ -1,10 +1,6 @@
 """Distributed full-DSL execution (mlrsketch.dsl.stream.put_stream):
 per-group applyInPandas stream with oosvar state confined to the group."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from mlrsketch.dsl import filter_stream, put_stream

@@ -4,10 +4,6 @@ standalone `python tests/oracle_compare.py` runs the full sf0.01 gate)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from tests.oracle_compare import compare  # noqa: E402
 
 

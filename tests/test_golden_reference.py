@@ -15,12 +15,9 @@ absent.
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from mlrsketch.verbs import exact as ev  # noqa: E402
 

@@ -25,7 +25,6 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
 sys.path.insert(0, os.path.dirname(__file__))
 
 from mlrsketch.mlrcli import Unsupported, run_case  # noqa: E402

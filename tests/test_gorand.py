@@ -2,10 +2,6 @@
 outputs — these constants appear throughout Go documentation, blog
 posts, and playground examples for rand.New(rand.NewSource(seed))."""
 
-import sys
-
-sys.path.insert(0, "/root/repo/tests")
-
 from mlrsketch.gorand import GoRand
 
 

@@ -3,11 +3,7 @@ gate covers the rest)."""
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from mlrsketch.verbs import exact as ev  # noqa: E402
 

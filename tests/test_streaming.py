@@ -6,12 +6,9 @@ answer on the same data (file-source stream, Trigger.AvailableNow)."""
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from mlrsketch import streaming as st  # noqa: E402
 from mlrsketch.agg import SketchSpec, partial_states  # noqa: E402
@@ -326,3 +323,24 @@ def test_stream_sketch_profile_out_of_order_batches(spark, tmp_path_factory):
         assert (fr["len_p50"], fr["len_p90"], fr["len_p99"]) == (
             br["len_p50"], br["len_p90"], br["len_p99"]), lang
         assert fr["top_tokens"].split(",") == br["top_tokens"], lang
+
+
+def test_stream_hll_null_and_void_groups_stay_apart(spark, tmp_path):
+    """One micro-batch holding a null and a "" event_type gives two
+    groups (Miller's absent vs void), each equal to the batch
+    count_distinct_hll answer for that group."""
+    from mlrsketch.verbs import sketch as sv
+
+    path = str(tmp_path / "nullvoid")
+    rows = [(None, i) for i in range(30)] + [("", i) for i in range(20, 70)] + [("x", 1)]
+    batch = spark.createDataFrame(rows, "event_type string, event_id long")
+    batch.coalesce(1).write.parquet(path)
+    sdf = spark.readStream.schema(batch.schema).parquet(path)
+    out = st.stream_count_distinct_hll(sdf, of="event_id", by=["event_type"], p=12)
+    _run_available_now(out, "t_nullvoid", "update")
+    got = {r["event_type"]: (r["distinct_count_est"], r["error_bound"], r["n_batches"])
+           for r in spark.sql("select * from t_nullvoid").collect()}
+    exp = {r["event_type"]: (r["distinct_count_est"], r["error_bound"], 1)
+           for r in sv.count_distinct_hll(batch, "event_id", ["event_type"], p=12).collect()}
+    assert got == exp
+    assert got[None][0] == 30 and got[""][0] == 50

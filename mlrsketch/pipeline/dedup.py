@@ -92,11 +92,14 @@ def minhash_signature(
     min-wise permutation family (Broder 1997): Pr[sig_a[j] ==
     sig_b[j]] = Jaccard(a, b).
 
-    Plan shape (the 100 TB-relevant part): each token is hashed to
-    int64 exactly ONCE and a shingle's base hash is xxhash64 over the
-    slice of token hashes — the n-gram STRINGS are never materialized
-    (at web scale that's the difference between allocating ~n_tokens×
-    shingle_n bytes of transient strings per document and none). The
+    Plan shape (the 100 TB-relevant part): a shingle's base hash is
+    xxhash64 over the slice of token hashes — the n-gram STRINGS are
+    never materialized (at web scale that's the difference between
+    allocating ~n_tokens×shingle_n bytes of transient strings per
+    document and none). Tokens are NOT hashed once each, though: the
+    per-shingle lambda captures the whole ``th = transform(split(text),
+    xxhash64)`` expression, which Catalyst re-evaluates per shingle, so
+    every token array is re-split and re-hashed once per shingle. The
     base hashes are exploded to (id, h) pairs and the n permutation
     minima are n ``min(xxhash64(h, j))`` aggregates in a single
     whole-stage-codegen'd hash aggregation. Because a document's

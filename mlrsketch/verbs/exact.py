@@ -17,15 +17,20 @@ semantics where they differ from SQL defaults:
 All of these are shuffle-aware: grouped aggregations are single-shuffle
 hash aggregations with map-side partial aggregation (Catalyst supplies
 partial_/final split automatically); window verbs shuffle once on the
-partition keys. Nothing here collects to the driver.
+partition keys. The ungrouped order-dependent verbs collect one small
+row per range partition to the driver (``_pid_prefix``); no verb
+collects rows.
 """
 
 from __future__ import annotations
 
+import itertools
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType, StringType,
+                               StructField, StructType)
 
 from mlrsketch.session import python_task
 
@@ -36,6 +41,73 @@ from mlrsketch.session import python_task
 
 def _cols(c: str | Sequence[str]) -> list[str]:
     return [c] if isinstance(c, str) else list(c)
+
+
+# ---------------------------------------------------------------------------
+# partition carries: the ungrouped order-dependent verbs (fraction -c,
+# cat -n, rank, fill-down, step, stats1 -s) range-partition the rows,
+# compute within each partition, and add back what earlier partitions
+# contribute. _pid_prefix folds that carry on the driver; _lookup is the
+# one way a driver-computed value gets back into the rows.
+# ---------------------------------------------------------------------------
+
+# A literal map inlines every entry into the Catalyst plan at each use,
+# so building the plan grows with the entry count (the blowup class
+# dsl/compiler.py:85 warns about); a broadcast left-join against the
+# table keeps the plan bounded but adds ~0.3 s of broadcast to the run.
+# percentiles_rank over N (partition, group) entries, local[4], build +
+# run: 108 -> 0.5 + 0.4 s literal vs 0.4 + 0.7 s joined; 308 -> 0.7 +
+# 0.5 vs 0.4 + 0.7 s; 1,008 -> 1.6 + 0.5 vs 0.5 + 0.9 s; 3,008 -> 3.0 +
+# 0.6 vs 0.6 + 0.8 s (BASELINE.md). Past the crossover, a lookup joins.
+_LOOKUP_LITERAL_MAX = 300
+_lookup_ids = itertools.count()
+
+
+def _pid_prefix(tagged: DataFrame, aggs: Sequence[Column], fold, init):
+    """Exclusive prefix of a per-partition aggregate, folded on the driver.
+
+    Runs ONE ``tagged.groupBy("__pid").agg(*aggs).collect()`` and walks
+    the rows in ascending ``__pid`` order with ``acc = fold(acc, row)``
+    from ``init``. Returns ``({pid: acc before that pid}, final acc)``.
+    The fold stays on the driver: a ``Window.orderBy("__pid")`` has no
+    partition keys and would funnel every row through one task."""
+    carries, acc = {}, init
+    rows = tagged.groupBy("__pid").agg(*aggs).collect()
+    for r in sorted(rows, key=lambda r: r["__pid"]):
+        carries[r["__pid"]] = acc
+        acc = fold(acc, r)
+    return carries, acc
+
+
+def _lookup(df: DataFrame, key: Column, table: dict, dtype) -> tuple[DataFrame, Column]:
+    """``(df, table[key])``: a driver-built table read back per row, null
+    off the table. Up to _LOOKUP_LITERAL_MAX entries it is a literal map
+    of ``dtype`` values (an empty table is a typed null); past it, ``df``
+    gains a broadcast left-join against the table on ``key``, and the
+    returned column reads the joined value. Join columns are named
+    ``__lk<n>``; callers select their output columns at the end."""
+    if not table:
+        return df, F.lit(None).cast(dtype)
+    if len(table) <= _LOOKUP_LITERAL_MAX:
+        # one cast of the whole value array: a cast per entry doubles
+        # the expressions Catalyst walks while building the plan
+        keys = F.array(*[F.lit(k) for k in table])
+        values = F.array(*[F.lit(v) for v in table.values()]).cast(ArrayType(dtype))
+        return df, F.map_from_arrays(keys, values)[key]
+    name = f"__lk{next(_lookup_ids)}"
+    tagged = df.withColumn(name, key)
+    schema = StructType([
+        StructField(name, tagged.schema[name].dataType), StructField(name + "v", dtype)
+    ])
+    rows = df.sparkSession.createDataFrame(list(table.items()), schema)
+    return tagged.join(F.broadcast(rows), name, "left"), F.col(name + "v")
+
+
+def _keep(out: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """``out`` without its internal (``__pid``, ``__lk<n>``, ...) columns:
+    only ``cols``, in ``out``'s column order."""
+    cols = set(cols)
+    return out.select(*[c for c in out.columns if c in cols])
 
 
 def _percentile_exact(col: str, p: float, interpolated: bool) -> Column:
@@ -615,10 +687,9 @@ def fraction(
         # ungrouped -c: an empty-partition window funnels EVERY row
         # through one task — fatal at 100x. Range-partition on the
         # stream order, per-partition prefix sums, then add each
-        # partition's carry (a tiny collected map, broadcast back) —
-        # the same shape as _step_ungrouped's rsum. One range exchange,
-        # no SinglePartition stage; the global denominator falls out of
-        # the same per-partition sums for free.
+        # partition's carry (_pid_prefix + _lookup). One range exchange,
+        # no SinglePartition stage; the global denominator is the fold's
+        # grand total.
         order_cols = _cols(order_by)
         ordered = df.repartitionByRange(
             *[F.col(c) for c in order_cols]
@@ -626,30 +697,19 @@ def fraction(
         # pin the (sampling-nondeterministic) range placement before the
         # two dependent subplans — see global_row_number
         ordered = ordered.localCheckpoint(eager=True)
-        sums = {
-            r["__pid"]: float(r["s"] or 0.0)
-            for r in ordered.groupBy("__pid").agg(F.sum(value).alias("s")).collect()
-        }
-        carries, acc = {}, 0.0
-        for pid in sorted(sums):
-            carries[pid] = acc
-            acc += sums[pid]
-        carry = (
-            F.create_map(*[F.lit(x) for kv in carries.items() for x in kv])
-            if carries
-            else F.create_map()
+        carries, total = _pid_prefix(
+            ordered, [F.sum(value).alias("s")], lambda acc, r: acc + float(r["s"] or 0.0), 0.0
         )
+        ordered, carry = _lookup(ordered, F.col("__pid"), carries, DoubleType())
         w_in = (
             Window.partitionBy("__pid")
             .orderBy(*[F.col(c) for c in order_cols])
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        num = F.sum(value).over(w_in) + F.coalesce(
-            carry[F.col("__pid")], F.lit(0.0)
-        )
-        return ordered.withColumn(
-            f"{value}_cumulative_{suffix}", F.when(present, scale * num / F.lit(acc))
-        ).drop("__pid")
+        num = F.sum(value).over(w_in) + F.coalesce(carry, F.lit(0.0))
+        name = f"{value}_cumulative_{suffix}"
+        out = ordered.withColumn(name, F.when(present, scale * num / F.lit(total)))
+        return _keep(out, [*df.columns, name])
 
     if by:
         denom = F.sum(value).over(Window.partitionBy(*by))
@@ -870,8 +930,8 @@ def global_row_number(
     at 100 TB. Classic two-pass instead: range-partition on the order
     keys (so partition p holds a contiguous key range), number rows
     within each partition, then add each partition's start offset
-    (per-partition counts are a tiny collected map, broadcast back).
-    One range-exchange, no single-task stage.
+    (the exclusive prefix of per-partition counts: _pid_prefix, read
+    back with _lookup). One range-exchange, no single-task stage.
     """
     order_by = _cols(order_by)
     ordered = df.repartitionByRange(
@@ -897,25 +957,18 @@ def global_row_number(
     # only the range exchange.
     tagged = ordered.withColumn("__mid", F.monotonically_increasing_id())
     pid_of = F.shiftright("__mid", 33).cast("int")
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in tagged.groupBy(pid_of.alias("__pid"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    ) if offsets else F.create_map()
+    offsets, _ = _pid_prefix(
+        tagged.withColumn("__pid", pid_of),
+        [F.count(F.lit(1)).alias("cnt")],
+        lambda acc, r: acc + r["cnt"],
+        0,
+    )
+    tagged, off = _lookup(tagged, pid_of, offsets, LongType())
     local = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)).cast("long")
     numbered = tagged.withColumn(
-        out, local + 1 + F.coalesce(off[pid_of], F.lit(0))
-    ).withColumn("__pid", pid_of).drop("__mid")
-    return numbered if keep_pid else numbered.drop("__pid")
+        out, local + 1 + F.coalesce(off, F.lit(0))
+    ).withColumn("__pid", pid_of)
+    return _keep(numbered, [*df.columns, out, *(["__pid"] if keep_pid else [])])
 
 
 def percentiles_rank(
@@ -972,29 +1025,22 @@ def percentiles_rank(
         .agg(F.count(F.lit(1)).alias("__c"), F.min("__mid").alias("__m0"))
         .collect()
     )
-    per_group: dict[str, list] = {}
-    for r in pg:
-        per_group.setdefault(r["__g"], []).append(r)
     # adj(pid, g): global in-group rank = partition-local row index
     # + adj, where adj = (rows of g in earlier partitions) - (g's start
-    # index within this partition)
-    adj_entries: list[tuple[str, int]] = []
+    # index within this partition); the prefix runs per group, so it is
+    # folded here rather than by _pid_prefix
+    adj: dict[str, int] = {}
     n_of: dict[str, int] = {}
-    for g, rows in per_group.items():
-        rows.sort(key=lambda r: r["__pid"])
-        run = 0
-        for r in rows:
-            start_local = r["__m0"] & ((1 << 33) - 1)
-            adj_entries.append((f"{r['__pid']}|{g}", run - start_local))
-            run += r["__c"]
-        n_of[g] = run
-    adj = F.create_map(
-        *[F.lit(x) for kv in adj_entries for x in kv]
-    ) if adj_entries else F.create_map()
-    local = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)).cast("long")
-    ranked = tagged.withColumn(
-        "__rk", local + adj[F.concat(pid_of.cast("string"), F.lit("|"), gkey)]
+    for r in sorted(pg, key=lambda r: r["__pid"]):
+        g = r["__g"]
+        run = n_of.get(g, 0)
+        adj[f"{r['__pid']}|{g}"] = run - (r["__m0"] & ((1 << 33) - 1))
+        n_of[g] = run + r["__c"]
+    tagged, adj_of = _lookup(
+        tagged, F.concat(pid_of.cast("string"), F.lit("|"), gkey), adj, LongType()
     )
+    local = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)).cast("long")
+    ranked = tagged.withColumn("__rk", local + adj_of)
     # needed 0-based ranks per group with interpolation weights
     need_rows = []
     for g, n in n_of.items():
@@ -1012,9 +1058,6 @@ def percentiles_rank(
                 idx = min(max(int((p / 100.0) * n), 0), n - 1)
                 need_rows.append((g, idx, p, 1.0))
     spark = df.sparkSession
-    from pyspark.sql.types import (DoubleType, LongType, StringType,
-                                   StructField, StructType)
-
     dedup_need = {(g, rk, float(p)): w for g, rk, p, w in need_rows}
     need = spark.createDataFrame(
         [(g, int(rk), p, float(w)) for (g, rk, p), w in dedup_need.items()],
@@ -1022,6 +1065,9 @@ def percentiles_rank(
             StructField("__g", StringType()), StructField("__rk", LongType()),
             StructField("__p", DoubleType()), StructField("__w", DoubleType()),
         ]),
+        # every value above already has its field's type; the per-row
+        # check costs ~15 µs a row (~0.8 s at 20,000 groups)
+        verifySchema=False,
     )
     hits = ranked.withColumn("__g", gkey).join(
         F.broadcast(need), ["__g", "__rk"]
@@ -1032,8 +1078,10 @@ def percentiles_rank(
         )
         for p in ps
     ]
-    out = hits.groupBy(*by).agg(*aggs) if by else hits.groupBy().agg(*aggs)
-    return out
+    out = hits.groupBy(*by).agg(*aggs)
+    # a global aggregate over no values still yields one all-null row;
+    # like a group without values, it emits nothing
+    return out if by or n_of else out.limit(0)
 
 
 def cat_numbered(df: DataFrame, by: Sequence[str] = (), order_by: Sequence[str] = ()) -> DataFrame:
@@ -1102,10 +1150,9 @@ def fill_down(
     Grouped: one hash-partitioned window. Ungrouped: range-partition on
     the order key, fill within each partition, and resolve the
     cross-partition carry (the last rememberable value of every
-    PREVIOUS partition) from a tiny per-partition aggregate collected
-    to the driver — the two-pass pattern of global_row_number, instead
-    of an empty-partition window that serializes all rows through one
-    task."""
+    PREVIOUS partition) with _pid_prefix (a last-non-null fold over one
+    tiny row per partition) and _lookup, instead of an empty-partition
+    window that serializes all rows through one task."""
     fields = _cols(fields)
     order_by = _cols(order_by)
     str_cols = {c for c, t in df.dtypes if t == "string"}
@@ -1143,28 +1190,12 @@ def fill_down(
     # per-partition last rememberable value of each field, in order:
     # max_by(f, ord-when-rememberable) — one tiny row per partition
     lastkey = F.struct(*[F.col(c) for c in order_by])
-    tails = (
-        ordered.groupBy("__pid")
-        .agg(
-            *[
-                F.max_by(
-                    memcol(f), F.when(memcol(f).isNotNull(), lastkey)
-                ).alias(f)
-                for f in fields
-            ]
-        )
-        .collect()
+    carries, _ = _pid_prefix(
+        ordered,
+        [F.max_by(memcol(f), F.when(memcol(f).isNotNull(), lastkey)).alias(f) for f in fields],
+        lambda acc, r: {f: acc[f] if r[f] is None else r[f] for f in fields},
+        dict.fromkeys(fields),
     )
-    by_pid = {r["__pid"]: r for r in tails}
-    carries: dict[str, dict[int, object]] = {f: {} for f in fields}
-    running = {f: None for f in fields}
-    for pid in sorted(by_pid):
-        for f in fields:
-            carries[f][pid] = running[f]
-        for f in fields:
-            v = by_pid[pid][f]
-            if v is not None:
-                running[f] = v
     w_in = (
         Window.partitionBy("__pid")
         .orderBy(*[F.col(c) for c in order_by])
@@ -1172,16 +1203,11 @@ def fill_down(
     )
     updates = {}
     for f in fields:
-        carry = None
-        for pid, v in carries[f].items():
-            if v is None:
-                continue
-            clause = F.when(F.col("__pid") == pid, F.lit(v))
-            carry = clause if carry is None else carry.when(F.col("__pid") == pid, F.lit(v))
+        table = {pid: acc[f] for pid, acc in carries.items() if acc[f] is not None}
+        ordered, carry = _lookup(ordered, F.col("__pid"), table, df.schema[f].dataType)
         filled = F.last(memcol(f), ignorenulls=True).over(w_in)
-        carryv = F.coalesce(filled, carry) if carry is not None else filled
-        updates[f] = fill_expr(f, carryv)
-    return ordered.withColumns(updates).drop("__pid")
+        updates[f] = fill_expr(f, F.coalesce(filled, carry))
+    return _keep(ordered.withColumns(updates), df.columns)
 
 
 def clean_whitespace(df: DataFrame, fields: Sequence[str] | None = None) -> DataFrame:
@@ -1628,10 +1654,11 @@ def step(
     window, so Catalyst plans a single Window exec. Ungrouped: an
     empty-partition window would single-task every row, so the work is
     decomposed scale-safely instead — bounded lookback (shift/delta/
-    ratio/lead) becomes an equi-join on the distributed global row
-    number; running aggregates (rsum/rprod/counter/ewma) run
-    per-range-partition with the tiny cross-partition carries combined
-    on the driver (global_row_number's two-pass pattern).
+    ratio/lead) is an in-partition window over the distributed global
+    row number plus a ``_lookup`` of the partition-edge rows; running
+    aggregates (rsum/rprod/counter/ewma) run per-range-partition with
+    the tiny cross-partition carries folded on the driver
+    (``_pid_prefix``, read back with ``_lookup``).
     """
     by = _cols(by)
     values = _cols(values)
@@ -1736,14 +1763,6 @@ def _parse_stepper(s: str) -> tuple[str, int]:
     return s, 1
 
 
-# literal boundary maps inflate the Catalyst plan by len(edge_rows)
-# entries PER USE SITE (the plan-size blowup class dsl/compiler.py:85
-# warns about); past this budget _step_ungrouped's boundary lookup
-# becomes a tiny broadcast left-join per (offset, field) instead —
-# same values, bounded plan.
-_EDGE_LITERAL_MAX = 10_000
-
-
 def _step_ungrouped(
     df: DataFrame,
     steppers: Sequence[str],
@@ -1756,7 +1775,7 @@ def _step_ungrouped(
     """Ungrouped steppers without a single-task window (see step()).
 
     Implements the same het event model as the grouped path: gates come
-    from the ingested record (a +f_max presence join), prev-caches lag
+    from the ingested record (a +f_max presence lookup), prev-caches lag
     over the gated value sequence, and running state skips gated-off
     events. slwin composes separately via slwin() (the caller handles
     it); a het input mixing slwin with forward steppers ungrouped would
@@ -1768,21 +1787,22 @@ def _step_ungrouped(
     values = _cols(values)
     steppers = _cols(steppers)
     numbered = global_row_number(df, _cols(order_by), out="__n", keep_pid=True)
+    w_ord = Window.partitionBy("__pid").orderBy("__n")
+    w_all = Window.partitionBy("__pid")
 
     # ---- het gate: presence of each field on the record f_max ahead
     # (the 'ingested' record of this center's event); tail rows with no
     # record f_max ahead gate on their own presence (drain events)
     if f_max:
         # the gate is a LEAD of presence flags by f_max — in-partition
-        # window lead plus a broadcast boundary map of the first f_max
-        # rows per partition (same no-exchange shape as the lag path
-        # below; this used to be a full equi-join on __n). n_total (the
-        # global-tail gate bound) rides along as the per-partition max
-        # __n on the same edge rows — no separate count() job.
-        w_g = Window.partitionBy("__pid").orderBy("__n")
+        # window lead plus a _lookup of the first f_max rows per
+        # partition, keyed by global __n (same no-exchange shape as the
+        # lag path below). n_total (the global-tail gate bound) rides
+        # along as the per-partition max __n on the same edge rows — no
+        # separate count() job.
         edge_gate = (
-            numbered.withColumn("__fpos", F.row_number().over(w_g))
-            .withColumn("__pmax", F.max("__n").over(Window.partitionBy("__pid")))
+            numbered.withColumn("__fpos", F.row_number().over(w_ord))
+            .withColumn("__pmax", F.max("__n").over(w_all))
             .filter(F.col("__fpos") <= f_max)
             .select(
                 "__n", "__pmax",
@@ -1792,20 +1812,18 @@ def _step_ungrouped(
         )
         n_total = max((r["__pmax"] for r in edge_gate), default=0)
         vbase = numbered.withColumn(
-            "__gpos", F.row_number().over(w_g)
-        ).withColumn("__gsz", F.count(F.lit(1)).over(Window.partitionBy("__pid")))
+            "__gpos", F.row_number().over(w_ord)
+        ).withColumn("__gsz", F.count(F.lit(1)).over(w_all))
         gates = {}
         for f in values:
-            pairs = [
-                x
-                for r in edge_gate
-                for x in (F.lit(r["__n"]), F.lit(r[f"__p_{f}"]))
-            ]
-            bmap = F.create_map(*pairs) if pairs else F.create_map()
+            vbase, ahead = _lookup(
+                vbase, F.col("__n") + f_max,
+                {r["__n"]: r[f"__p_{f}"] for r in edge_gate}, BooleanType(),
+            )
             gp = F.when(
                 F.col("__gpos") <= F.col("__gsz") - f_max,
-                F.lead(F.col(f).isNotNull(), f_max).over(w_g),
-            ).otherwise(bmap[F.col("__n") + f_max])
+                F.lead(F.col(f).isNotNull(), f_max).over(w_ord),
+            ).otherwise(ahead)
             gates[f] = F.when(
                 F.col("__n") + f_max <= F.lit(n_total),
                 F.coalesce(gp, F.lit(False)),
@@ -1824,10 +1842,9 @@ def _step_ungrouped(
     # than k from the partition edge; only the ≤k edge rows per
     # partition need a value from a neighboring partition, and those
     # source rows (the last/first k of each partition) are a tiny
-    # driver-collected broadcast map keyed by global __n. The previous
-    # implementation equi-joined on __n, which hash-shuffled the FULL
-    # payload twice per distinct offset — the dominant exchange of this
-    # verb at scale.
+    # driver-collected table keyed by global __n, read back with
+    # _lookup. An equi-join on __n would hash-shuffle the FULL payload
+    # twice per distinct offset.
     lag_offsets: set[int] = set()
     lead_offsets: set[int] = set()
     for s in steppers:
@@ -1837,127 +1854,62 @@ def _step_ungrouped(
         elif base_name == "shift_lead":
             lead_offsets.add(k)
     out = vbase
-    w_ord = Window.partitionBy("__pid").orderBy("__n")
     if lag_offsets or lead_offsets:
         out = out.withColumn("__pos", F.row_number().over(w_ord)).withColumn(
-            "__psz", F.count(F.lit(1)).over(Window.partitionBy("__pid"))
+            "__psz", F.count(F.lit(1)).over(w_all)
         )
-
-    def _edge_map(rows: list, col: str, dtype) -> Column:
-        pairs = []
-        for r in rows:
-            pairs.append(F.lit(r["__n"]))
-            pairs.append(F.lit(r[col]).cast(dtype))
-        return F.create_map(*pairs) if pairs else F.create_map()
-
-    def _edge_join(rows: list, col: str, dtype, k: int, bname: str):
-        """Broadcast-join fallback: left-join edge values keyed at the
-        TARGET row's __n (edge __n shifted by k) into column bname."""
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        nonlocal out
-        bdf = df.sparkSession.createDataFrame(
-            [(r["__n"] + k, r[col]) for r in rows],
-            StructType([StructField("__bn", LongType()), StructField(bname, dtype)]),
-        )
-        out = out.join(F.broadcast(bdf), out["__n"] == bdf["__bn"], "left").drop("__bn")
-
     if lag_offsets:
-        max_lag = max(lag_offsets)
         # prev-caches see the GATED sequence (clearPrevValue pushes nil)
         edge_tail = (
             vbase.withColumn(
-                "__rpos",
-                F.row_number().over(
-                    Window.partitionBy("__pid").orderBy(F.col("__n").desc())
-                ),
+                "__rpos", F.row_number().over(w_all.orderBy(F.col("__n").desc()))
             )
-            .filter(F.col("__rpos") <= max_lag)
+            .filter(F.col("__rpos") <= max(lag_offsets))
             .select("__n", *[f"__v_{f}" for f in values])
             .collect()
         )
-        use_join = len(edge_tail) > _EDGE_LITERAL_MAX
-        # one map per FIELD, shared across offsets (not one per use)
-        lag_maps = {} if use_join else {
-            f: _edge_map(edge_tail, f"__v_{f}", df.schema[f].dataType)
-            for f in values
-        }
         for k in sorted(lag_offsets):
             for f in values:
-                name = f"__lag{k}_{f}"
-                if use_join:
-                    _edge_join(edge_tail, f"__v_{f}", df.schema[f].dataType,
-                               k, name + "_b")
-                    boundary = F.col(name + "_b")
-                else:
-                    boundary = lag_maps[f][F.col("__n") - k]
+                out, boundary = _lookup(
+                    out, F.col("__n") - k,
+                    {r["__n"]: r[f"__v_{f}"] for r in edge_tail}, df.schema[f].dataType,
+                )
                 out = out.withColumn(
-                    name,
+                    f"__lag{k}_{f}",
                     F.when(
                         F.col("__pos") > k,
                         F.lag(f"__v_{f}", k).over(w_ord),
                     ).otherwise(boundary),
                 )
     if lead_offsets:
-        max_lead = max(lead_offsets)
         # shift_lead reads the raw next-record value (step.go:1087-1106)
         edge_head = (
-            numbered.withColumn(
-                "__fpos", F.row_number().over(w_ord)
-            )
-            .filter(F.col("__fpos") <= max_lead)
+            numbered.withColumn("__fpos", F.row_number().over(w_ord))
+            .filter(F.col("__fpos") <= max(lead_offsets))
             .select("__n", *values)
             .collect()
         )
-        use_join = len(edge_head) > _EDGE_LITERAL_MAX
-        lead_maps = {} if use_join else {
-            f: _edge_map(edge_head, f, df.schema[f].dataType) for f in values
-        }
         for k in sorted(lead_offsets):
             for f in values:
-                name = f"__lead{k}_{f}"
-                if use_join:
-                    _edge_join(edge_head, f, df.schema[f].dataType, -k, name + "_b")
-                    boundary = F.col(name + "_b")
-                else:
-                    boundary = lead_maps[f][F.col("__n") + k]
+                out, boundary = _lookup(
+                    out, F.col("__n") + k,
+                    {r["__n"]: r[f] for r in edge_head}, df.schema[f].dataType,
+                )
                 out = out.withColumn(
-                    name,
+                    f"__lead{k}_{f}",
                     F.when(
                         F.col("__pos") <= F.col("__psz") - k,
                         F.lead(f, k).over(w_ord),
                     ).otherwise(boundary),
                 )
 
-    # ---- running aggregates: per-partition prefix + driver-combined
-    # carries (one tiny exports row per range partition)
-    need_run = [s for s in steppers if s in ("rsum", "rprod", "counter")]
-    need_first = "from-first" in steppers
-    w_pid = Window.partitionBy("__pid").orderBy("__n")
-    run_pid = w_pid.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    exports = None
-    carries_needed = bool(need_run) or need_first or bool(ewma_alphas)
-    if carries_needed:
-        tmp = out
-        ew_cols = []
-        for f in values:
-            vc = F.col(f"__v_{f}")
-            # index among gated-present values (the reference recursion
-            # only advances on those)
-            if ewma_alphas:
-                tmp = tmp.withColumn(f"__i_{f}", F.count(vc).over(run_pid))
-            for alpha in ewma_alphas:
-                label = ("%g" % alpha).replace(".", "_")
-                beta = 1.0 - alpha
-                scaled = vc * F.pow(F.lit(beta), -F.col(f"__i_{f}"))
-                tmp = tmp.withColumn(f"__sc_{f}_{label}", scaled)
-                tmp = tmp.withColumn(
-                    f"__s1_{f}_{label}", F.sum(f"__sc_{f}_{label}").over(run_pid)
-                )
-                ew_cols.append((f, alpha, label, beta))
-        out = tmp
-        agg_list = [F.count(F.lit(1)).alias("__rows")]
+    # ---- running aggregates: per-partition prefix + the carry of all
+    # earlier partitions (_pid_prefix over one tiny row per partition)
+    run_pid = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ew_labels = [(a, ("%g" % a).replace(".", "_")) for a in ewma_alphas]
+    carries, total = {}, {}
+    if any(s in ("rsum", "rprod", "counter", "from-first") for s in steppers) or ew_labels:
+        agg_list = []
         for f in values:
             vc = F.col(f"__v_{f}")
             nn_key = F.when(vc.isNotNull(), F.col("__n"))  # non-null order key
@@ -1967,115 +1919,101 @@ def _step_ungrouped(
                 F.product(vc).alias(f"__prod_{f}"),
                 F.min_by(vc, nn_key).alias(f"__first_{f}"),
             ]
-            for f2, alpha, label, beta in ew_cols:
-                if f2 != f:
-                    continue
+            # index among gated-present values (the reference recursion
+            # only advances on those)
+            if ew_labels:
+                out = out.withColumn(f"__i_{f}", F.count(vc).over(run_pid))
+            for alpha, label in ew_labels:
+                scaled = vc * F.pow(F.lit(1.0 - alpha), -F.col(f"__i_{f}"))
+                out = out.withColumn(f"__sc_{f}_{label}", scaled)
+                out = out.withColumn(
+                    f"__s1_{f}_{label}", F.sum(f"__sc_{f}_{label}").over(run_pid)
+                )
                 agg_list += [
-                    F.max_by(F.col(f"__s1_{f}_{label}"), nn_key).alias(
-                        f"__S_{f}_{label}"
-                    ),
-                    F.min_by(F.col(f"__sc_{f}_{label}"), nn_key).alias(
-                        f"__FS_{f}_{label}"
-                    ),
+                    F.max_by(F.col(f"__s1_{f}_{label}"), nn_key).alias(f"__S_{f}_{label}"),
+                    F.min_by(F.col(f"__sc_{f}_{label}"), nn_key).alias(f"__FS_{f}_{label}"),
                 ]
-        exports = {
-            r["__pid"]: r for r in out.groupBy("__pid").agg(*agg_list).collect()
-        }
 
-    def _chain(per_pid: dict[int, object]):
-        expr = None
-        for pid, v in per_pid.items():
-            if v is None:
-                continue
-            if expr is None:
-                expr = F.when(F.col("__pid") == pid, F.lit(v))
-            else:
-                expr = expr.when(F.col("__pid") == pid, F.lit(v))
-        return expr if expr is not None else F.lit(None)
+        def fold(acc: dict, r) -> dict:
+            nxt = {}
+            for f in values:
+                n_p, s, p = r[f"__cnt_{f}"], r[f"__sum_{f}"], r[f"__prod_{f}"]
+                # None until a partition has a value: no literal 0 that
+                # would mistype a double or decimal carry
+                nxt["rsum", f] = s if acc["rsum", f] is None else acc["rsum", f] + (s or 0)
+                nxt["counter", f] = acc["counter", f] + n_p
+                nxt["rprod", f] = acc["rprod", f] * (1.0 if p is None else p)
+                first = acc["from-first", f]
+                nxt["from-first", f] = r[f"__first_{f}"] if first is None and n_p else first
+                # ewma: partition 0 uses Miller's y1=x1 seeding; later
+                # partitions take the previous partition's final y as
+                # init c: y_t = beta^t * (alpha*s1 + c), t = per-partition
+                # count of gated-present values (the recursion skips the rest)
+                for alpha, label in ew_labels:
+                    beta, c_prev = 1.0 - alpha, acc["ewma", f, label]
+                    S, FS = r[f"__S_{f}_{label}"], r[f"__FS_{f}_{label}"]
+                    if n_p and S is not None:
+                        if c_prev is None:  # first partition with a present value
+                            c_prev = (beta ** n_p) * (alpha * S + (1 - alpha) * FS)
+                        else:
+                            c_prev = (beta ** n_p) * (alpha * S) + (beta ** n_p) * c_prev
+                    nxt["ewma", f, label] = c_prev
+            return nxt
+
+        init = {}
+        for f in values:
+            init.update({("rsum", f): None, ("counter", f): 0, ("rprod", f): 1.0,
+                         ("from-first", f): None})
+            init.update({("ewma", f, label): None for _a, label in ew_labels})
+        carries, total = _pid_prefix(out, agg_list, fold, init)
+
+    def carry(key, dtype) -> Column:
+        nonlocal out
+        out, c = _lookup(
+            out, F.col("__pid"), {pid: acc[key] for pid, acc in carries.items()}, dtype
+        )
+        return c
 
     result_cols = {}
     for f in values:
         c = F.col(f)
+        vc = F.col(f"__v_{f}")
         gate = gates[f]
         present = gate & c.isNotNull()
         for s in steppers:
             base_name, k = _parse_stepper(s)
+            name = f"{f}_{s.replace('-', '_')}"
             if base_name in ("shift", "shift_lag"):
-                result_cols[f"{f}_{s.replace('-', '_')}"] = F.when(
-                    gate, F.col(f"__lag{k}_{f}")
-                )
+                result_cols[name] = F.when(gate, F.col(f"__lag{k}_{f}"))
             elif base_name == "shift_lead":
-                result_cols[f"{f}_{s.replace('-', '_')}"] = F.when(
-                    gate, F.col(f"__lead{k}_{f}")
-                )
+                result_cols[name] = F.when(gate, F.col(f"__lead{k}_{f}"))
             elif base_name == "delta":
-                result_cols[f"{f}_{s.replace('-', '_')}"] = F.when(
+                result_cols[name] = F.when(
                     present, F.coalesce(c - F.col(f"__lag{k}_{f}"), F.lit(0))
                 )
             elif base_name == "ratio":
-                result_cols[f"{f}_{s.replace('-', '_')}"] = F.when(
+                result_cols[name] = F.when(
                     present, F.coalesce(c / F.col(f"__lag{k}_{f}"), F.lit(1.0))
                 )
-            elif s in ("rsum", "rprod", "counter"):
-                key = {"rsum": "__sum_", "rprod": "__prod_", "counter": "__cnt_"}[s]
-                acc_off: dict[int, object] = {}
-                running = 0 if s in ("rsum", "counter") else 1.0
-                for pid in sorted(exports):
-                    acc_off[pid] = running
-                    v = exports[pid][key + f]
-                    if v is not None:
-                        running = (
-                            running + v if s in ("rsum", "counter") else running * v
-                        )
-                vc = F.col(f"__v_{f}")
-                local = (
-                    F.sum(vc).over(run_pid)
-                    if s == "rsum"
-                    else F.count(vc).over(run_pid)
-                    if s == "counter"
-                    else F.product(vc).over(run_pid)
+            elif s == "rsum":
+                sum_t = out.select(F.sum(vc)).schema[0].dataType
+                e = F.sum(vc).over(run_pid) + F.coalesce(carry((s, f), sum_t), F.lit(0))
+                result_cols[name] = F.when(present, e)
+            elif s == "counter":
+                e = F.count(vc).over(run_pid) + F.coalesce(carry((s, f), LongType()), F.lit(0))
+                result_cols[name] = F.when(present, e)
+            elif s == "rprod":
+                e = F.product(vc).over(run_pid) * F.coalesce(
+                    carry((s, f), DoubleType()), F.lit(1.0)
                 )
-                offc = _chain(acc_off)
-                if s == "rprod":
-                    e = local * F.coalesce(offc, F.lit(1.0))
-                else:
-                    e = local + F.coalesce(offc, F.lit(0))
-                result_cols[f"{f}_{s.replace('-', '_')}"] = F.when(present, e)
+                result_cols[name] = F.when(present, e)
             elif s == "from-first":
-                first_v = None
-                for pid in sorted(exports):
-                    if exports[pid][f"__cnt_{f}"] > 0:
-                        first_v = exports[pid][f"__first_{f}"]
-                        break
-                result_cols[f"{f}_{s.replace('-', '_')}"] = F.when(
-                    present, c - F.lit(first_v)
-                )
+                result_cols[name] = F.when(present, c - F.lit(total[s, f]))
             else:
                 raise ValueError(f"unknown stepper: {s}")
-        for alpha in ewma_alphas:
-            label = ("%g" % alpha).replace(".", "_")
+        for alpha, label in ew_labels:
             beta = 1.0 - alpha
-            # driver composition of per-partition carries: partition 0
-            # uses Miller's y1=x1 seeding; later partitions take the
-            # previous partition's final y as init c:
-            # y_t = beta^t * (alpha*s1 + c), t = per-partition count of
-            # gated-present values (the recursion skips the rest)
-            carry: dict[int, float] = {}
-            c_prev = None
-            for pid in sorted(exports):
-                r = exports[pid]
-                carry[pid] = c_prev
-                n_p = r[f"__cnt_{f}"]
-                if n_p == 0:
-                    continue
-                S, FS = r[f"__S_{f}_{label}"], r[f"__FS_{f}_{label}"]
-                if S is None:
-                    continue
-                if c_prev is None:  # first partition with a present value
-                    c_prev = (beta ** n_p) * (alpha * S + (1 - alpha) * FS)
-                else:
-                    c_prev = (beta ** n_p) * (alpha * S) + (beta ** n_p) * c_prev
-            carry_expr = _chain(carry)
+            carry_expr = carry(("ewma", f, label), DoubleType())
             s1 = F.col(f"__s1_{f}_{label}")
             fs = F.first(F.col(f"__sc_{f}_{label}"), ignorenulls=True).over(run_pid)
             i_f = F.col(f"__i_{f}")
@@ -2093,12 +2031,11 @@ def _step_ungrouped(
     # drain drop rule (see step()): with a forward window larger than the
     # stream, the reference's drain loop drops the tail — only reachable
     # at toy scale (n_total < f_max)
-    if f_max and n_total is not None and n_total < f_max:
+    if f_max and n_total < f_max:
         out = out.filter(F.col("__n") <= 2 * n_total - f_max)
     # __n/__pid/__i and join/scratch columns are internal; __ord (if the
     # caller carries one) stays
-    keep_ord = [c for c in df.columns] + list(result_cols)
-    return out.select(*[c for c in out.columns if c in keep_ord])
+    return _keep(out, [*df.columns, *result_cols])
 
 
 def slwin(
@@ -2126,32 +2063,21 @@ def slwin(
         pre = numbered.withColumn("__ps", F.sum(c).over(run)).withColumn(
             "__pc", F.count(c).over(run)
         )
-        exports = {
-            r["__pid"]: (r["s"], r["n"], r["rows"])
-            for r in pre.groupBy("__pid")
-            .agg(
-                F.sum(c).alias("s"),
-                F.count(c).alias("n"),
-                F.count(F.lit(1)).alias("rows"),
-            )
-            .collect()
-        }
-        off_s, off_n, rs, rn = {}, {}, 0.0, 0
-        total_rows = 0
-        for pid in sorted(exports):
-            off_s[pid], off_n[pid] = rs, rn
-            s_, n_, rows_ = exports[pid]
-            rs += s_ or 0.0
-            rn += n_
-            total_rows += rows_
-        def chain(d, default):
-            e = None
-            for pid, v in d.items():
-                e = (e.when if e is not None else F.when)(F.col("__pid") == pid, F.lit(v))
-            return F.coalesce(e, F.lit(default)) if e is not None else F.lit(default)
-        pre = pre.withColumn("__gs", F.coalesce(F.col("__ps"), F.lit(0.0)) + chain(off_s, 0.0)).withColumn(
-            "__gn", F.col("__pc") + chain(off_n, 0)
+        carries, (_, _, total_rows) = _pid_prefix(
+            pre,
+            [F.sum(c).alias("s"), F.count(c).alias("n"), F.count(F.lit(1)).alias("rows")],
+            lambda acc, r: (acc[0] + (r["s"] or 0.0), acc[1] + r["n"], acc[2] + r["rows"]),
+            (0.0, 0, 0),
         )
+        pre, off_s = _lookup(
+            pre, F.col("__pid"), {p: acc[0] for p, acc in carries.items()}, DoubleType()
+        )
+        pre, off_n = _lookup(
+            pre, F.col("__pid"), {p: acc[1] for p, acc in carries.items()}, LongType()
+        )
+        pre = pre.withColumn(
+            "__gs", F.coalesce(F.col("__ps"), F.lit(0.0)) + F.coalesce(off_s, F.lit(0.0))
+        ).withColumn("__gn", F.col("__pc") + F.coalesce(off_n, F.lit(0)))
         # prefix table joined at the window edges: hi = n + n_fwd
         # (clamped), lo = n - m_back - 1 (0 -> zero prefix)
         prefix = pre.select(F.col("__n").alias("__pn"), F.col("__gs").alias("__hs"), F.col("__gn").alias("__hn"))
@@ -2173,9 +2099,8 @@ def slwin(
             F.col("__hs") - F.coalesce(F.col("__ls"), F.lit(0.0)),
             F.col("__hn") - F.coalesce(F.col("__ln"), F.lit(0)),
         )
-        res = res.withColumn(f"{value}_slwin_{m_back}_{n_fwd}", mean)
-        keep = list(df.columns) + [f"{value}_slwin_{m_back}_{n_fwd}"]
-        return res.select(*[c2 for c2 in res.columns if c2 in keep])
+        name = f"{value}_slwin_{m_back}_{n_fwd}"
+        return _keep(res.withColumn(name, mean), [*df.columns, name])
     w = (
         Window.partitionBy(*_cols(by))
         .orderBy(*[F.col(c) for c in _cols(order_by)])
@@ -2191,8 +2116,9 @@ def rank(df: DataFrame, value: str, by: Sequence[str] = (), descending: bool = F
     Grouped: one hash-partitioned rank window. Ungrouped: a bare
     ``Window.orderBy`` would single-task every row; instead rank(v) =
     1 + count of strictly smaller values, computed on the (much smaller)
-    DISTINCT-value table with the range-partition + offset-broadcast
-    pattern, then joined back on the value."""
+    DISTINCT-value table: range-partition it, prefix-sum the counts
+    within each partition and add the earlier partitions' total
+    (``_pid_prefix`` + ``_lookup``), then join back on the value."""
     by = _cols(by)
     order = F.col(value).desc() if descending else F.col(value).asc()
     if by:
@@ -2205,19 +2131,10 @@ def rank(df: DataFrame, value: str, by: Sequence[str] = (), descending: bool = F
     )
     ordered = vals.repartitionByRange(order).localCheckpoint(eager=True)
     ordered = ordered.withColumn("__pid", F.spark_partition_id())
-    counts = {
-        r["__pid"]: r["s"]
-        for r in ordered.groupBy("__pid").agg(F.sum("__c").alias("s")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off = (
-        F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-        if offsets
-        else F.create_map()
+    offsets, _ = _pid_prefix(
+        ordered, [F.sum("__c").alias("s")], lambda acc, r: acc + r["s"], 0
     )
+    ordered, off = _lookup(ordered, F.col("__pid"), offsets, LongType())
     w_in = (
         Window.partitionBy("__pid")
         .orderBy(order)
@@ -2227,7 +2144,7 @@ def rank(df: DataFrame, value: str, by: Sequence[str] = (), descending: bool = F
         ordered.withColumn(
             "rank",
             F.coalesce(F.sum("__c").over(w_in), F.lit(0))
-            + F.coalesce(off[F.col("__pid")], F.lit(0))
+            + F.coalesce(off, F.lit(0))
             + 1,
         )
         .select(value, "rank")
@@ -2842,9 +2759,10 @@ def stats1_iterative(
     across groups. Ungrouped: a bare expanding window is a single-task
     stage; instead every supported accumulator decomposes associatively
     (count / sum / sum-of-squares / min / max), so compute a prefix
-    within each range partition and add a broadcast exclusive-prefix
-    carry per partition — the same shape as ``_step_ungrouped``'s rsum.
-    One range exchange, no SinglePartition anywhere.
+    within each range partition and add the exclusive-prefix carry of
+    the earlier partitions (``_pid_prefix`` folds the per-partition
+    (count, sum, sum², min, max), ``_lookup`` reads it back). One range
+    exchange, no SinglePartition anywhere.
 
     Output columns are named ``{field}_{acc}`` (stats1 -s emits the
     record plus the running stats under the batch naming). Supported
@@ -2910,8 +2828,8 @@ def stats1_iterative(
             prefix_cols[f"__mx_{f}"] = F.max(raw).over(run)
     pre = numbered.withColumns(prefix_cols)
 
-    # per-partition totals: a tiny exports row per range partition,
-    # combined on the driver into EXCLUSIVE prefix carries
+    # per-partition totals: one tiny row per range partition, folded on
+    # the driver into EXCLUSIVE prefix carries
     agg_list = []
     for f in values:
         raw = F.col(f)
@@ -2923,45 +2841,41 @@ def stats1_iterative(
             F.min(raw).alias(f"mn_{f}"),
             F.max(raw).alias(f"mx_{f}"),
         ]
-    exports = {r["__pid"]: r for r in pre.groupBy("__pid").agg(*agg_list).collect()}
-    carries: dict[str, dict[int, object]] = {}
-    for f in values:
-        c = 0
-        s = 0 if _is_int(f) else 0.0
-        s2 = 0.0
-        mn = mx = None
-        cc: dict[int, tuple] = {}
-        for pid in sorted(exports):
-            cc[pid] = (c, s, s2, mn, mx)
-            r = exports[pid]
-            c += r[f"c_{f}"] or 0
+
+    def fold(acc: dict, r) -> dict:
+        nxt = {}
+        for f in values:
+            c, s, s2, mn, mx = acc[f]
             if r[f"s_{f}"] is not None:
-                s += r[f"s_{f}"]
-                s2 += r[f"s2_{f}"]
+                s, s2 = s + r[f"s_{f}"], s2 + r[f"s2_{f}"]
             if r[f"mn_{f}"] is not None:
                 mn = r[f"mn_{f}"] if mn is None else min(mn, r[f"mn_{f}"])
             if r[f"mx_{f}"] is not None:
                 mx = r[f"mx_{f}"] if mx is None else max(mx, r[f"mx_{f}"])
-        carries[f] = cc
+            nxt[f] = (c + r[f"c_{f}"], s, s2, mn, mx)
+        return nxt
 
-    def _carry(f: str, idx: int, cast: str = "double") -> Column:
-        pairs = [
-            x
-            for pid, tup in carries[f].items()
-            for x in (F.lit(pid), F.lit(tup[idx]).cast(cast))
-        ]
-        return F.create_map(*pairs)[F.col("__pid")] if pairs else F.lit(None)
+    carries, _ = _pid_prefix(
+        pre, agg_list, fold, {f: (0, 0 if _is_int(f) else 0.0, 0.0, None, None) for f in values}
+    )
+
+    def carry(f: str, idx: int, dtype) -> Column:
+        nonlocal pre
+        pre, c = _lookup(
+            pre, F.col("__pid"), {pid: acc[f][idx] for pid, acc in carries.items()}, dtype
+        )
+        return c
 
     out_cols: dict[str, Column] = {}
     for f in values:
-        sum_t = "bigint" if _is_int(f) else "double"
-        mm_t = dtypes.get(f, "double")
-        cnt = (F.col(f"__c_{f}") + _carry(f, 0, "long")) if need_cnt else None
+        sum_t = LongType() if _is_int(f) else DoubleType()
+        mm_t = df.schema[f].dataType
+        cnt = (F.col(f"__c_{f}") + carry(f, 0, LongType())) if need_cnt else None
         ssum = (
-            F.col(f"__s_{f}") + F.coalesce(_carry(f, 1, sum_t), F.lit(0).cast(sum_t))
+            F.col(f"__s_{f}") + F.coalesce(carry(f, 1, sum_t), F.lit(0).cast(sum_t))
         ) if need_sum else None
         ssum2 = (
-            F.col(f"__s2_{f}") + F.coalesce(_carry(f, 2), F.lit(0.0))
+            F.col(f"__s2_{f}") + F.coalesce(carry(f, 2, DoubleType()), F.lit(0.0))
         ) if need_var else None
         for a in accs:
             name = f"{f}_{a}"
@@ -2972,9 +2886,9 @@ def stats1_iterative(
             elif a == "mean":
                 out_cols[name] = F.when(cnt > 0, ssum.cast("double") / cnt)
             elif a == "min":
-                out_cols[name] = F.least(F.col(f"__mn_{f}"), _carry(f, 3, mm_t))
+                out_cols[name] = F.least(F.col(f"__mn_{f}"), carry(f, 3, mm_t))
             elif a == "max":
-                out_cols[name] = F.greatest(F.col(f"__mx_{f}"), _carry(f, 4, mm_t))
+                out_cols[name] = F.greatest(F.col(f"__mx_{f}"), carry(f, 4, mm_t))
             elif a in ("var", "stddev"):
                 sd = ssum.cast("double")
                 var = (ssum2 - sd * sd / cnt) / (cnt - 1)

@@ -10,8 +10,9 @@ import difflib
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 from mlrsketch.mlrcli import Unsupported, execute  # noqa: E402
 from mlrsketch.writers import render  # noqa: E402

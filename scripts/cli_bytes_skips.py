@@ -11,8 +11,9 @@ import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 from cli_bytes_sweep import try_case  # noqa: E402
 from mlrsketch.session import get_spark  # noqa: E402

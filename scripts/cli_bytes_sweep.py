@@ -16,7 +16,8 @@ import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from mlrsketch.mlrcli import Unsupported, execute  # noqa: E402
 from mlrsketch.writers import render  # noqa: E402

@@ -12,8 +12,9 @@ import sys
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 from mlrsketch.mlrcli import Unsupported, run_case  # noqa: E402
 from test_golden_reference import assert_matches, to_df  # noqa: E402

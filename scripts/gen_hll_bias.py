@@ -16,11 +16,13 @@ Run: python scripts/gen_hll_bias.py  (~1 min)
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 PRECISIONS = [8, 9, 10, 11, 12, 13, 14, 15, 16]
 NUM_RUNS = 80
@@ -85,7 +87,7 @@ def main():
         mid = len(bias) // 3
         print(f"p={p}: {len(raws)} knots, "
               f"mid-range bias {100 * abs(bias[mid]) / raws[mid]:.2f}% of raw")
-    with open("/root/repo/mlrsketch/sketches/hll_bias.py", "w") as fh:
+    with open(os.path.join(REPO, "mlrsketch", "sketches", "hll_bias.py"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print("wrote mlrsketch/sketches/hll_bias.py")
 

@@ -7,7 +7,7 @@ writes results as JSON lines. The script imports mlrsketch ONLY from
 the shipped zip (--py-files puts it on every executor's sys.path) —
 exactly how a 1000-executor cluster job ships the library.
 
-Package with:  cd /root/repo && zip -r mlrsketch.zip mlrsketch
+Package with, from the checkout root:  zip -r mlrsketch.zip mlrsketch
 Run with:      spark-submit --master local[8] --py-files mlrsketch.zip \
                    scripts/submit_job.py /path/to/pages_parquet /tmp/out
 

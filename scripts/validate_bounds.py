@@ -17,13 +17,18 @@ Spark answers on the deterministic pages table:
 - Bloom (m bits, k hashes): observed FPR on definitely-new keys vs
   (1-e^{-kn/m})^k
 
-Run: python scripts/validate_bounds.py   (writes VALIDATION.md)
+Run: python scripts/validate_bounds.py   (updates VALIDATION.md)
+
+Each measured section lands between a ``<!-- begin generated: name -->``
+and ``<!-- end generated: name -->`` marker pair in VALIDATION.md; text
+outside the markers (hand-written notes) is kept byte for byte.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -37,6 +42,30 @@ from mlrsketch.verbs import exact as ev  # noqa: E402
 from mlrsketch.verbs import sketch as sv  # noqa: E402
 
 N = int(os.environ.get("SPARK_GRAFT_VALIDATE_PAGES", "1000000"))
+_BLOCK = re.compile(
+    r"<!-- begin generated: (\w+) -->\n(.*?)<!-- end generated: \1 -->", re.S
+)
+
+
+def generated_blocks(doc: str) -> dict[str, list[str]]:
+    """The lines of each generated block in ``doc``, by name."""
+    return {m.group(1): m.group(2).splitlines() for m in _BLOCK.finditer(doc)}
+
+
+def splice(doc: str, blocks: dict[str, list[str]]) -> str:
+    """``doc`` with each named generated block replaced by ``blocks[name]``
+    and everything outside the markers unchanged."""
+    missing = set(blocks) - set(generated_blocks(doc))
+    if missing:
+        raise ValueError(f"VALIDATION.md has no generated block for {sorted(missing)}")
+    return _BLOCK.sub(
+        lambda m: (
+            f"<!-- begin generated: {m.group(1)} -->\n"
+            + "".join(line + "\n" for line in blocks.get(m.group(1), m.group(2).splitlines()))
+            + f"<!-- end generated: {m.group(1)} -->"
+        ),
+        doc,
+    )
 
 
 def main() -> None:
@@ -45,21 +74,21 @@ def main() -> None:
     pages = pg.load_or_create_pages(
         spark, N, os.path.join(REPO, ".bench_cache", f"pages_{N}")
     )
-    lines = [
+    blocks = {"input": [
         "# VALIDATION — sketch estimates vs exact, at scale",
         "",
         f"Input: deterministic pages table, {N:,} rows. Exact answers via",
         "Spark; estimates via the mlrsketch two-level partial/final plans.",
         "Regenerate: `python scripts/validate_bounds.py`.",
-        "",
-    ]
+    ]}
 
     # -- HLL ---------------------------------------------------------------
     exact_urls = pages.select("url").distinct().count()
-    lines += ["## HyperLogLog++ — distinct urls", "",
-              f"exact distinct: {exact_urls:,}", "",
-              "| p | estimate | rel.err | bound (1.04/sqrt(m)) | sigmas |",
-              "|---|---|---|---|---|"]
+    lines = blocks["hll"] = [
+        "## HyperLogLog++ — distinct urls", "",
+        f"exact distinct: {exact_urls:,}", "",
+        "| p | estimate | rel.err | bound (1.04/sqrt(m)) | sigmas |",
+        "|---|---|---|---|---|"]
     for p in (12, 14, 16):
         r = sv.count_distinct_hll(pages, of="url", p=p).first()
         est, bound = r["distinct_count_est"], r["error_bound"]
@@ -67,7 +96,6 @@ def main() -> None:
         lines.append(
             f"| {p} | {est:,.0f} | {rel:.5f} | {bound:.5f} | {rel / bound:.2f} |"
         )
-    lines.append("")
 
     # -- quantiles ---------------------------------------------------------
     withlen = pages.withColumn("tl", F.length("text").cast("double"))
@@ -77,9 +105,10 @@ def main() -> None:
     def exact_rank(v: float) -> float:
         return withlen.filter(F.col("tl") <= v).count() / n_rows
 
-    lines += ["## KLL (k=200) & t-digest (delta=200) — text-length quantiles", "",
-              "| sketch | q | estimate | exact rank of estimate | rank err | bound |",
-              "|---|---|---|---|---|---|"]
+    lines = blocks["quantiles"] = [
+        "## KLL (k=200) & t-digest (delta=200) — text-length quantiles", "",
+        "| sketch | q | estimate | exact rank of estimate | rank err | bound |",
+        "|---|---|---|---|---|---|"]
     kll = sv.quantiles_kll(withlen, "tl", (0.5, 0.9, 0.99)).first()
     td = sv.quantiles_tdigest(withlen, "tl", (0.5, 0.9, 0.99)).first()
     for label, row, bound in (("KLL", kll, kll["rank_error_bound"]),
@@ -91,7 +120,6 @@ def main() -> None:
             lines.append(
                 f"| {label} | {q} | {est:.0f} | {r_:.5f} | {err:.5f} | {bound:.5f} |"
             )
-    lines.append("")
 
     # -- CMS top-k ---------------------------------------------------------
     depth, width, k = 5, 16384, 20
@@ -109,12 +137,13 @@ def main() -> None:
         .collect()
     }
     eps = math.e / width
-    lines += [f"## Count-Min + heavy hitters — top-{k} tokens", "",
-              f"total tokens N = {total_tokens:,}; overcount bound eps*N = "
-              f"{eps * total_tokens:,.0f} (eps = e/width = {eps:.2e}, "
-              f"P(violation) <= e^-depth = {math.exp(-depth):.3f})", "",
-              "| token | est | exact | overcount | <= eps*N |",
-              "|---|---|---|---|---|"]
+    lines = blocks["cms"] = [
+        f"## Count-Min + heavy hitters — top-{k} tokens", "",
+        f"total tokens N = {total_tokens:,}; overcount bound eps*N = "
+        f"{eps * total_tokens:,.0f} (eps = e/width = {eps:.2e}, "
+        f"P(violation) <= e^-depth = {math.exp(-depth):.3f})", "",
+        "| token | est | exact | overcount | <= eps*N |",
+        "|---|---|---|---|---|"]
     worst = 0
     for v, est in topk[:10]:
         ex = exact_counts.get(v, 0)
@@ -125,7 +154,6 @@ def main() -> None:
     lines.append("")
     lines.append(f"max overcount across top-{k}: {worst:,} "
                  f"(never undercounts: CMS point estimates are upper bounds)")
-    lines.append("")
 
     # -- Bloom -------------------------------------------------------------
     n_bits, n_hashes = 1 << 22, 7
@@ -140,15 +168,18 @@ def main() -> None:
     fpr_obs = (n_new - kept) / n_new
     n_inserted = a_urls.count()
     fpr_theory = (1 - math.exp(-n_hashes * n_inserted / n_bits)) ** n_hashes
-    lines += ["## Bloom — seen-URL membership", "",
-              f"filter: m = 2^22 bits, k = {n_hashes}; inserted n = {n_inserted:,} urls",
-              f"definitely-new urls probed: {n_new:,}; false positives: {n_new - kept:,}",
-              f"observed FPR = {fpr_obs:.5f} vs theoretical (1-e^(-kn/m))^k = {fpr_theory:.5f}",
-              ""]
+    blocks["bloom"] = [
+        "## Bloom — seen-URL membership", "",
+        f"filter: m = 2^22 bits, k = {n_hashes}; inserted n = {n_inserted:,} urls",
+        f"definitely-new urls probed: {n_new:,}; false positives: {n_new - kept:,}",
+        f"observed FPR = {fpr_obs:.5f} vs theoretical (1-e^(-kn/m))^k = {fpr_theory:.5f}"]
 
-    with open(os.path.join(REPO, "VALIDATION.md"), "w") as f:
-        f.write("\n".join(lines))
-    print("\n".join(lines[-30:]))
+    path = os.path.join(REPO, "VALIDATION.md")
+    with open(path) as f:
+        doc = splice(f.read(), blocks)
+    with open(path, "w") as f:
+        f.write(doc)
+    print(doc)
     spark.stop()
 
 

@@ -9,6 +9,7 @@ single-partition formulations the library used to have."""
 
 from __future__ import annotations
 
+import inspect
 import math
 import random
 
@@ -225,3 +226,19 @@ def test_step_lag_spans_multiple_tiny_partitions(spark):
         assert r["x_shift_lag_3"] == exp_lag, (i, r)
         assert r["x_shift_lead_2"] == exp_lead, (i, r)
         assert r["x_delta"] == exp_delta, (i, r)
+
+
+@pytest.mark.parametrize("check", [
+    test_step_ungrouped_matches_naive,
+    test_fill_down_ungrouped_matches_naive,
+    test_slwin_ungrouped_matches_naive,
+    test_rank_ungrouped_matches_naive,
+    test_step_lag_spans_multiple_tiny_partitions,
+], ids=lambda f: f.__name__)
+def test_join_lookups_match_naive(check, request, monkeypatch):
+    """The same naive references with every driver-table lookup on its
+    broadcast-join branch (a lookup budget of 0 entries) instead of a
+    literal map."""
+    monkeypatch.setattr(ev, "_LOOKUP_LITERAL_MAX", 0)
+    check(*[request.getfixturevalue(a) for a in inspect.signature(check).parameters])
+

@@ -5,6 +5,7 @@ pkg/transformers/utils/stats1_accumulators.go)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from mlrsketch.verbs import exact as ev
@@ -349,3 +350,53 @@ def test_bootstrap_ci_hash_skips_null_values(spark):
     assert got == want
     for r in got:
         assert r[2] <= r[1] <= r[3]
+
+
+def test_percentiles_rank_many_groups_has_bounded_plan(spark):
+    """20,000 groups x 3 rows: the (partition, group) rank offsets reach
+    the rows through a broadcast join, not a literal map with one entry
+    per (partition, group), so the plan stays small; every group's
+    p50/p90 still equals Spark's exact percentile()."""
+    df = spark.range(0, 60_000).select(
+        (F.col("id") % 20_000).alias("g"), ((F.col("id") * 7919) % 1_000).cast("double").alias("v")
+    )
+    out = ev.percentiles_rank(df, "v", [50, 90], by=["g"])
+    assert len(out._jdf.queryExecution().optimizedPlan().toString()) < 20_000
+    got = {r["g"]: (r["v_p50"], r["v_p90"]) for r in out.collect()}
+    ref = {r["g"]: (r["a"], r["b"]) for r in df.groupBy("g").agg(
+        F.percentile("v", 0.5).alias("a"), F.percentile("v", 0.9).alias("b")).collect()}
+    assert set(got) == set(ref)
+    for g, pair in ref.items():
+        assert all(abs(x - y) < 1e-9 for x, y in zip(got[g], pair)), (g, got[g], pair)
+
+
+_ONE = [(1, "a", 1.5, 2.0)]
+_EMPTY_CASES = {
+    "fraction_c": lambda d: ev.fraction(d, "x", cumulative=True, order_by=["ord"]),
+    "rank": lambda d: ev.rank(d, "y"),
+    "fill_down": lambda d: ev.fill_down(d, ["x", "y"], order_by=["ord"]),
+    "slwin": lambda d: ev.slwin(d, "x", 2, 1, order_by=["ord"]),
+    "stats1_iterative": lambda d: ev.stats1_iterative(
+        d, ["count", "sum", "mean", "min", "max", "var"], ["x"], order_by=["ord"]
+    ),
+    "step": lambda d: ev.step(
+        d, ["shift", "shift_lead_1", "delta", "rsum", "counter", "from-first"], ["x"],
+        order_by=["ord"], ewma_alphas=[0.5],
+    ),
+    "percentiles_rank_grouped": lambda d: ev.percentiles_rank(d, "x", [50, 90], by=["g"]),
+    "percentiles_rank_global": lambda d: ev.percentiles_rank(d, "x", [50, 90]),
+    "cat_numbered": lambda d: ev.cat_numbered(d, order_by=["ord"]),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_EMPTY_CASES))
+def test_ungrouped_ordered_verbs_on_empty_input(spark, verb):
+    """A 0-row frame gives 0 rows with the columns a 1-row frame gets:
+    an empty carry table must not become an untyped map()."""
+    schema = "ord long, g string, x double, y double"
+    run = _EMPTY_CASES[verb]
+    one = run(spark.createDataFrame(_ONE, schema))
+    empty = run(spark.createDataFrame([], schema))
+    assert empty.collect() == []
+    assert empty.columns == one.columns
+    assert one.count() == 1

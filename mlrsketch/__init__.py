@@ -8,10 +8,12 @@ johnkerl/miller (reference at /root/reference), re-expressed Spark-first:
   DataFrame transformations with Miller's exact semantics
   (non-interpolated percentiles, first-seen mode ties, ...).
 - ``mlrsketch.sketches``      — engine-independent mergeable sketch cores
-  (HLL++, Count-Min, t-digest, KLL, Bloom), numpy-vectorized,
-  serializable, associative under merge.
-- ``mlrsketch.agg``           — the two-level salted partial/final sketch
-  aggregation plan builder over ``applyInPandas``.
+  (HLL++, theta, KLL, t-digest, SpaceSaving heavy hitters, Bloom,
+  bootstrap CI), batch-vectorized, serializable, mergeable.
+- ``mlrsketch.agg``           — the two-level partial/final sketch
+  aggregation plan: per-partition partial states from ``mapInPandas``,
+  then one fold of the collected states (global) or a grouped
+  ``applyInPandas`` merge over the state rows.
 - ``mlrsketch.pipeline``      — web-scale training-data ops: dedup
   (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity search,
   text analysis, multimodal plumbing.

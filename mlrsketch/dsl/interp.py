@@ -4335,13 +4335,6 @@ def _frac_str(x: float, digits: int) -> str:
     return "." + str(scaled).rjust(digits, "0")
 
 
-def _strftime_py(fmt: str) -> str:
-    """Miller uses C strftime directives plus %1S..%9S fractional forms
-    and %N/%j etc. Translate the fractional forms; pass the rest to
-    Python strftime."""
-    return fmt
-
-
 def _sec_to_dt(sec: float) -> _dt.datetime:
     return _dt.datetime.fromtimestamp(sec, tz=_UTC)
 

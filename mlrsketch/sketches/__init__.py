@@ -8,13 +8,16 @@ This is exactly the `begin/update/end` shape of Miller's DSL aggregations
 (pkg/runtime/state.go:16-36, pkg/dsl/cst/emit_emitp.go) plus the `merge`
 Miller never needed single-threaded — see SURVEY.md §2.9.
 
-Updates take numpy arrays (Arrow column batches), never scalars:
-no per-row Python anywhere.
+Updates take whole batches, never scalars. The hash-keyed cores (HLL,
+theta, Bloom) and the quantile cores take numpy arrays of an Arrow
+column batch; the heavy-hitter summary (``TopKSketch``, SpaceSaving)
+is keyed by the value string and takes a batch's distinct values with
+their counts, so it needs no hash at all.
 """
 
 from mlrsketch.sketches.bloom import BloomFilter
 from mlrsketch.sketches.bootci import BootstrapCI
-from mlrsketch.sketches.cms import CountMinSketch, TopKSketch
+from mlrsketch.sketches.cms import TopKSketch
 from mlrsketch.sketches.hll import HyperLogLog
 from mlrsketch.sketches.kll import KLL
 from mlrsketch.sketches.tdigest import TDigest
@@ -28,7 +31,6 @@ from mlrsketch.sketches.theta import (
 __all__ = [
     "BootstrapCI",
     "HyperLogLog",
-    "CountMinSketch",
     "TopKSketch",
     "BloomFilter",
     "TDigest",

@@ -1,304 +1,146 @@
-"""Count-Min Sketch + heavy-hitter candidate tracking.
+"""Heavy hitters: one mergeable SpaceSaving summary keyed by the value.
 
 Replaces Miller's exact `most-frequent`/`least-frequent` (reference:
-/root/reference/pkg/transformers/most_or_least_frequent.go:28,216-295 —
-an in-memory map of EVERY distinct value combination) and the
-`mode` accumulator (stats1_accumulators.go:367-445) with bounded state.
+pkg/transformers/most_or_least_frequent.go:28,216-295 — an in-memory map
+of EVERY distinct value combination) and the `mode` accumulator
+(stats1_accumulators.go:367-445) with bounded state.
 
-Algorithm: Cormode & Muthukrishnan 2005. Guarantee: with width w and
-depth d, the estimate over-counts by at most eps*N with probability
->= 1-delta, where eps = e/w and delta = exp(-d), N = total count.
-Point estimates never under-count.
+Algorithm: SpaceSaving (Metwally et al. 2005) with the merge of Agarwal
+et al., "Mergeable Summaries" (PODS 2012), in its SpaceSaving form. The
+state is (capacity, N, trimmed, {value: count}). A summary's `floor` is
+its smallest kept count once trimmed, 0 before: an upper bound on the
+true count of every value it does not keep. Merging gives each value of
+the union `a.get(v, a.floor) + b.get(v, b.floor)` and keeps the
+`capacity` largest counts, ties to the smaller value. An update folds
+the batch's exact counts through the same merge.
 
-TopKSketch pairs the CMS with a bounded candidate set (space-saving
-style): every value actually seen in a batch is a candidate; candidates
-are re-scored against the merged CMS and trimmed to `capacity`. Merge =
-matrix add (associative, bit-identical) + candidate union/trim.
+Guarantee (deterministic, no hashing): true <= est <= true + N/capacity
+for every value, and every value with a true count above N/capacity is
+kept. While the union of everything seen holds at most `capacity`
+values nothing is ever dropped: the counts are exact and `trimmed`
+stays false — the same "the sketch IS the exact answer below its
+capacity" contract as the theta sketch.
 """
 
 from __future__ import annotations
 
+import heapq
 import math
 import struct
+from collections import Counter
+from itertools import accumulate
 
 import numpy as np
 
-from mlrsketch.sketches.hashing import hash_strings, kirsch_mitzenmacher, to_u64
-
-_MAGIC = b"CMS1"
-_TK_MAGIC = b"TPK3"  # v3: + trimmed flag (untrimmed => candidate counts exact)
-_TK_MAGIC_V2 = b"TPK2"  # v2: candidates carry a per-entry error bound
-_TK_MAGIC_V1 = b"TOPK"
+_MAGIC = b"TKSS"
+_RETIRED = {b"TOPK", b"TPK2", b"TPK3"}  # Count-Min + candidates formats
+# capacity, N, trimmed, entries, byte width of the lengths, of the counts
+_HEAD = "<IqBIBB"
 
 
-class CountMinSketch:
-    __slots__ = ("depth", "width", "table", "total")
+def _narrow(xs: np.ndarray) -> np.ndarray:
+    """`xs` (non-negative) as the narrowest little-endian unsigned type."""
+    return xs.astype(f"<u{np.min_scalar_type(int(xs.max(initial=0))).itemsize}")
 
-    def __init__(
-        self,
-        depth: int = 5,
-        width: int = 8192,
-        table: np.ndarray | None = None,
-        total: int = 0,
-    ):
-        self.depth = depth
-        self.width = width
-        self.table = (
-            table if table is not None else np.zeros((depth, width), dtype=np.int64)
-        )
-        self.total = total
 
-    # -- update ------------------------------------------------------------
-    def update_hashes(self, hashes: np.ndarray, counts: np.ndarray | None = None) -> None:
-        """Add counts (default 1 each) for a batch of 64-bit hashes.
-
-        Callers should pre-aggregate batches (value_counts) so each
-        distinct item appears once — fewer scatter ops.
-        """
-        if hashes.size == 0:
-            return
-        h = to_u64(hashes)
-        if counts is None:
-            counts = np.ones(h.shape[0], dtype=np.int64)
-        idx = kirsch_mitzenmacher(h, self.depth, self.width)
-        for i in range(self.depth):
-            np.add.at(self.table[i], idx[i].astype(np.int64), counts)
-        self.total += int(counts.sum())
-
-    # -- query -------------------------------------------------------------
-    def estimate_hashes(self, hashes: np.ndarray) -> np.ndarray:
-        """Point estimates (min over rows) for a batch of hashes."""
-        h = to_u64(hashes)
-        idx = kirsch_mitzenmacher(h, self.depth, self.width)
-        ests = np.empty((self.depth, h.shape[0]), dtype=np.int64)
-        for i in range(self.depth):
-            ests[i] = self.table[i][idx[i].astype(np.int64)]
-        return ests.min(axis=0)
-
-    def error_bound(self) -> tuple[float, float]:
-        """(eps, delta): overcount <= eps*N with prob >= 1-delta."""
-        return (math.e / self.width, math.exp(-self.depth))
-
-    # -- merge -------------------------------------------------------------
-    def merge(self, other: "CountMinSketch") -> "CountMinSketch":
-        if (other.depth, other.width) != (self.depth, self.width):
-            raise ValueError("CMS shape mismatch")
-        self.table += other.table
-        self.total += other.total
-        return self
-
-    # -- serde -------------------------------------------------------------
-    def serialize(self) -> bytes:
-        head = _MAGIC + struct.pack("<IIq", self.depth, self.width, self.total)
-        return head + self.table.tobytes()
-
-    @classmethod
-    def deserialize(cls, data: bytes) -> "CountMinSketch":
-        if data[:4] != _MAGIC:
-            raise ValueError("not a CMS state")
-        depth, width, total = struct.unpack_from("<IIq", data, 4)
-        table = (
-            np.frombuffer(data[4 + 16 :], dtype=np.int64).reshape(depth, width).copy()
-        )
-        return cls(depth=depth, width=width, table=table, total=total)
+def _largest(counts: dict[str, int], k: int) -> dict[str, int]:
+    """The `k` largest counts of `counts`, ties to the smaller value."""
+    cnt = np.fromiter(counts.values(), np.int64, len(counts))
+    cut = int(np.partition(cnt, len(cnt) - k)[len(cnt) - k])  # k-th largest
+    keep = {v: c for v, c in counts.items() if c > cut}
+    ties = heapq.nsmallest(k - len(keep), (v for v, c in counts.items() if c == cut))
+    keep.update(dict.fromkeys(ties, cut))
+    return keep
 
 
 class TopKSketch:
-    """CMS + bounded candidate set for heavy hitters (`most-frequent`).
+    """Mergeable SpaceSaving summary for heavy hitters (`most-frequent`).
 
-    Candidates carry their 64-bit hash (value -> [count, hash, err]) so
-    the hot path (trim/re-score every batch) is pure numpy over stored
-    hashes — strings are hashed exactly once, and on the executor that
-    hash arrives precomputed from JVM-side xxhash64 (update_hashed).
+    `capacity` values are kept. `width` sizes the summary for an
+    overcount of at most e/width * N (the Count-Min bound it replaced),
+    so the kept size is max(capacity, ceil(width/e)); `depth` is
+    accepted for the same callers and unused."""
 
-    Guarantee (SpaceSaving-flavored, Metwally 2005 + CMS bounds): rank
-    by CMS estimate `est` (never an undercount). At every trim, at most
-    `capacity` items can have est > N/capacity + eps*N (else their true
-    counts would sum past N), and all of them are kept — so any item
-    with true count > N/capacity + eps*N survives from its last arrival
-    onward. Per-candidate `err` bounds the overcount: `count` arrivals
-    were observed while tracked, so true >= count and
-    est - err <= true <= est, with err = possible pre-tracking/collision
-    overcount recorded at (re)insertion and summed across merges.
+    __slots__ = ("capacity", "total", "trimmed", "counts")
 
-    Exact-below-capacity: while no trim has ever occurred (here or in
-    any merged shard), the candidate set is COMPLETE and each tracked
-    count is the exact arrival total, so top-k ranks by those exact
-    counts with err 0 — the same "the sketch IS the exact answer below
-    its capacity" contract as the theta sketch. The `trimmed` flag
-    records the transition and survives serialization and merges."""
+    def __init__(self, depth: int = 5, width: int | None = None, capacity: int = 1024):
+        self.capacity = max(capacity, math.ceil(width / math.e)) if width else capacity
+        self.total = 0
+        self.trimmed = False
+        self.counts: dict[str, int] = {}
 
-    __slots__ = ("cms", "capacity", "candidates", "trimmed")
+    def floor(self) -> int:
+        """Upper bound on the true count of any value not kept."""
+        return min(self.counts.values()) if self.trimmed else 0
 
-    def __init__(
-        self,
-        depth: int = 5,
-        width: int = 8192,
-        capacity: int = 1024,
-        cms: CountMinSketch | None = None,
-        candidates: dict[str, list[int]] | None = None,
-        trimmed: bool = False,
-    ):
-        self.cms = cms or CountMinSketch(depth, width)
-        self.capacity = capacity
-        # item -> [tracked-count floor, uint64 hash, error bound];
-        # ranking uses CMS estimates once trimmed, exact tracked
-        # counts while the candidate set is still complete.
-        self.candidates: dict[str, list[int]] = candidates or {}
-        self.trimmed = trimmed
-
-    def update_values(self, values: np.ndarray, counts: np.ndarray | None = None) -> None:
-        """Ingest a pre-aggregated batch: distinct string values + counts
-        (driver/test path — hashes computed here)."""
-        self.update_hashed(values, hash_strings(list(values)), counts)
-
-    def update_hashed(
-        self, values, hashes: np.ndarray, counts: np.ndarray | None = None
-    ) -> None:
-        """Ingest a pre-aggregated batch with precomputed 64-bit hashes
-        (the executor path: hashes come from JVM-side xxhash64)."""
-        if len(values) == 0:
-            return
+    def update_values(self, values, counts=None) -> None:
+        """Fold a batch of values (repeats allowed), each weighted by
+        `counts` (default 1), as one exact summary."""
+        values = values.tolist() if isinstance(values, np.ndarray) else list(values)
         if counts is None:
-            counts = np.ones(len(values), dtype=np.int64)
-        hu = to_u64(np.asarray(hashes))
-        self.cms.update_hashes(hu, counts)
-        cands = self.candidates
-        fresh: list[tuple[str, int, int]] = []  # (value, count, hash-pos)
-        for pos, (v, c, h) in enumerate(zip(values, counts.tolist(), hu.tolist())):
-            cur = cands.get(v)
-            if cur is None:
-                cands[v] = [c, h, 0]
-                fresh.append((v, c, pos))
-            else:
-                cur[0] += c
-        if fresh:
-            # error bound at insertion: everything the CMS already holds
-            # beyond this batch's own count is pre-tracking/collision
-            # overcount (SpaceSaving's min-counter-at-replacement analog)
-            ests = self.cms.estimate_hashes(hu[[p for _, _, p in fresh]])
-            for (v, c, _), e in zip(fresh, ests.tolist()):
-                self.candidates[v][2] = max(0, int(e) - c)
-        self._trim()
+            batch = Counter(values)
+        else:
+            counts = counts.tolist() if isinstance(counts, np.ndarray) else list(counts)
+            batch = dict(zip(values, counts))
+            if len(batch) < len(values):
+                batch = Counter()
+                for v, c in zip(values, counts):
+                    batch[v] += c
+        self._fold(batch, sum(batch.values()), False, 0)
 
-    def _cand_hashes(self) -> np.ndarray:
-        return np.fromiter(
-            (ch[1] for ch in self.candidates.values()),
-            dtype=np.uint64,
-            count=len(self.candidates),
-        )
-
-    def _trim(self) -> None:
-        if len(self.candidates) <= self.capacity:
-            return
-        self.trimmed = True
-        items = list(self.candidates.keys())
-        ests = self.cms.estimate_hashes(self._cand_hashes())
-        order = np.argsort(-ests, kind="stable")[: self.capacity]
-        keep = {items[i] for i in order}
-        self.candidates = {k: v for k, v in self.candidates.items() if k in keep}
-
-    def top(self, k: int) -> list[tuple[str, int]]:
-        """Top-k candidates (desc count, then value asc). Untrimmed:
-        exact tracked counts; trimmed: CMS estimates."""
-        if not self.candidates:
-            return []
-        if not self.trimmed:
-            ranked = sorted(
-                ((v, ch[0]) for v, ch in self.candidates.items()),
-                key=lambda t: (-t[1], t[0]),
-            )
-            return ranked[:k]
-        items = list(self.candidates.keys())
-        ests = self.cms.estimate_hashes(self._cand_hashes())
-        ranked = sorted(zip(items, ests.tolist()), key=lambda t: (-t[1], t[0]))
-        return ranked[:k]
-
-    def top_with_bounds(self, k: int) -> list[tuple[str, int, int]]:
-        """Top-k as (value, est, err) with est - err <= true <= est.
-
-        The sound bracket: `count` arrivals were observed while tracked
-        (every one a genuine arrival, in THIS shard or a merged one), so
-        true >= count; the CMS never undercounts, so true <= est. Hence
-        err = est - count. The recorded insertion estimate (candidates'
-        3rd field) is diagnostic only — post-insertion CMS collisions
-        and merge cross-collisions can exceed it, so it cannot tighten
-        the bound soundly."""
-        if not self.candidates:
-            return []
-        if not self.trimmed:  # complete candidate set: counts are exact
-            ranked = sorted(
-                ((v, ch[0], 0) for v, ch in self.candidates.items()),
-                key=lambda t: (-t[1], t[0]),
-            )
-            return ranked[:k]
-        items = list(self.candidates.items())
-        ests = self.cms.estimate_hashes(self._cand_hashes())
-        ranked = sorted(
-            ((v, int(e), max(0, int(e) - ch[0]))
-             for (v, ch), e in zip(items, ests.tolist())),
-            key=lambda t: (-t[1], t[0]),
-        )
-        return ranked[:k]
+    def update_hashed(self, values, hashes, counts=None) -> None:
+        """`update_values`; `hashes` is ignored (the summary is keyed by value)."""
+        self.update_values(values, counts)
 
     def merge(self, other: "TopKSketch") -> "TopKSketch":
-        self.trimmed = self.trimmed or other.trimmed
-        self.cms.merge(other.cms)
-        for k, ch in other.candidates.items():
-            cur = self.candidates.get(k)
-            if cur is None:
-                self.candidates[k] = list(ch)
-            else:
-                # tracked counts are exact arrivals in disjoint shards:
-                # summing keeps the lower bound sound
-                cur[0] += ch[0]
-                cur[2] += ch[2]
-        self._trim()
+        # the smaller capacity keeps N/capacity sound for both inputs
+        self.capacity = min(self.capacity, other.capacity)
+        self._fold(other.counts, other.total, other.trimmed, other.floor())
         return self
 
+    def _fold(self, counts: dict[str, int], total: int, trimmed: bool, floor: int) -> None:
+        mine, own_floor = self.counts, self.floor()
+        merged = {v: c + floor for v, c in mine.items()} if floor else dict(mine)
+        for v, c in counts.items():
+            merged[v] = mine.get(v, own_floor) + c
+        self.total += total
+        self.trimmed = self.trimmed or trimmed or len(merged) > self.capacity
+        self.counts = _largest(merged, self.capacity) if len(merged) > self.capacity else merged
+
+    def top(self, k: int) -> list[tuple[str, int]]:
+        """The k largest (value, count), count desc then value asc: exact
+        counts while untrimmed, upper bounds within N/capacity after."""
+        return heapq.nsmallest(k, self.counts.items(), key=lambda t: (-t[1], t[0]))
+
     def serialize(self) -> bytes:
-        cms_bytes = self.cms.serialize()
-        cand_blob = "\x00".join(
-            f"{k}\x01{cnt}\x01{h}\x01{err}"
-            for k, (cnt, h, err) in sorted(self.candidates.items())
-        ).encode("utf-8")
-        return (
-            _TK_MAGIC
-            + struct.pack("<IIIB", self.capacity, len(cms_bytes), len(cand_blob),
-                          1 if self.trimmed else 0)
-            + cms_bytes
-            + cand_blob
-        )
+        """Header, then for the entries sorted by value: their lengths in
+        characters and their counts (each column in its narrowest
+        unsigned width), then the values as one UTF-8 string."""
+        vals = sorted(self.counts)
+        n = len(vals)
+        lens = _narrow(np.fromiter(map(len, vals), np.int64, n))
+        cnts = _narrow(np.fromiter(map(self.counts.__getitem__, vals), np.int64, n))
+        head = struct.pack(_HEAD, self.capacity, self.total, self.trimmed, n,
+                           lens.itemsize, cnts.itemsize)
+        return b"".join([_MAGIC, head, lens.tobytes(), cnts.tobytes(),
+                         "".join(vals).encode("utf-8")])
 
     @classmethod
     def deserialize(cls, data: bytes) -> "TopKSketch":
-        magic = data[:4]
-        if magic not in (_TK_MAGIC, _TK_MAGIC_V2, _TK_MAGIC_V1):
+        magic = bytes(data[:4])
+        if magic in _RETIRED:
+            raise ValueError(
+                f"TopK state in the retired Count-Min format {magic!r}; recompute it"
+            )
+        if magic != _MAGIC:
             raise ValueError(f"not a TopK state (magic {magic!r})")
-        if magic == _TK_MAGIC:
-            capacity, cms_len, cand_len, trimmed = struct.unpack_from("<IIIB", data, 4)
-            off = 4 + 13
-        else:
-            capacity, cms_len, cand_len = struct.unpack_from("<III", data, 4)
-            trimmed = 1  # legacy states: assume estimates (never claim exact)
-            off = 4 + 12
-        cms = CountMinSketch.deserialize(data[off : off + cms_len])
-        cand_blob = data[off + cms_len : off + cms_len + cand_len].decode("utf-8")
-        candidates = {}
-        if cand_blob:
-            for entry in cand_blob.split("\x00"):
-                parts = entry.split("\x01")
-                if len(parts) == 4:  # v2: value, count, hash, err
-                    k, cnt, h, err = parts
-                elif len(parts) == 3:  # v1 triple: value, count, hash
-                    (k, cnt, h), err = parts, 0
-                elif len(parts) == 2:  # pre-v1 pair: value, count
-                    (k, cnt), err = parts, 0
-                    h = int(hash_strings([k])[0])
-                else:
-                    raise ValueError(
-                        f"corrupt TopK candidate entry ({len(parts)} fields)"
-                    )
-                candidates[k] = [int(cnt), int(h), int(err)]
-        return cls(capacity=capacity, cms=cms, candidates=candidates,
-                   trimmed=bool(trimmed))
+        capacity, total, trimmed, n, lw, cw = struct.unpack_from(_HEAD, data, 4)
+        off = 4 + struct.calcsize(_HEAD)
+        lens = np.frombuffer(data, f"<u{lw}", n, off).tolist()
+        cnts = np.frombuffer(data, f"<u{cw}", n, off + lw * n).tolist()
+        text = data[off + (lw + cw) * n :].decode("utf-8")
+        bounds = list(accumulate(lens, initial=0))
+        sk = cls(capacity=capacity)
+        sk.total, sk.trimmed = total, bool(trimmed)
+        sk.counts = dict(zip((text[i:j] for i, j in zip(bounds, bounds[1:])), cnts))
+        return sk

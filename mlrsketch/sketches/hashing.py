@@ -38,9 +38,9 @@ def hash_strings(values, seed: int = 0) -> np.ndarray:
 
     blake2b (hashlib, C implementation) truncated to 8 bytes — stable
     across processes and platforms, ~0.5us/string. Only used off the
-    executor hot path; executors hash JVM-side (F.xxhash64) and the
-    sketches carry those hashes (update_hashed paths) so this is never
-    called per-row inside a Spark job.
+    executor hot path; executors hash JVM-side (F.xxhash64), and the
+    heavy-hitter summary is keyed by the string itself, so this is
+    never called inside a Spark job.
     """
     import hashlib
 
@@ -61,7 +61,7 @@ def kirsch_mitzenmacher(h: np.ndarray, k: int, modulus: int) -> np.ndarray:
     """Derive k hash indices in [0, modulus) from one uint64 hash each.
 
     g_i(x) = (h1(x) + i*h2(x)) mod m  — Kirsch & Mitzenmacher 2006 show
-    this preserves Bloom/CMS guarantees. Returns shape (k, n).
+    this preserves Bloom guarantees. Returns shape (k, n).
     """
     h1 = h
     h2 = splitmix64(h) | _U64(1)  # odd, so strides cover the table

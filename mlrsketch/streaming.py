@@ -227,7 +227,7 @@ def stream_sketch_profile(
     timeout: str = GroupStateTimeout.NoTimeout,
 ) -> DataFrame:
     """The flagship fused page profile (HLL distinct urls + KLL
-    text-length quantiles + CMS/TopK tokens — see
+    text-length quantiles + SpaceSaving top tokens — see
     verbs.sketch.sketch_profile) as ONE custom stateful streaming
     operator: the group's MultiSketch is the state, each micro-batch
     folds in vectorized, and the operator emits the group's running
@@ -235,7 +235,7 @@ def stream_sketch_profile(
     commutative, late/out-of-order pages need no special handling.
 
     State per group = 2^p (or the sparse list below m/4) + O(kll_k) +
-    depth*width*8 bytes — independent of rows seen, the property that
+    ceil(cms_width/e) tokens — independent of rows seen, the property that
     makes a 10^12-page continuous ingest viable. Output mode "update";
     columns by..., url_distinct_est, url_distinct_bound, len_p50/p90/
     p99, top_tokens (comma-joined, scalar-friendly), n_batches.

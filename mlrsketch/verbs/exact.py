@@ -110,6 +110,13 @@ def _keep(out: DataFrame, cols: Sequence[str]) -> DataFrame:
     return out.select(*[c for c in out.columns if c in cols])
 
 
+def _ieee_div(num: Column, den: Column) -> Column:
+    """``num / den`` as IEEE doubles divide, as Miller's float division
+    does: x/0 is +-Inf by the sign of x and 0/0 is NaN, where Spark's
+    ANSI mode raises DIVIDE_BY_ZERO. A null operand gives null."""
+    return F.when(den != 0, num / den).when(den == 0, num * F.lit(float("inf")))
+
+
 def _percentile_exact(col: str, p: float, interpolated: bool) -> Column:
     """Miller percentile semantics (pkg/bifs/percentiles.go:193-208).
 
@@ -708,7 +715,7 @@ def fraction(
         )
         num = F.sum(value).over(w_in) + F.coalesce(carry, F.lit(0.0))
         name = f"{value}_cumulative_{suffix}"
-        out = ordered.withColumn(name, F.when(present, scale * num / F.lit(total)))
+        out = ordered.withColumn(name, F.when(present, _ieee_div(scale * num, F.lit(total))))
         return _keep(out, [*df.columns, name])
 
     if by:
@@ -727,11 +734,11 @@ def fraction(
         )
         num = F.sum(value).over(w_cum)
         out = df.withColumn(
-            f"{value}_cumulative_{suffix}", F.when(present, scale * num / denom)
+            f"{value}_cumulative_{suffix}", F.when(present, _ieee_div(scale * num, denom))
         )
     else:
         out = df.withColumn(
-            f"{value}_{suffix}", F.when(present, scale * F.col(value) / denom)
+            f"{value}_{suffix}", F.when(present, _ieee_div(scale * F.col(value), denom))
         )
     return out.drop("__total") if not by else out
 

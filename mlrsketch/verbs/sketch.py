@@ -32,7 +32,7 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -58,7 +58,6 @@ from mlrsketch.sketches import (
     theta_intersect,
     theta_union,
 )
-from mlrsketch.sketches.hashing import hash_strings
 from mlrsketch.sketches.multi import MultiSketch
 
 
@@ -88,8 +87,28 @@ _PROFILE_FIELDS = [
 ]
 
 
+# The JVM-side hash of a null value: xxhash64(null) is its seed, which
+# the distinct sketches would count as one more value, so a null maps to
+# this reserved code instead and the Python update drops it.
+_NULL_HASH = 0
+
+
+def _hash_of(c: Column) -> Column:
+    return F.when(c.isNull(), F.lit(_NULL_HASH).cast("long")).otherwise(F.xxhash64(c.cast("string")))
+
+
+def _value_hashes(pdf: pd.DataFrame, col: str = "__h") -> np.ndarray:
+    """The hashes in `col` of the batch's non-null values."""
+    h = pdf[col].to_numpy(dtype=np.int64)
+    return h[h != _NULL_HASH]
+
+
 def _update_hashes(sk, pdf: pd.DataFrame) -> None:
-    sk.update_hashes(pdf["__h"].to_numpy(dtype=np.int64))
+    sk.update_hashes(_value_hashes(pdf))
+
+
+def _prepare_hash(df: DataFrame, of: str) -> DataFrame:
+    return df.withColumn("__h", _hash_of(F.col(of)))
 
 
 def _distinct_rows(sk) -> pd.DataFrame:
@@ -101,6 +120,7 @@ def _hll_spec(p: int) -> SketchSpec:
         make=lambda: HyperLogLog(p=p),
         update=_update_hashes,
         finalize=_distinct_rows,
+        prepare=_prepare_hash,
         deserialize=HyperLogLog.deserialize,
     )
 
@@ -110,6 +130,7 @@ def _theta_spec(k: int) -> SketchSpec:
         make=lambda: ThetaSketch(k=k),
         update=_update_hashes,
         finalize=_distinct_rows,
+        prepare=_prepare_hash,
         deserialize=ThetaSketch.deserialize,
     )
 
@@ -157,15 +178,13 @@ def _add_tokens(sk: TopKSketch, texts, sep: str = " ") -> None:
     """Fold the `sep`-split tokens of a batch of texts into `sk`; null
     texts are skipped. Counter over split lists beats pandas
     explode+value_counts ~2.3x (no 10^6-element object Series
-    materialized), and only the DISTINCT tokens are hashed."""
+    materialized), and the summary merges only the DISTINCT tokens."""
     c: Counter = Counter()
     for t in texts:
         if t is not None:
             c.update(t.split(sep))
     if c:
-        vals = np.array(list(c.keys()), dtype=object)
-        cnts = np.fromiter(c.values(), dtype=np.int64, count=len(c))
-        sk.update_hashed(vals, hash_strings(vals), cnts)
+        sk.update_values(list(c), list(c.values()))
 
 
 def _profile_spec(
@@ -189,7 +208,7 @@ def _profile_spec(
         )
 
     def update(sk: MultiSketch, pdf: pd.DataFrame) -> None:
-        sk.parts["hll"].update_hashes(pdf["__h_url"].to_numpy(dtype=np.int64))
+        sk.parts["hll"].update_hashes(_value_hashes(pdf, "__h_url"))
         tl = pdf["__tl"].to_numpy(dtype=np.float64)
         tl = tl[~np.isnan(tl)]  # null text has no length
         if tl.size:
@@ -220,7 +239,7 @@ def _profile_spec(
         finalize=finalize,
         internal_cols=("__h_url", "__tl", "__text"),
         prepare=lambda df, of: (
-            df.withColumn("__h_url", F.xxhash64(F.col(url_col).cast("string")))
+            df.withColumn("__h_url", _hash_of(F.col(url_col)))
             .withColumn("__tl", F.length(F.col(text_col)).cast("double"))
             .withColumn("__text", F.col(text_col).cast("string"))
         ),
@@ -344,7 +363,7 @@ def quantiles_kll(
 
 
 # ---------------------------------------------------------------------------
-# heavy hitters (Count-Min + candidates)
+# heavy hitters (mergeable SpaceSaving summary)
 # ---------------------------------------------------------------------------
 
 
@@ -360,29 +379,24 @@ def most_frequent_cms(
 ) -> DataFrame:
     """Approximate `most-frequent -f of -b k [-g by]`.
 
-    Output: by..., value:string, count_est:long — top-k per group ranked
-    by CMS estimate (overcount <= e/width * N with prob 1-e^-depth).
+    Output: by..., value:string, count_est:long — top-k per group from a
+    SpaceSaving summary of max(capacity, ceil(width/e)) values
+    (sketches/cms.py): exact while the group has at most that many
+    distinct values, else never an undercount and over by at most
+    N/size <= e/width * N, deterministically. `depth` is unused. Null
+    values are not counted.
     """
 
     def update(sk: TopKSketch, pdf: pd.DataFrame) -> None:
-        # pre-aggregate the Arrow batch; __h is the JVM xxhash64 of the
-        # value, so no string is ever hashed in Python on this path
-        g = pdf.groupby(["__v", "__h"], sort=False).size()
-        idx = g.index
-        sk.update_hashed(
-            idx.get_level_values(0).to_numpy(),
-            idx.get_level_values(1).to_numpy(dtype=np.int64),
-            g.to_numpy(dtype=np.int64),
-        )
+        g = pdf["__v"].value_counts(sort=False)  # pre-aggregated; nulls dropped
+        sk.update_values(g.index.to_numpy(), g.to_numpy(dtype=np.int64))
 
     spec = SketchSpec(
         make=lambda: TopKSketch(depth=depth, width=width, capacity=capacity),
         update=update,
         finalize=_top_rows(k),
-        internal_cols=("__v", "__h"),
-        prepare=lambda df, of: df.withColumn("__v", F.col(of).cast("string")).withColumn(
-            "__h", F.xxhash64(F.col("__v"))
-        ),
+        internal_cols=("__v",),
+        prepare=lambda df, of: df.withColumn("__v", F.col(of).cast("string")),
         deserialize=TopKSketch.deserialize,
     )
     schema = _schema(df, by, _TOP_FIELDS)
@@ -410,8 +424,8 @@ def token_top_k(
     1M docs that round-trip alone costs ~16s vs ~2s for shipping each
     text once (measured, BENCH_scaling). Instead the document string
     crosses Arrow once and tokenization happens inside the batch
-    (`_add_tokens`), with only the ~vocab-sized distinct set hashed per
-    batch. Same estimates, same bounds.
+    (`_add_tokens`), with only the ~vocab-sized distinct set merged into
+    the summary per batch. Same estimates, same bounds.
     """
     spec = SketchSpec(
         make=lambda: TopKSketch(depth=depth, width=width, capacity=capacity),
@@ -443,14 +457,16 @@ def sketch_profile(
     salted: bool = False,
 ) -> DataFrame:
     """The north-star page profile in ONE scan: HLL distinct urls, KLL
-    text-length quantiles, and CMS top tokens — Miller `summary`
+    text-length quantiles, and SpaceSaving top tokens — Miller `summary`
     (reference: pkg/transformers/summary.go:77,237-246 computes every
     stat in one streaming pass) rebuilt as a fused MultiSketch plan.
 
     At 100 TB the table scan dominates; fusing k sketches into one
     partial/final plan reads the data once instead of k times and pays
     one job's scheduling cost instead of k. State per (partition x
-    group) = 2^p + O(k_kll) + depth*width*8 bytes (~700 KB default).
+    group) = 2^p + O(k_kll) + at most ceil(cms_width/e) tokens with their
+    counts (~60 KB by default, less for a small group);
+    `cms_depth` is unused.
 
     Output: by..., url_distinct_est, url_distinct_bound, len_p50/p90/
     p99, len_rank_bound, top_tokens:array<string>, top_counts:array<long>.

@@ -12,8 +12,9 @@ Spark answers on the deterministic pages table:
   estimated quantile value vs the sketch's own bound (KLL: Apache
   DataSketches' 99% fit 2.296/k^0.9723 = 0.0133 at k=200; t-digest:
   6*q(1-q)/delta at the median = 0.0075 at delta=200)
-- CMS top-k: estimated counts vs exact counts of the same tokens
-  (overcount-only, <= eps*N with eps = e/width at prob 1-e^-depth)
+- SpaceSaving top-k: estimated counts vs exact counts of the same
+  tokens (never an undercount; overcount <= N/size, deterministically,
+  for a summary of size = max(capacity, ceil(width/e)) tokens)
 - Bloom (m bits, k hashes): observed FPR on definitely-new keys vs
   (1-e^{-kn/m})^k
 
@@ -38,6 +39,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from mlrsketch import pages as pg  # noqa: E402
 from mlrsketch.session import get_spark  # noqa: E402
+from mlrsketch.sketches import TopKSketch  # noqa: E402
 from mlrsketch.verbs import exact as ev  # noqa: E402
 from mlrsketch.verbs import sketch as sv  # noqa: E402
 
@@ -121,11 +123,12 @@ def main() -> None:
                 f"| {label} | {q} | {est:.0f} | {r_:.5f} | {err:.5f} | {bound:.5f} |"
             )
 
-    # -- CMS top-k ---------------------------------------------------------
-    depth, width, k = 5, 16384, 20
+    # -- SpaceSaving top-k ---------------------------------------------------
+    width, capacity, k = 16384, 2048, 20
+    size = TopKSketch(width=width, capacity=capacity).capacity
     topk = [
         (r["value"], r["count_est"])
-        for r in sv.token_top_k(pages, "text", k=k, depth=depth, width=width).collect()
+        for r in sv.token_top_k(pages, "text", k=k, width=width, capacity=capacity).collect()
     ]
     tok = pages.select(F.explode(F.split("text", " ")).alias("t"))
     total_tokens = tok.count()
@@ -136,24 +139,22 @@ def main() -> None:
         .agg(F.count("*").alias("cnt"))
         .collect()
     }
-    eps = math.e / width
+    bound = total_tokens / size
     lines = blocks["cms"] = [
-        f"## Count-Min + heavy hitters — top-{k} tokens", "",
-        f"total tokens N = {total_tokens:,}; overcount bound eps*N = "
-        f"{eps * total_tokens:,.0f} (eps = e/width = {eps:.2e}, "
-        f"P(violation) <= e^-depth = {math.exp(-depth):.3f})", "",
-        "| token | est | exact | overcount | <= eps*N |",
+        f"## SpaceSaving heavy hitters — top-{k} tokens", "",
+        f"total tokens N = {total_tokens:,}; summary size = max(capacity, "
+        f"ceil(width/e)) = {size:,} tokens; overcount bound N/size = {bound:,.0f}, "
+        "deterministic (no failure probability)", "",
+        "| token | est | exact | overcount | <= N/size |",
         "|---|---|---|---|---|"]
-    worst = 0
-    for v, est in topk[:10]:
-        ex = exact_counts.get(v, 0)
-        over = est - ex
-        worst = max(worst, over)
-        lines.append(f"| {v} | {est:,} | {ex:,} | {over:,} | "
-                     f"{'yes' if over <= eps * total_tokens else 'NO'} |")
+    overs = [est - exact_counts.get(v, 0) for v, est in topk]
+    worst = max(overs, default=0)
+    for (v, est), over in list(zip(topk, overs))[:10]:
+        lines.append(f"| {v} | {est:,} | {est - over:,} | {over:,} | "
+                     f"{'yes' if 0 <= over <= bound else 'NO'} |")
     lines.append("")
     lines.append(f"max overcount across top-{k}: {worst:,} "
-                 f"(never undercounts: CMS point estimates are upper bounds)")
+                 f"(never undercounts: SpaceSaving estimates are upper bounds)")
 
     # -- Bloom -------------------------------------------------------------
     n_bits, n_hashes = 1 << 22, 7

@@ -1,11 +1,12 @@
 """Property tests: merge associativity + partition invariance (north rule).
 
-For HLL/CMS/Bloom the merged STATE must be bit-identical regardless of
+For HLL/theta/Bloom the merged STATE must be bit-identical regardless of
 how the input is split or the merges are parenthesized (register-max,
-matrix-add and bit-or are associative+commutative). For t-digest/KLL,
+KMV union and bit-or are associative+commutative). For t-digest/KLL,
 internal layout depends on merge order, so the property is estimate
 stability: every split's quantile estimates stay within the error bound
-of the exact answer.
+of the exact answer. The SpaceSaving top-k summary is bit-identical
+while untrimmed and keeps its deterministic N/capacity bound after.
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from mlrsketch.sketches import KLL, BloomFilter, CountMinSketch, HyperLogLog, TDigest
+from mlrsketch.sketches import KLL, BloomFilter, HyperLogLog, TDigest, TopKSketch
 from mlrsketch.sketches.hashing import splitmix64
 
 
@@ -63,18 +64,54 @@ def test_hll_associativity(seed):
     assert ab_c.serialize() == a_bc.serialize()
 
 
-@settings(max_examples=15, deadline=None)
-@given(seed=st.integers(0, 10_000), k=st.integers(2, 6))
-def test_cms_partition_invariance(seed, k):
-    data = _hashes(4_000)
-    whole = CountMinSketch(depth=3, width=256)
-    whole.update_hashes(data)
-    merged = None
-    for chunk in _random_split(data, seed, k):
-        c = CountMinSketch(depth=3, width=256)
-        c.update_hashes(chunk)
-        merged = c if merged is None else merged.merge(c)
+def _tokens(n: int, seed: int) -> np.ndarray:
+    """n Zipf-distributed tokens (a few heavy, a long tail of onesies)."""
+    return np.array([f"t{v}" for v in np.random.default_rng(seed).zipf(1.3, n)], dtype=object)
+
+
+def _topk_merge_tree(chunks: list[np.ndarray], capacity: int, seed: int) -> TopKSketch:
+    """One summary per chunk (each fed in two batches, through serde),
+    folded in a random merge tree."""
+    rng = np.random.default_rng(seed)
+    parts = []
+    for chunk in chunks:
+        sk = TopKSketch(capacity=capacity)
+        half = len(chunk) // 2
+        sk.update_values(chunk[:half])
+        sk.update_values(chunk[half:])
+        parts.append(TopKSketch.deserialize(sk.serialize()))
+    while len(parts) > 1:
+        i, j = sorted(rng.choice(len(parts), 2, replace=False))
+        b, a = parts.pop(j), parts.pop(i)
+        parts.append(a.merge(b))
+    return parts[0]
+
+
+@settings(max_examples=20, deadline=None)
+@given(seed=st.integers(0, 10_000), k=st.integers(2, 8))
+def test_topk_untrimmed_merge_is_bit_identical(seed, k):
+    data = _tokens(3_000, seed)
+    whole = TopKSketch(capacity=4_096)
+    whole.update_values(data)
+    assert not whole.trimmed
+    merged = _topk_merge_tree(_random_split(data, seed, k), 4_096, seed)
     assert merged.serialize() == whole.serialize()
+
+
+@settings(max_examples=30, deadline=None)
+@given(seed=st.integers(0, 10_000), k=st.integers(1, 8), capacity=st.integers(4, 64))
+def test_topk_trimmed_bound_under_splits_and_merge_orders(seed, k, capacity):
+    data = _tokens(3_000, seed)
+    vals, cnts = np.unique(data, return_counts=True)
+    truth = dict(zip(vals.tolist(), cnts.tolist()))
+    merged = _topk_merge_tree(_random_split(data, seed, k), capacity, seed)
+    n = len(data)
+    assert merged.trimmed and merged.total == n
+    for v, est in merged.counts.items():
+        assert truth[v] <= est <= truth[v] + n / capacity, (v, est, truth[v])
+    for v, c in truth.items():
+        if c > n / capacity:
+            assert v in merged.counts, (v, c)
 
 
 @settings(max_examples=15, deadline=None)
@@ -221,15 +258,13 @@ def test_hll_serde_roundtrip_both_modes():
 
 
 def test_topk_untrimmed_counts_exact_and_flag_survives_serde():
-    from mlrsketch.sketches.cms import TopKSketch
-
     sk = TopKSketch(capacity=64)
     vals = np.array([f"t{i % 10}" for i in range(100)], dtype=object)
     for v in vals:
         sk.update_values(np.array([v], dtype=object))
     assert not sk.trimmed
     top = sk.top(10)
-    assert all(c == 10 for _, c in top)  # exact, no CMS overcount
+    assert all(c == 10 for _, c in top)  # exact, no overcount
     assert [v for v, _ in top] == sorted(f"t{i}" for i in range(10))
     back = TopKSketch.deserialize(sk.serialize())
     assert back.trimmed is False and back.top(10) == top

@@ -225,7 +225,7 @@ def test_global_fold_partitioning_invariant(lengths_df, global_base, n_parts):
         rank_err = abs(np.searchsorted(s, got["profile"][0][f"len_{name}"]) / s.size - q)
         assert rank_err <= 2.0 / 200 + 0.01, ("kll", q, rank_err)
 
-    # Count-Min never undercounts and overcounts by at most e/width * N
+    # top-k never undercounts and overcounts by at most e/width * N
     tok = lengths_df.select(F.explode(F.split("text", " ")).alias("t"))
     exact = {r["t"]: r["count"] for r in tok.groupBy("t").count().collect()}
     n_tokens = sum(exact.values())
@@ -253,3 +253,39 @@ def test_build_bloom_empty_input(pages_df):
     bloom = sv.build_bloom(pages_df.filter(F.lit(False)), "url", n_bits=1 << 12, n_hashes=3)
     assert (bloom.n_bits, bloom.n_hashes, bloom.n_inserted) == (1 << 12, 3, 0)
     assert not bloom.bits.any()
+
+
+def test_topk_null_and_void_groups_stay_apart(spark):
+    """A null group and a "" group are two groups with their own counts;
+    a null text or value is skipped, a "" value is counted."""
+    docs = spark.createDataFrame(
+        [(None, "a b a"), ("", "c c"), (None, "a"), ("", None), ("x", "")], "g string, text string"
+    )
+    got = {}
+    for r in sv.token_top_k(docs, "text", k=5, by=["g"]).collect():
+        got.setdefault(r["g"], []).append((r["value"], r["count_est"]))
+    assert got == {None: [("a", 3), ("b", 1)], "": [("c", 2)], "x": [("", 1)]}
+
+    vals = spark.createDataFrame(
+        [(None, "p"), (None, "p"), ("", "q"), ("", None), (None, "q"), ("", "")], "g string, v string"
+    )
+    got = {}
+    for r in sv.most_frequent_cms(vals, "v", k=5, by=["g"]).collect():
+        got.setdefault(r["g"], []).append((r["value"], r["count_est"]))
+    assert got == {None: [("p", 2), ("q", 1)], "": [("", 1), ("q", 1)]}
+
+
+def test_distinct_sketches_do_not_count_null(spark):
+    """A null value is not a distinct value: (a, b, null, null) holds 2,
+    and an all-null group holds 0, in HLL, theta and the profile."""
+    df = spark.createDataFrame(
+        [("g", "a"), ("g", "b"), ("g", None), ("g", None), ("n", None), ("n", None)],
+        "g string, url string",
+    ).withColumn("text", F.lit("t"))
+    for verb in (sv.count_distinct_hll, sv.count_distinct_theta):
+        assert [tuple(r) for r in verb(df, "url").collect()] == [(2.0, 0.0)], verb
+        got = {r["g"]: r["distinct_count_est"] for r in verb(df, "url", ["g"]).collect()}
+        assert got == {"g": 2.0, "n": 0.0}, verb
+    assert sv.sketch_profile(df, "url", "text").first()["url_distinct_est"] == 2.0
+    got = {r["g"]: r["url_distinct_est"] for r in sv.sketch_profile(df, "url", "text", by=["g"]).collect()}
+    assert got == {"g": 2.0, "n": 0.0}

@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from mlrsketch.sketches import KLL, BloomFilter, CountMinSketch, HyperLogLog, TDigest, TopKSketch
+from mlrsketch.sketches import KLL, BloomFilter, HyperLogLog, TDigest, TopKSketch
 from mlrsketch.sketches.hashing import hash_strings, splitmix64
 
 
@@ -58,36 +58,6 @@ class TestHLL:
         assert abs(h.estimate() - 1_000) / 1_000 <= 3 * h.error_bound() + 0.01
 
 
-class TestCMS:
-    def test_never_undercounts_and_bound(self, rng):
-        c = CountMinSketch(depth=5, width=2048)
-        vals = rng.zipf(1.3, 50_000)
-        u, cnt = np.unique(vals, return_counts=True)
-        hs = splitmix64(u.astype(np.uint64)).view(np.int64)
-        c.update_hashes(hs, cnt)
-        est = c.estimate_hashes(hs)
-        assert (est >= cnt).all()
-        eps, delta = c.error_bound()
-        frac_over = ((est - cnt) > eps * c.total).mean()
-        assert frac_over <= delta + 0.01
-
-    def test_merge_bit_identical(self):
-        full = CountMinSketch(width=512)
-        a, b = CountMinSketch(width=512), CountMinSketch(width=512)
-        h1, h2 = _hashes(1000), _hashes(1000, offset=1000)
-        full.update_hashes(h1)
-        full.update_hashes(h2)
-        a.update_hashes(h1)
-        b.update_hashes(h2)
-        assert a.merge(b).serialize() == full.serialize()
-
-    def test_serde(self):
-        c = CountMinSketch(width=256)
-        c.update_hashes(_hashes(100))
-        c2 = CountMinSketch.deserialize(c.serialize())
-        assert (c2.table == c.table).all() and c2.total == c.total
-
-
 class TestTopK:
     def test_exact_on_skewed(self, rng):
         vals = np.array([f"tok{v}" for v in rng.zipf(1.5, 20_000)])
@@ -106,46 +76,26 @@ class TestTopK:
         tk.update_values(np.array(["a", "b", "a"]))
         assert TopKSketch.deserialize(tk.serialize()).top(2) == tk.top(2)
 
-    def test_legacy_state_formats_still_load(self):
-        """v1 triples and pre-v1 pairs deserialize (err=0 / rehashed)."""
-        tk = TopKSketch(width=256, capacity=16)
-        tk.update_values(np.array(["a", "b", "a"]))
-        blob = tk.serialize()
-        # rebuild a v1-style payload: strip the err field, old magic
-        import struct as _struct
+    def test_values_with_separator_bytes_round_trip(self):
+        tk = TopKSketch(capacity=16)
+        vals = np.array(["a\x00b", "c\x01d", "\x00", "é\x01", "", "a\x00b"], dtype=object)
+        tk.update_values(vals)
+        back = TopKSketch.deserialize(tk.serialize())
+        assert back.counts == {"a\x00b": 2, "c\x01d": 1, "\x00": 1, "é\x01": 1, "": 1}
+        assert back.serialize() == tk.serialize()
 
-        cms_bytes = tk.cms.serialize()
-        v1_cands = "\x00".join(
-            f"{k}\x01{cnt}\x01{h}" for k, (cnt, h, _e) in sorted(tk.candidates.items())
-        ).encode()
-        v1 = (
-            b"TOPK"
-            + _struct.pack("<III", tk.capacity, len(cms_bytes), len(v1_cands))
-            + cms_bytes
-            + v1_cands
-        )
-        assert TopKSketch.deserialize(v1).top(2) == tk.top(2)
-        pairs = "\x00".join(
-            f"{k}\x01{cnt}" for k, (cnt, _h, _e) in sorted(tk.candidates.items())
-        ).encode()
-        v0 = (
-            b"TOPK"
-            + _struct.pack("<III", tk.capacity, len(cms_bytes), len(pairs))
-            + cms_bytes
-            + pairs
-        )
-        assert [v for v, _ in TopKSketch.deserialize(v0).top(2)] == [
-            v for v, _ in tk.top(2)
-        ]
-        assert TopKSketch.deserialize(blob).candidates == tk.candidates
+    @pytest.mark.parametrize("magic", [b"TOPK", b"TPK2", b"TPK3"])
+    def test_retired_state_formats_are_refused_by_name(self, magic):
+        with pytest.raises(ValueError, match=magic.decode()):
+            TopKSketch.deserialize(magic + bytes(16))
 
     def test_spacesaving_late_heavy_hitter_survives(self, rng):
         """Property from the SpaceSaving bound: any item with true count
-        > N/capacity + eps*N is in the candidate set at stream end —
-        even when it arrives entirely AFTER capacity churn — and its
-        (est, err) bounds bracket the true count."""
-        capacity, width = 64, 8192
-        tk = TopKSketch(width=width, capacity=capacity, depth=5)
+        > N/capacity is kept at stream end — even when it arrives
+        entirely AFTER capacity churn — and its estimate lies in
+        [true, true + N/capacity]."""
+        capacity = 64
+        tk = TopKSketch(capacity=capacity)
         # phase 1: heavy churn — 20k distinct onesie tokens in batches
         for b in range(20):
             vals = np.array([f"noise{b}_{i}" for i in range(1000)], dtype=object)
@@ -160,22 +110,21 @@ class TestTopK:
             hot_total += 400
             tk.update_values(vals, cnts)
         n_total = 20_000 + 10 * 500 + hot_total
-        eps = tk.cms.error_bound()[0]
-        assert hot_total > n_total / capacity + eps * n_total  # premise
-        bounds = {v: (est, err) for v, est, err in tk.top_with_bounds(capacity)}
-        assert "HOT" in bounds, "late heavy hitter was evicted"
-        est, err = bounds["HOT"]
-        assert est >= hot_total, "CMS must never undercount"
-        assert est - err <= hot_total, "error bound must bracket truth"
+        assert tk.trimmed and tk.total == n_total
+        assert hot_total > n_total / capacity  # premise
+        assert "HOT" in tk.counts, "late heavy hitter was evicted"
+        est = tk.counts["HOT"]
+        assert est >= hot_total, "SpaceSaving must never undercount"
+        assert est <= hot_total + n_total / capacity, "overcount beyond N/capacity"
 
     def test_spacesaving_bound_holds_under_merge(self, rng):
-        """est-err <= true <= est for every reported item after merging
-        shards that each churned through capacity independently."""
+        """true <= est <= true + N/capacity for every reported item after
+        merging shards that each churned through capacity independently."""
         capacity = 32
         truth: dict[str, int] = {}
         shards = []
         for s in range(4):
-            tk = TopKSketch(width=4096, capacity=capacity, depth=5)
+            tk = TopKSketch(capacity=capacity)
             vals = [f"s{s}n{i}" for i in range(2000)] + ["alpha", "beta"] * 50
             rng.shuffle(vals)
             u, cnt = np.unique(np.array(vals, dtype=object), return_counts=True)
@@ -186,9 +135,12 @@ class TestTopK:
         merged = shards[0]
         for s in shards[1:]:
             merged.merge(s)
-        for v, est, err in merged.top_with_bounds(10):
-            assert est >= truth.get(v, 0)
-            assert est - err <= truth.get(v, 0), (v, est, err, truth.get(v, 0))
+        n_total = sum(truth.values())
+        assert merged.trimmed and merged.total == n_total
+        top = merged.top(10)
+        assert {"alpha", "beta"} <= {v for v, _ in top}
+        for v, est in top:
+            assert truth[v] <= est <= truth[v] + n_total / capacity, (v, est, truth[v])
 
 
 class TestBloom:

@@ -75,6 +75,36 @@ def test_fraction_sums_to_one(spark, abixy):
         assert abs(r["s"] - 1.0) < 1e-9
 
 
+_FRACTION_ZERO_SUM = {
+    # verb call -> expected output by ord: a sum of 0 divides as IEEE
+    # doubles (x/0 is +-Inf by the sign of x, 0/0 NaN); absent stays absent
+    "ungrouped": (lambda d, p: ev.fraction(d, "x", percent=p),
+                  {1: "inf", 2: "-inf", 3: None, 4: "nan"}),
+    "grouped": (lambda d, p: ev.fraction(d, "x", by=["g"], percent=p),
+                {1: "inf", 2: "-inf", 3: None, 4: "nan"}),
+    "cumulative": (lambda d, p: ev.fraction(d, "x", cumulative=True, order_by=["ord"], percent=p),
+                   {1: "inf", 2: "nan", 3: None, 4: "nan"}),
+    "cumulative_grouped": (lambda d, p: ev.fraction(
+        d, "x", by=["g"], cumulative=True, order_by=["ord"], percent=p),
+        {1: "inf", 2: "nan", 3: None, 4: "nan"}),
+}
+
+
+@pytest.mark.parametrize("percent", [False, True])
+@pytest.mark.parametrize("case", sorted(_FRACTION_ZERO_SUM))
+def test_fraction_zero_sum_divides_as_doubles(spark, case, percent):
+    """Values 1, -1, absent in group g and 0 in group h: every sum is 0.
+    Spark's ANSI mode raised DIVIDE_BY_ZERO here."""
+    df = spark.createDataFrame(
+        [(1, "g", 1.0), (2, "g", -1.0), (3, "g", None), (4, "h", 0.0)], "ord long, g string, x double"
+    )
+    run, want = _FRACTION_ZERO_SUM[case]
+    out = run(df, percent)
+    col = [c for c in out.columns if c.startswith("x_")][0]
+    got = {r["ord"]: None if r[col] is None else str(r[col]) for r in out.collect()}
+    assert got == want, (col, got)
+
+
 def test_step_running_sum(spark, abixy):
     out = ev.step(abixy, ["rsum", "counter", "delta"], ["x"], order_by=["i"]).orderBy("i").collect()
     acc = 0.0

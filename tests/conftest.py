@@ -22,6 +22,19 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def no_coalesce(spark):
+    """AQE coalescing off for one test, restored afterwards. At test sizes
+    AQE folds a range exchange into ONE partition, so every row would land
+    in one ``__pid`` and a cross-partition carry would never run; with it
+    off, the range pass spreads rows over ``spark.sql.shuffle.partitions``."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, old)
+
+
 @pytest.fixture(scope="session")
 def rng():
     return np.random.default_rng(42)

@@ -19,6 +19,16 @@ from pyspark.sql import functions as F
 
 from mlrsketch.verbs import exact as ev
 
+# every test here runs with AQE coalescing off, so the range pass spreads
+# its rows over several partitions (see the no_coalesce fixture)
+pytestmark = pytest.mark.usefixtures("no_coalesce")
+
+
+def pid_sizes(df, order_by):
+    """Rows per non-empty range partition of ``df`` in ``order_by`` order."""
+    tagged = ev.global_row_number(df, order_by, out="__rn", keep_pid=True)
+    return sorted(r["count"] for r in tagged.groupBy("__pid").count().collect())
+
 
 @pytest.fixture(scope="module")
 def data(spark):
@@ -33,6 +43,13 @@ def data(spark):
     df = spark.createDataFrame(rows, "ord long, x double, y double")
     # spread across many partitions so cross-partition carries matter
     return df.repartition(16).cache()
+
+
+def test_range_pass_spans_partitions(data):
+    """The naive references below check cross-partition carries only if
+    the range pass really puts the 500 rows in several partitions."""
+    sizes = pid_sizes(data, ["ord"])
+    assert len(sizes) > 1 and sum(sizes) == 500, sizes
 
 
 def collect_map(df, key="ord"):
@@ -214,6 +231,8 @@ def test_step_lag_spans_multiple_tiny_partitions(spark):
     edge map must resolve it, not just the immediate neighbor."""
     rows = [(i, float(i * 10)) for i in range(12)]
     df = spark.createDataFrame(rows, "ord long, x double").repartition(8)
+    sizes = pid_sizes(df, ["ord"])
+    assert len(sizes) > 1 and max(sizes) <= 2, sizes
     got = collect_map(
         ev.step(df, ["shift_lag_3", "shift_lead_2", "delta"], ["x"],
                 order_by=["ord"])

@@ -124,13 +124,12 @@ def test_split_write_by_group(spark, tmp_path):
     assert spark.read.parquet(path).count() == 30
 
 
-def test_global_row_number_distributed(spark):
+def test_global_row_number_distributed(spark, no_coalesce):
     # range-partitioned two-pass numbering == single-window numbering
     df = spark.range(0, 5000).withColumn("k", (F.col("id") * 37) % 5000).repartition(16)
-    got = {
-        r["k"]: r["n"]
-        for r in ev.global_row_number(df.select("k"), ["k"]).collect()
-    }
+    rows = ev.global_row_number(df.select("k"), ["k"], keep_pid=True).collect()
+    assert len({r["__pid"] for r in rows}) > 1  # the offsets cross partitions
+    got = {r["k"]: r["n"] for r in rows}
     assert len(got) == 5000
     assert all(got[k] == k + 1 for k in range(0, 5000, 613))
 

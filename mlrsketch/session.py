@@ -127,20 +127,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    out = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = spark.read.parquet(path)
-    return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 # ---------------------------------------------------------------------------
 # Iceberg integration (north rule: "over Iceberg tables ... at 10^12-
 # document scale"). The sandbox ships no Iceberg runtime jar, so the

@@ -17,19 +17,23 @@ semantics where they differ from SQL defaults:
 All of these are shuffle-aware: grouped aggregations are single-shuffle
 hash aggregations with map-side partial aggregation (Catalyst supplies
 partial_/final split automatically); window verbs shuffle once on the
-partition keys. The ungrouped order-dependent verbs collect one small
-row per range partition to the driver (``_pid_prefix``); no verb
-collects rows.
+partition keys. Each ungrouped order-dependent verb (fraction -c,
+cat -n, decimate, rank, fill-down, step, slwin, stats1 -s/-w,
+percentiles_rank) makes one range pass (``_range_pass``), collects one
+small row per range partition to the driver once (``_pid_prefix``;
+percentiles_rank one per partition and group) and reads the folded
+per-partition carry back with one ``_lookup``; no verb collects rows.
 """
 
 from __future__ import annotations
 
 import itertools
+import operator
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType, StringType,
+from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
 from mlrsketch.session import python_task
@@ -45,10 +49,12 @@ def _cols(c: str | Sequence[str]) -> list[str]:
 
 # ---------------------------------------------------------------------------
 # partition carries: the ungrouped order-dependent verbs (fraction -c,
-# cat -n, rank, fill-down, step, stats1 -s) range-partition the rows,
-# compute within each partition, and add back what earlier partitions
-# contribute. _pid_prefix folds that carry on the driver; _lookup is the
-# one way a driver-computed value gets back into the rows.
+# cat -n, rank, fill-down, step, slwin, stats1 -s) take the same three
+# steps. (1) _range_pass range-partitions the rows on the order keys; each
+# partition then computes within itself. (2) _pid_prefix collects one
+# small row per partition and folds, on the driver, what earlier (and, for
+# step, later) partitions contribute to it. (3) _lookup reads that one
+# per-partition value (a struct when a verb needs several) back by __pid.
 # ---------------------------------------------------------------------------
 
 # A literal map inlines every entry into the Catalyst plan at each use,
@@ -61,28 +67,65 @@ def _cols(c: str | Sequence[str]) -> list[str]:
 # 0.6 vs 0.6 + 0.8 s (BASELINE.md). Past the crossover, a lookup joins.
 _LOOKUP_LITERAL_MAX = 300
 _lookup_ids = itertools.count()
+_LOCAL_BITS = 33  # monotonically_increasing_id: (partition << 33) | row index
+
+
+def _range_pass(df: DataFrame, order: Sequence[Column]) -> DataFrame:
+    """``df`` range-partitioned on ``order``, sorted within each partition
+    and pinned, with ``__mid`` (ascending in ``order``) and ``__pid``.
+
+    Range sampling is nondeterministic on recompute, so the placement is
+    materialized before the collect and the final scan both read it:
+    localCheckpoint (not persist) lets the ContextCleaner release the
+    blocks once the result is garbage-collected. Over the pinned, sorted
+    blocks, monotonically_increasing_id encodes the partition and the
+    partition-local row index, so both are projections (_local_index),
+    not a window that would re-exchange the payload."""
+    ordered = df.repartitionByRange(*order).sortWithinPartitions(*order)
+    tagged = ordered.localCheckpoint(eager=True).withColumn(
+        "__mid", F.monotonically_increasing_id()
+    )
+    return tagged.withColumn("__pid", F.shiftright("__mid", _LOCAL_BITS).cast("int"))
+
+
+def _local_index() -> Column:
+    """A _range_pass row's 0-based index within its partition. The 33 bits
+    cap a partition at 8.6e9 rows, far above a 128 MB split."""
+    return F.col("__mid").bitwiseAND(F.lit((1 << _LOCAL_BITS) - 1))
 
 
 def _pid_prefix(tagged: DataFrame, aggs: Sequence[Column], fold, init):
-    """Exclusive prefix of a per-partition aggregate, folded on the driver.
+    """Per-partition values folded on the driver from ONE collect.
 
-    Runs ONE ``tagged.groupBy("__pid").agg(*aggs).collect()`` and walks
-    the rows in ascending ``__pid`` order with ``acc = fold(acc, row)``
-    from ``init``. Returns ``({pid: acc before that pid}, final acc)``.
-    The fold stays on the driver: a ``Window.orderBy("__pid")`` has no
-    partition keys and would funnel every row through one task."""
-    carries, acc = {}, init
-    rows = tagged.groupBy("__pid").agg(*aggs).collect()
-    for r in sorted(rows, key=lambda r: r["__pid"]):
-        carries[r["__pid"]] = acc
-        acc = fold(acc, r)
-    return carries, acc
+    Runs ``tagged.groupBy("__pid").agg(*aggs).collect()`` and walks the
+    rows in ascending ``__pid`` order: ``value, acc = fold(acc, row,
+    later)`` from ``init``, where ``later`` iterates the rows of the later
+    partitions (step's gates and leads read ahead; the other verbs ignore
+    it). Returns ``({pid: value}, final acc)``; ``value`` is usually the
+    exclusive prefix, the acc before that partition. The fold stays on the
+    driver: a ``Window.orderBy("__pid")`` has no partition keys and would
+    funnel every row through one task."""
+    rows = sorted(tagged.groupBy("__pid").agg(*aggs).collect(), key=lambda r: r["__pid"])
+    table, acc = {}, init
+    for i, r in enumerate(rows):
+        table[r["__pid"]], acc = fold(acc, r, (rows[j] for j in range(i + 1, len(rows))))
+    return table, acc
+
+
+def _lit(v) -> Column:
+    """A literal of a driver value: a tuple is a struct, a list an array."""
+    if isinstance(v, tuple):
+        return F.struct(*[_lit(x) for x in v])
+    if isinstance(v, list):
+        return F.array(*[_lit(x) for x in v])
+    return F.lit(v)
 
 
 def _lookup(df: DataFrame, key: Column, table: dict, dtype) -> tuple[DataFrame, Column]:
     """``(df, table[key])``: a driver-built table read back per row, null
-    off the table. Up to _LOOKUP_LITERAL_MAX entries it is a literal map
-    of ``dtype`` values (an empty table is a typed null); past it, ``df``
+    off the table. A ``StructType`` dtype takes tuple values (arrays as
+    lists). Up to _LOOKUP_LITERAL_MAX entries it is a literal map of
+    ``dtype`` values (an empty table is a typed null); past it, ``df``
     gains a broadcast left-join against the table on ``key``, and the
     returned column reads the joined value. Join columns are named
     ``__lk<n>``; callers select their output columns at the end."""
@@ -92,7 +135,7 @@ def _lookup(df: DataFrame, key: Column, table: dict, dtype) -> tuple[DataFrame, 
         # one cast of the whole value array: a cast per entry doubles
         # the expressions Catalyst walks while building the plan
         keys = F.array(*[F.lit(k) for k in table])
-        values = F.array(*[F.lit(v) for v in table.values()]).cast(ArrayType(dtype))
+        values = F.array(*[_lit(v) for v in table.values()]).cast(ArrayType(dtype))
         return df, F.map_from_arrays(keys, values)[key]
     name = f"__lk{next(_lookup_ids)}"
     tagged = df.withColumn(name, key)
@@ -101,6 +144,36 @@ def _lookup(df: DataFrame, key: Column, table: dict, dtype) -> tuple[DataFrame, 
     ])
     rows = df.sparkSession.createDataFrame(list(table.items()), schema)
     return tagged.join(F.broadcast(rows), name, "left"), F.col(name + "v")
+
+
+def _carry(tagged: DataFrame, aggs: Sequence[Column], fold, init, dtype):
+    """Steps 2 and 3 on a _range_pass frame: the _pid_prefix table read
+    back with one _lookup on ``__pid``. Returns ``(frame, value, acc)``."""
+    table, acc = _pid_prefix(tagged, aggs, fold, init)
+    tagged, value = _lookup(tagged, F.col("__pid"), table, dtype)
+    return tagged, value, acc
+
+
+def _numbered(tagged: DataFrame, aggs=(), fold=None, init=None, fields=()):
+    """global_row_number's row offsets for a _range_pass frame, with the
+    caller's own per-partition aggregates and fold on the same collect.
+
+    ``fold(acc, row, later)`` returns ``(tuple of fields, acc)`` as in
+    _pid_prefix; ``row["__rows"]`` is the partition's row count. Rows gain
+    ``__n``, the 1-up row number in range order. Returns ``(frame, carry,
+    n_total, acc)``: ``carry`` is the partition's struct of ``off`` (rows
+    before it) and the caller's ``fields``."""
+
+    def with_offset(acc, r, later):
+        n, inner = acc
+        value, inner = fold(inner, r, later) if fold else ((), None)
+        return (n, *value), (n + r["__rows"], inner)
+
+    tagged, carry, (n_total, acc) = _carry(
+        tagged, [F.count(F.lit(1)).alias("__rows"), *aggs], with_offset, (0, init),
+        StructType([StructField("off", LongType()), *fields]),
+    )
+    return tagged.withColumn("__n", _local_index() + 1 + carry["off"]), carry, n_total, acc
 
 
 def _keep(out: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -115,23 +188,6 @@ def _ieee_div(num: Column, den: Column) -> Column:
     does: x/0 is +-Inf by the sign of x and 0/0 is NaN, where Spark's
     ANSI mode raises DIVIDE_BY_ZERO. A null operand gives null."""
     return F.when(den != 0, num / den).when(den == 0, num * F.lit(float("inf")))
-
-
-def _percentile_exact(col: str, p: float, interpolated: bool) -> Column:
-    """Miller percentile semantics (pkg/bifs/percentiles.go:193-208).
-
-    Non-interpolated: sorted_values[clamp(int(p/100*n), 0, n-1)].
-    Interpolated: R type 7 == SQL percentile_cont == Spark `percentile`.
-    """
-    if interpolated:
-        return F.expr(f"percentile({col}, {p / 100.0})")
-    # sort_array(collect_list(x))[int(p*n/100)] — element-valued, so it
-    # matches any exact oracle bit-for-bit. Fine at test scale; at 100 TB
-    # use the sketch variants in mlrsketch.verbs.sketch instead.
-    arr = F.array_sort(F.collect_list(F.col(col)))
-    n = F.size(arr)
-    idx = F.least(F.greatest(F.floor(F.lit(p / 100.0) * n).cast("int"), F.lit(0)), n - 1)
-    return F.get(arr, idx)
 
 
 # percentile-family accumulators share ONE keeper per field, exactly like
@@ -692,28 +748,18 @@ def fraction(
 
     if cumulative and not by:
         # ungrouped -c: an empty-partition window funnels EVERY row
-        # through one task — fatal at 100x. Range-partition on the
-        # stream order, per-partition prefix sums, then add each
-        # partition's carry (_pid_prefix + _lookup). One range exchange,
-        # no SinglePartition stage; the global denominator is the fold's
-        # grand total.
-        order_cols = _cols(order_by)
-        ordered = df.repartitionByRange(
-            *[F.col(c) for c in order_cols]
-        ).withColumn("__pid", F.spark_partition_id())
-        # pin the (sampling-nondeterministic) range placement before the
-        # two dependent subplans — see global_row_number
-        ordered = ordered.localCheckpoint(eager=True)
-        carries, total = _pid_prefix(
-            ordered, [F.sum(value).alias("s")], lambda acc, r: acc + float(r["s"] or 0.0), 0.0
+        # through one task — fatal at 100x. Range pass, per-partition
+        # prefix sums, plus each partition's carry of the earlier sums
+        # (_carry); the global denominator is the fold's grand total.
+        ordered = _range_pass(df, [F.col(c) for c in _cols(order_by)])
+        ordered, carry, total = _carry(
+            ordered, [F.sum(value).alias("s")],
+            lambda acc, r, _: (acc, acc + float(r["s"] or 0.0)), 0.0, DoubleType(),
         )
-        ordered, carry = _lookup(ordered, F.col("__pid"), carries, DoubleType())
-        w_in = (
-            Window.partitionBy("__pid")
-            .orderBy(*[F.col(c) for c in order_cols])
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        w_in = Window.partitionBy("__pid").orderBy("__mid").rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
         )
-        num = F.sum(value).over(w_in) + F.coalesce(carry, F.lit(0.0))
+        num = F.sum(value).over(w_in) + carry
         name = f"{value}_cumulative_{suffix}"
         out = ordered.withColumn(name, F.when(present, _ieee_div(scale * num, F.lit(total))))
         return _keep(out, [*df.columns, name])
@@ -934,47 +980,15 @@ def global_row_number(
     """Distributed 1-up row number in a global ``order_by`` order.
 
     A bare ``Window.orderBy`` funnels EVERY row through one task — fatal
-    at 100 TB. Classic two-pass instead: range-partition on the order
-    keys (so partition p holds a contiguous key range), number rows
-    within each partition, then add each partition's start offset
-    (the exclusive prefix of per-partition counts: _pid_prefix, read
-    back with _lookup). One range-exchange, no single-task stage.
+    at 100 TB. Classic two-pass instead (_numbered): range-partition on
+    the order keys, so partition p holds a contiguous key range; number
+    rows within each partition by their _local_index; add each
+    partition's start offset, the exclusive prefix of per-partition
+    counts. One range exchange, one collect, no window, no single-task
+    stage. step and slwin fold their own carries into the same collect.
     """
-    order_by = _cols(order_by)
-    ordered = df.repartitionByRange(
-        *[F.col(c) for c in order_by]
-    ).sortWithinPartitions(*[F.col(c) for c in order_by])
-    # Materialize the partition assignment before reuse in two subplans:
-    # range sampling is nondeterministic on recompute, so both the counts
-    # collect and the downstream scan must read the SAME placement.
-    # localCheckpoint (not persist) so the blocks are released by the
-    # ContextCleaner when the result DataFrame is garbage-collected,
-    # instead of pinning executor storage for the session's lifetime.
-    ordered = ordered.localCheckpoint(eager=True)
-    # Number WITHOUT a window: monotonically_increasing_id over the
-    # checkpointed (sorted, placement-fixed) blocks encodes
-    # (partition << 33) | local-row-index, so the local index and pid
-    # are pure projections — a Window.partitionBy(pid) here would
-    # re-exchange the full payload by pid hash just to compute what the
-    # physical layout already knows. The 33-bit local index caps a
-    # partition at 8.6e9 rows — three orders of magnitude above a sane
-    # 128 MB-split partition even at 100 TB. Consumers that window over __pid
-    # (prefix sums, boundary lags) still pay their one clustering
-    # exchange; __n-only consumers (cat -n, decimate, sample) now pay
-    # only the range exchange.
-    tagged = ordered.withColumn("__mid", F.monotonically_increasing_id())
-    pid_of = F.shiftright("__mid", 33).cast("int")
-    offsets, _ = _pid_prefix(
-        tagged.withColumn("__pid", pid_of),
-        [F.count(F.lit(1)).alias("cnt")],
-        lambda acc, r: acc + r["cnt"],
-        0,
-    )
-    tagged, off = _lookup(tagged, pid_of, offsets, LongType())
-    local = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)).cast("long")
-    numbered = tagged.withColumn(
-        out, local + 1 + F.coalesce(off, F.lit(0))
-    ).withColumn("__pid", pid_of)
+    tagged = _range_pass(df, [F.col(c) for c in _cols(order_by)])
+    numbered = _numbered(tagged)[0].withColumnRenamed("__n", out)
     return _keep(numbered, [*df.columns, out, *(["__pid"] if keep_pid else [])])
 
 
@@ -1013,12 +1027,7 @@ def percentiles_rank(
     d = df.select(*by, F.col(value).cast("double").alias("__v")).filter(
         F.col("__v").isNotNull()
     )
-    ordered = d.repartitionByRange(
-        *[F.col(c) for c in by], F.col("__v")
-    ).sortWithinPartitions(*[F.col(c) for c in by], F.col("__v"))
-    ordered = ordered.localCheckpoint(eager=True)  # pin range placement
-    tagged = ordered.withColumn("__mid", F.monotonically_increasing_id())
-    pid_of = F.shiftright("__mid", 33).cast("int")
+    tagged = _range_pass(d, [*[F.col(c) for c in by], F.col("__v")])
     # length-prefixed parts keep the key injective: a null (absent)
     # group, a "" (void) group and values holding the separator stay apart
     gkey = F.concat(*[
@@ -1028,8 +1037,8 @@ def percentiles_rank(
     # per-(partition, group) row counts; groups are contiguous in the
     # range-sorted layout, so these yield both start indexes and offsets
     pg = (
-        tagged.groupBy(pid_of.alias("__pid"), gkey.alias("__g"))
-        .agg(F.count(F.lit(1)).alias("__c"), F.min("__mid").alias("__m0"))
+        tagged.groupBy("__pid", gkey.alias("__g"))
+        .agg(F.count(F.lit(1)).alias("__c"), F.min(_local_index()).alias("__i0"))
         .collect()
     )
     # adj(pid, g): global in-group rank = partition-local row index
@@ -1041,13 +1050,12 @@ def percentiles_rank(
     for r in sorted(pg, key=lambda r: r["__pid"]):
         g = r["__g"]
         run = n_of.get(g, 0)
-        adj[f"{r['__pid']}|{g}"] = run - (r["__m0"] & ((1 << 33) - 1))
+        adj[f"{r['__pid']}|{g}"] = run - r["__i0"]
         n_of[g] = run + r["__c"]
     tagged, adj_of = _lookup(
-        tagged, F.concat(pid_of.cast("string"), F.lit("|"), gkey), adj, LongType()
+        tagged, F.concat(F.col("__pid").cast("string"), F.lit("|"), gkey), adj, LongType()
     )
-    local = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)).cast("long")
-    ranked = tagged.withColumn("__rk", local + adj_of)
+    ranked = tagged.withColumn("__rk", _local_index() + adj_of)
     # needed 0-based ranks per group with interpolation weights
     need_rows = []
     for g, n in n_of.items():
@@ -1157,10 +1165,11 @@ def fill_down(
     Grouped: one hash-partitioned window. Ungrouped: range-partition on
     the order key, fill within each partition, and resolve the
     cross-partition carry (the last rememberable value of every
-    PREVIOUS partition) with _pid_prefix (a last-non-null fold over one
-    tiny row per partition) and _lookup, instead of an empty-partition
-    window that serializes all rows through one task."""
-    fields = _cols(fields)
+    PREVIOUS partition) with one _carry (a last-non-null fold over one
+    tiny row per partition, read back as one struct of every field),
+    instead of an empty-partition window that serializes all rows
+    through one task."""
+    fields = list(dict.fromkeys(_cols(fields)))
     order_by = _cols(order_by)
     str_cols = {c for c, t in df.dtypes if t == "string"}
 
@@ -1190,31 +1199,25 @@ def fill_down(
         return df.withColumns(
             {f: fill_expr(f, F.last(memcol(f), ignorenulls=True).over(w)) for f in fields}
         )
-    ordered = df.repartitionByRange(*[F.col(c) for c in order_by]).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    ordered = ordered.localCheckpoint(eager=True)
     # per-partition last rememberable value of each field, in order:
-    # max_by(f, ord-when-rememberable) — one tiny row per partition
-    lastkey = F.struct(*[F.col(c) for c in order_by])
-    carries, _ = _pid_prefix(
+    # max_by(f, __mid-when-rememberable); the fold keeps the latest one
+    ordered = _range_pass(df, [F.col(c) for c in order_by])
+    ordered, carry, _ = _carry(
         ordered,
-        [F.max_by(memcol(f), F.when(memcol(f).isNotNull(), lastkey)).alias(f) for f in fields],
-        lambda acc, r: {f: acc[f] if r[f] is None else r[f] for f in fields},
-        dict.fromkeys(fields),
+        [F.max_by(memcol(f), F.when(memcol(f).isNotNull(), F.col("__mid"))).alias(f)
+         for f in fields],
+        lambda acc, r, _: (acc, tuple(a if r[f] is None else r[f] for a, f in zip(acc, fields))),
+        (None,) * len(fields),
+        StructType([StructField(f, df.schema[f].dataType) for f in fields]),
     )
-    w_in = (
-        Window.partitionBy("__pid")
-        .orderBy(*[F.col(c) for c in order_by])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w_in = Window.partitionBy("__pid").orderBy("__mid").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
-    updates = {}
-    for f in fields:
-        table = {pid: acc[f] for pid, acc in carries.items() if acc[f] is not None}
-        ordered, carry = _lookup(ordered, F.col("__pid"), table, df.schema[f].dataType)
-        filled = F.last(memcol(f), ignorenulls=True).over(w_in)
-        updates[f] = fill_expr(f, F.coalesce(filled, carry))
-    return _keep(ordered.withColumns(updates), df.columns)
+    filled = {
+        f: fill_expr(f, F.coalesce(F.last(memcol(f), ignorenulls=True).over(w_in), carry[f]))
+        for f in fields
+    }
+    return _keep(ordered.withColumns(filled), df.columns)
 
 
 def clean_whitespace(df: DataFrame, fields: Sequence[str] | None = None) -> DataFrame:
@@ -1660,12 +1663,12 @@ def step(
     Grouped: one shuffle on the group keys; all steppers share the same
     window, so Catalyst plans a single Window exec. Ungrouped: an
     empty-partition window would single-task every row, so the work is
-    decomposed scale-safely instead — bounded lookback (shift/delta/
-    ratio/lead) is an in-partition window over the distributed global
-    row number plus a ``_lookup`` of the partition-edge rows; running
-    aggregates (rsum/rprod/counter/ewma) run per-range-partition with
-    the tiny cross-partition carries folded on the driver
-    (``_pid_prefix``, read back with ``_lookup``).
+    decomposed scale-safely instead (_step_ungrouped) — every window
+    (gate, lag, lead, running aggregate) runs within a range partition,
+    and what a partition needs from its neighbours (its row offset,
+    the gated values before it, the raw values after it and the
+    running carries) comes from one driver collect and returns as one
+    struct per partition.
     """
     by = _cols(by)
     values = _cols(values)
@@ -1781,248 +1784,209 @@ def _step_ungrouped(
 ) -> DataFrame:
     """Ungrouped steppers without a single-task window (see step()).
 
-    Implements the same het event model as the grouped path: gates come
-    from the ingested record (a +f_max presence lookup), prev-caches lag
-    over the gated value sequence, and running state skips gated-off
-    events. slwin composes separately via slwin() (the caller handles
-    it); a het input mixing slwin with forward steppers ungrouped would
-    need a shared f_max across both — no reference golden exercises
-    that combination, documented here for honesty.
+    The same het event model as the grouped path, over one range pass
+    and ONE collect (_numbered). A row's gate reads the record f_max
+    ahead, which for a partition's last f_max rows lies in a later
+    partition. So each partition sends its row count, its first f_max
+    and last max(K, f_max) raw values of each field (K the largest lag;
+    window values at its first and last row) and its running aggregates
+    over the rows whose gate it knows. The driver resolves the other
+    gates from the later partitions' heads, chains partitions shorter
+    than the edges, and returns one struct per partition: its offset and
+    size and, per field, the K gated values before it (lags), the f_max
+    raw values after it (gates, leads) and the running carries. slwin
+    composes separately via slwin() (the caller handles it); a het input
+    mixing slwin with forward steppers ungrouped would need a shared
+    f_max across both — no reference golden exercises that combination.
     """
     if slwins:
         raise ValueError("ungrouped slwin: compose slwin() after step()")
     values = _cols(values)
     steppers = _cols(steppers)
-    numbered = global_row_number(df, _cols(order_by), out="__n", keep_pid=True)
-    w_ord = Window.partitionBy("__pid").orderBy("__n")
-    w_all = Window.partitionBy("__pid")
-
-    # ---- het gate: presence of each field on the record f_max ahead
-    # (the 'ingested' record of this center's event); tail rows with no
-    # record f_max ahead gate on their own presence (drain events)
-    if f_max:
-        # the gate is a LEAD of presence flags by f_max — in-partition
-        # window lead plus a _lookup of the first f_max rows per
-        # partition, keyed by global __n (same no-exchange shape as the
-        # lag path below). n_total (the global-tail gate bound) rides
-        # along as the per-partition max __n on the same edge rows — no
-        # separate count() job.
-        edge_gate = (
-            numbered.withColumn("__fpos", F.row_number().over(w_ord))
-            .withColumn("__pmax", F.max("__n").over(w_all))
-            .filter(F.col("__fpos") <= f_max)
-            .select(
-                "__n", "__pmax",
-                *[F.col(f).isNotNull().alias(f"__p_{f}") for f in values],
-            )
-            .collect()
-        )
-        n_total = max((r["__pmax"] for r in edge_gate), default=0)
-        vbase = numbered.withColumn(
-            "__gpos", F.row_number().over(w_ord)
-        ).withColumn("__gsz", F.count(F.lit(1)).over(w_all))
-        gates = {}
-        for f in values:
-            vbase, ahead = _lookup(
-                vbase, F.col("__n") + f_max,
-                {r["__n"]: r[f"__p_{f}"] for r in edge_gate}, BooleanType(),
-            )
-            gp = F.when(
-                F.col("__gpos") <= F.col("__gsz") - f_max,
-                F.lead(F.col(f).isNotNull(), f_max).over(w_ord),
-            ).otherwise(ahead)
-            gates[f] = F.when(
-                F.col("__n") + f_max <= F.lit(n_total),
-                F.coalesce(gp, F.lit(False)),
-            ).otherwise(F.col(f).isNotNull())
-    else:
-        vbase = numbered
-        gates = {f: F.col(f).isNotNull() for f in values}
-    # the value each event pushes into prev-caches (null when gated off)
-    vbase = vbase.withColumns(
-        {f"__v_{f}": F.when(gates[f], F.col(f)) for f in values}
-    )
-
-    # ---- bounded lookback/lookahead WITHOUT an exchange: the frame is
-    # already range-partitioned with __n contiguous per partition, so a
-    # lag/lead is an in-partition window function for every row deeper
-    # than k from the partition edge; only the ≤k edge rows per
-    # partition need a value from a neighboring partition, and those
-    # source rows (the last/first k of each partition) are a tiny
-    # driver-collected table keyed by global __n, read back with
-    # _lookup. An equi-join on __n would hash-shuffle the FULL payload
-    # twice per distinct offset.
-    lag_offsets: set[int] = set()
-    lead_offsets: set[int] = set()
     for s in steppers:
-        base_name, k = _parse_stepper(s)
-        if base_name in ("shift", "shift_lag", "delta", "ratio"):
-            lag_offsets.add(k)
-        elif base_name == "shift_lead":
-            lead_offsets.add(k)
-    out = vbase
-    if lag_offsets or lead_offsets:
-        out = out.withColumn("__pos", F.row_number().over(w_ord)).withColumn(
-            "__psz", F.count(F.lit(1)).over(w_all)
-        )
-    if lag_offsets:
-        # prev-caches see the GATED sequence (clearPrevValue pushes nil)
-        edge_tail = (
-            vbase.withColumn(
-                "__rpos", F.row_number().over(w_all.orderBy(F.col("__n").desc()))
-            )
-            .filter(F.col("__rpos") <= max(lag_offsets))
-            .select("__n", *[f"__v_{f}" for f in values])
-            .collect()
-        )
-        for k in sorted(lag_offsets):
-            for f in values:
-                out, boundary = _lookup(
-                    out, F.col("__n") - k,
-                    {r["__n"]: r[f"__v_{f}"] for r in edge_tail}, df.schema[f].dataType,
-                )
-                out = out.withColumn(
-                    f"__lag{k}_{f}",
-                    F.when(
-                        F.col("__pos") > k,
-                        F.lag(f"__v_{f}", k).over(w_ord),
-                    ).otherwise(boundary),
-                )
-    if lead_offsets:
-        # shift_lead reads the raw next-record value (step.go:1087-1106)
-        edge_head = (
-            numbered.withColumn("__fpos", F.row_number().over(w_ord))
-            .filter(F.col("__fpos") <= max(lead_offsets))
-            .select("__n", *values)
-            .collect()
-        )
-        for k in sorted(lead_offsets):
-            for f in values:
-                out, boundary = _lookup(
-                    out, F.col("__n") + k,
-                    {r["__n"]: r[f] for r in edge_head}, df.schema[f].dataType,
-                )
-                out = out.withColumn(
-                    f"__lead{k}_{f}",
-                    F.when(
-                        F.col("__pos") <= F.col("__psz") - k,
-                        F.lead(f, k).over(w_ord),
-                    ).otherwise(boundary),
-                )
-
-    # ---- running aggregates: per-partition prefix + the carry of all
-    # earlier partitions (_pid_prefix over one tiny row per partition)
-    run_pid = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        if _parse_stepper(s)[0] not in (
+            "shift", "shift_lag", "shift_lead", "delta", "ratio", "rsum", "rprod", "counter",
+            "from-first",
+        ):
+            raise ValueError(f"unknown stepper: {s}")
+    lag_ks = sorted({k for b, k in map(_parse_stepper, steppers)
+                     if b in ("shift", "shift_lag", "delta", "ratio")})
+    k_lag = max(lag_ks, default=0)
+    k_tail = max(k_lag, f_max)
     ew_labels = [(a, ("%g" % a).replace(".", "_")) for a in ewma_alphas]
-    carries, total = {}, {}
-    if any(s in ("rsum", "rprod", "counter", "from-first") for s in steppers) or ew_labels:
-        agg_list = []
-        for f in values:
-            vc = F.col(f"__v_{f}")
-            nn_key = F.when(vc.isNotNull(), F.col("__n"))  # non-null order key
-            agg_list += [
-                F.sum(vc).alias(f"__sum_{f}"),
-                F.count(vc).alias(f"__cnt_{f}"),
-                F.product(vc).alias(f"__prod_{f}"),
-                F.min_by(vc, nn_key).alias(f"__first_{f}"),
+    running = bool(ew_labels) or any(s in ("rsum", "rprod", "counter", "from-first") for s in steppers)
+    w_ord = Window.partitionBy("__pid").orderBy("__mid")
+    run = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    dtypes = {f: df.schema[f].dataType for f in values}
+    sum_t = {f: df.select(F.sum(f)).schema[0].dataType for f in values} if running else {}
+
+    # ---- executor side: edge windows and the running aggregates over the
+    # rows whose gate is in-partition (all but the last f_max; a
+    # gated-off or absent value is null)
+    tagged = _range_pass(df, [F.col(c) for c in _cols(order_by)])
+    edges = {}
+    for f in values:
+        c = F.col(f)
+        if k_tail:
+            edges[f"__tail_{f}"] = F.array(*[
+                F.lag(c, i).over(w_ord) if i else c for i in reversed(range(k_tail))
+            ])
+        if f_max:
+            edges[f"__head_{f}"] = F.array(*[
+                F.lead(c, i).over(w_ord) if i else c for i in range(f_max)
+            ])
+            edges[f"__iv_{f}"] = F.when(F.lead(c.isNotNull(), f_max).over(w_ord), c)
+        else:
+            edges[f"__iv_{f}"] = c
+    tagged = tagged.withColumns(edges)
+    aggs = []
+    for f in values:
+        aggs += [F.max_by(f"__tail_{f}", "__mid").alias(f"__tail_{f}")] if k_tail else []
+        aggs += [F.min_by(f"__head_{f}", "__mid").alias(f"__head_{f}")] if f_max else []
+        iv = F.col(f"__iv_{f}")
+        if running:
+            aggs += [
+                F.sum(iv).alias(f"__sum_{f}"), F.count(iv).alias(f"__cnt_{f}"),
+                F.product(iv).alias(f"__prod_{f}"),
+                F.min_by(iv, F.when(iv.isNotNull(), F.col("__mid"))).alias(f"__first_{f}"),
             ]
-            # index among gated-present values (the reference recursion
-            # only advances on those)
-            if ew_labels:
-                out = out.withColumn(f"__i_{f}", F.count(vc).over(run_pid))
-            for alpha, label in ew_labels:
-                scaled = vc * F.pow(F.lit(1.0 - alpha), -F.col(f"__i_{f}"))
-                out = out.withColumn(f"__sc_{f}_{label}", scaled)
-                out = out.withColumn(
-                    f"__s1_{f}_{label}", F.sum(f"__sc_{f}_{label}").over(run_pid)
-                )
-                agg_list += [
-                    F.max_by(F.col(f"__s1_{f}_{label}"), nn_key).alias(f"__S_{f}_{label}"),
-                    F.min_by(F.col(f"__sc_{f}_{label}"), nn_key).alias(f"__FS_{f}_{label}"),
-                ]
+        for alpha, label in ew_labels:
+            # the in-partition ewma recursion's scaled sum (see step())
+            scaled = iv * F.pow(F.lit(1.0 - alpha), -F.count(iv).over(run))
+            tagged = tagged.withColumn(f"__isc_{f}_{label}", scaled)
+            aggs.append(F.sum(f"__isc_{f}_{label}").alias(f"__S_{f}_{label}"))
 
-        def fold(acc: dict, r) -> dict:
-            nxt = {}
+    # ---- driver side: one struct per partition; acc keys are its field names
+    fields = [StructField("rows", LongType())]
+    init = {}
+    for f in values:
+        fields += [StructField(f"lag_{f}", ArrayType(dtypes[f]))] if k_lag else []
+        fields += [StructField(f"ahead_{f}", ArrayType(dtypes[f]))] if f_max else []
+        init |= {f"lag_{f}": [], f"first_{f}": None}
+        if running:
+            fields += [StructField(f"rsum_{f}", sum_t[f]), StructField(f"counter_{f}", LongType()),
+                       StructField(f"rprod_{f}", DoubleType())]
+            init |= {f"rsum_{f}": None, f"counter_{f}": 0, f"rprod_{f}": 1.0}
+        for _a, label in ew_labels:
+            fields.append(StructField(f"ewma_{f}_{label}", DoubleType()))
+            init[f"ewma_{f}_{label}"] = None
+
+    def fold(acc, r, later):
+        cnt, nxt = r["__rows"], dict(acc)
+        ahead, seen = {f: [] for f in values}, 0
+        for q in later if f_max else ():  # the heads of the next partitions, up to f_max rows
+            if seen >= f_max:
+                break
+            seen += q["__rows"]
             for f in values:
-                n_p, s, p = r[f"__cnt_{f}"], r[f"__sum_{f}"], r[f"__prod_{f}"]
-                # None until a partition has a value: no literal 0 that
-                # would mistype a double or decimal carry
-                nxt["rsum", f] = s if acc["rsum", f] is None else acc["rsum", f] + (s or 0)
-                nxt["counter", f] = acc["counter", f] + n_p
-                nxt["rprod", f] = acc["rprod", f] * (1.0 if p is None else p)
-                first = acc["from-first", f]
-                nxt["from-first", f] = r[f"__first_{f}"] if first is None and n_p else first
-                # ewma: partition 0 uses Miller's y1=x1 seeding; later
-                # partitions take the previous partition's final y as
-                # init c: y_t = beta^t * (alpha*s1 + c), t = per-partition
-                # count of gated-present values (the recursion skips the rest)
-                for alpha, label in ew_labels:
-                    beta, c_prev = 1.0 - alpha, acc["ewma", f, label]
-                    S, FS = r[f"__S_{f}_{label}"], r[f"__FS_{f}_{label}"]
-                    if n_p and S is not None:
-                        if c_prev is None:  # first partition with a present value
-                            c_prev = (beta ** n_p) * (alpha * S + (1 - alpha) * FS)
-                        else:
-                            c_prev = (beta ** n_p) * (alpha * S) + (beta ** n_p) * c_prev
-                    nxt["ewma", f, label] = c_prev
-            return nxt
-
-        init = {}
+                ahead[f] += q[f"__head_{f}"][:q["__rows"]]
         for f in values:
-            init.update({("rsum", f): None, ("counter", f): 0, ("rprod", f): 1.0,
-                         ("from-first", f): None})
-            init.update({("ewma", f, label): None for _a, label in ew_labels})
-        carries, total = _pid_prefix(out, agg_list, fold, init)
+            ahead[f] = ahead[f][:f_max]
+            tail = r[f"__tail_{f}"][k_tail - min(cnt, k_tail):] if k_tail else []
+            seq = tail + ahead[f]
+            # a tail row's event ingests the record f_max ahead, or at the
+            # stream's end (no such record) the row itself
+            gated = [
+                x if seq[i + f_max if i + f_max < len(seq) else i] is not None else None
+                for i, x in enumerate(tail)
+            ]
+            nxt[f"lag_{f}"] = (gated[::-1] + acc[f"lag_{f}"])[:k_lag]  # nearest first
+            if not running:
+                continue
+            # the partition's values in order: the in-partition aggregates
+            # cover all but the last f_max rows, whose gates resolve here
+            late = [x for x in gated[len(tail) - min(cnt, f_max):] if x is not None]
+            first = r[f"__first_{f}"]
+            for x in ([r[f"__sum_{f}"]] if r[f"__sum_{f}"] is not None else []) + late:
+                nxt[f"rsum_{f}"] = x if nxt[f"rsum_{f}"] is None else nxt[f"rsum_{f}"] + x
+            nxt[f"counter_{f}"] += r[f"__cnt_{f}"] + len(late)
+            for x in [1.0 if r[f"__prod_{f}"] is None else r[f"__prod_{f}"], *late]:
+                nxt[f"rprod_{f}"] *= float(x)
+            if nxt[f"first_{f}"] is None:
+                nxt[f"first_{f}"] = first if first is not None else next(iter(late), None)
+            for alpha, label in ew_labels:
+                # y_t = beta^t (alpha S + y_0), y_0 = the carry, or at the
+                # first present value (S's seed) that value itself
+                beta, y, t = 1.0 - alpha, acc[f"ewma_{f}_{label}"], r[f"__cnt_{f}"]
+                if t:
+                    y = beta ** t * (alpha * r[f"__S_{f}_{label}"] + float(first if y is None else y))
+                for x in map(float, late):
+                    y = x if y is None else alpha * x + beta * y
+                nxt[f"ewma_{f}_{label}"] = y
+        struct = acc | {"rows": cnt} | {f"ahead_{f}": ahead[f] for f in values}
+        return tuple(struct[fld.name] for fld in fields), nxt
 
-    def carry(key, dtype) -> Column:
-        nonlocal out
-        out, c = _lookup(
-            out, F.col("__pid"), {pid: acc[key] for pid, acc in carries.items()}, dtype
+    out, carry, n_total, total = _numbered(tagged, aggs, fold, init, fields)
+    out = out.withColumn("__pos", _local_index() + 1)
+    pos, cnt, n = F.col("__pos"), carry["rows"], F.col("__n")
+
+    def edge(f, k) -> Column:  # the raw value k rows after a tail row, from the next partitions
+        return F.get(carry[f"ahead_{f}"], (pos + k - cnt - 1).cast("int"))
+
+    for f in values:
+        c = F.col(f)
+        gate = c.isNotNull()
+        if f_max:
+            # het gate: the presence of the record f_max ahead (the
+            # 'ingested' record of this center's event); rows with no
+            # record f_max ahead gate on their own presence (drain events)
+            ahead_present = F.when(
+                pos + f_max <= cnt, F.lead(c.isNotNull(), f_max).over(w_ord)
+            ).otherwise(edge(f, f_max).isNotNull())
+            gate = F.when(n + f_max <= F.lit(n_total), ahead_present).otherwise(c.isNotNull())
+        out = out.withColumn(f"__g_{f}", gate)
+    # the value each event pushes into prev-caches (null when gated off)
+    out = out.withColumns({f"__v_{f}": F.when(F.col(f"__g_{f}"), F.col(f)) for f in values})
+    # prev-caches see the GATED sequence (clearPrevValue pushes nil); a
+    # row within k of its partition's start reads the carried lags
+    out = out.withColumns({
+        f"__lag{k}_{f}": F.when(pos > k, F.lag(f"__v_{f}", k).over(w_ord)).otherwise(
+            F.get(carry[f"lag_{f}"], (F.lit(k) - pos).cast("int"))
         )
-        return c
+        for f in values for k in lag_ks
+    })
+    for f in values:
+        if ew_labels:  # index among gated-present values
+            out = out.withColumn(f"__i_{f}", F.count(f"__v_{f}").over(run))
+        for alpha, label in ew_labels:
+            scaled = F.col(f"__v_{f}") * F.pow(F.lit(1.0 - alpha), -F.col(f"__i_{f}"))
+            out = out.withColumn(f"__sc_{f}_{label}", scaled)
+            out = out.withColumn(f"__s1_{f}_{label}", F.sum(f"__sc_{f}_{label}").over(run))
 
     result_cols = {}
     for f in values:
         c = F.col(f)
         vc = F.col(f"__v_{f}")
-        gate = gates[f]
+        gate = F.col(f"__g_{f}")
         present = gate & c.isNotNull()
         for s in steppers:
             base_name, k = _parse_stepper(s)
             name = f"{f}_{s.replace('-', '_')}"
+            lag = F.col(f"__lag{k}_{f}")
             if base_name in ("shift", "shift_lag"):
-                result_cols[name] = F.when(gate, F.col(f"__lag{k}_{f}"))
+                result_cols[name] = F.when(gate, lag)
             elif base_name == "shift_lead":
-                result_cols[name] = F.when(gate, F.col(f"__lead{k}_{f}"))
+                # shift_lead reads the raw next-record value (step.go:1087-1106)
+                nxt = F.when(pos + k <= cnt, F.lead(c, k).over(w_ord)).otherwise(edge(f, k))
+                result_cols[name] = F.when(gate, nxt)
             elif base_name == "delta":
-                result_cols[name] = F.when(
-                    present, F.coalesce(c - F.col(f"__lag{k}_{f}"), F.lit(0))
-                )
+                result_cols[name] = F.when(present, F.coalesce(c - lag, F.lit(0)))
             elif base_name == "ratio":
-                result_cols[name] = F.when(
-                    present, F.coalesce(c / F.col(f"__lag{k}_{f}"), F.lit(1.0))
-                )
+                result_cols[name] = F.when(present, F.coalesce(c / lag, F.lit(1.0)))
             elif s == "rsum":
-                sum_t = out.select(F.sum(vc)).schema[0].dataType
-                e = F.sum(vc).over(run_pid) + F.coalesce(carry((s, f), sum_t), F.lit(0))
+                e = F.sum(vc).over(run) + F.coalesce(carry[f"rsum_{f}"], F.lit(0))
                 result_cols[name] = F.when(present, e)
             elif s == "counter":
-                e = F.count(vc).over(run_pid) + F.coalesce(carry((s, f), LongType()), F.lit(0))
-                result_cols[name] = F.when(present, e)
+                result_cols[name] = F.when(present, F.count(vc).over(run) + carry[f"counter_{f}"])
             elif s == "rprod":
-                e = F.product(vc).over(run_pid) * F.coalesce(
-                    carry((s, f), DoubleType()), F.lit(1.0)
-                )
-                result_cols[name] = F.when(present, e)
+                result_cols[name] = F.when(present, F.product(vc).over(run) * carry[f"rprod_{f}"])
             elif s == "from-first":
-                result_cols[name] = F.when(present, c - F.lit(total[s, f]))
-            else:
-                raise ValueError(f"unknown stepper: {s}")
+                result_cols[name] = F.when(present, c - F.lit(total[f"first_{f}"]))
         for alpha, label in ew_labels:
             beta = 1.0 - alpha
-            carry_expr = carry(("ewma", f, label), DoubleType())
+            carry_expr = carry[f"ewma_{f}_{label}"]
             s1 = F.col(f"__s1_{f}_{label}")
-            fs = F.first(F.col(f"__sc_{f}_{label}"), ignorenulls=True).over(run_pid)
+            fs = F.first(F.col(f"__sc_{f}_{label}"), ignorenulls=True).over(run)
             i_f = F.col(f"__i_{f}")
             seeded = F.pow(F.lit(beta), i_f) * (
                 F.lit(alpha) * s1 + F.lit(1 - alpha) * fs
@@ -2057,34 +2021,26 @@ def slwin(
     utils/window_keeper.go:12-60): centered sliding-window mean.
 
     Grouped: hash-partitioned frame window. Ungrouped: mean over the
-    [n-m, n+k] index range = difference of running sums — computed from
-    the distributed global row number with one offsets join, no
-    single-task window."""
+    [n-m, n+k] index range = difference of running sums — the global
+    row number and the running sums' carries come from one _numbered
+    collect, then two self-joins on the window edges; no single-task
+    window."""
     by = _cols(by)
     if not by:
-        numbered = global_row_number(df, _cols(order_by), out="__n", keep_pid=True)
-        w_pid = Window.partitionBy("__pid").orderBy("__n")
-        run = w_pid.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         c = F.col(value).cast("double")
-        # prefix sums/counts with cross-partition offsets
-        pre = numbered.withColumn("__ps", F.sum(c).over(run)).withColumn(
-            "__pc", F.count(c).over(run)
+        numbered, carry, total_rows, _ = _numbered(
+            _range_pass(df, [F.col(o) for o in _cols(order_by)]),
+            [F.sum(c).alias("s"), F.count(c).alias("n")],
+            lambda acc, r, _: (acc, (acc[0] + (r["s"] or 0.0), acc[1] + r["n"])), (0.0, 0),
+            [StructField("s", DoubleType()), StructField("n", LongType())],
         )
-        carries, (_, _, total_rows) = _pid_prefix(
-            pre,
-            [F.sum(c).alias("s"), F.count(c).alias("n"), F.count(F.lit(1)).alias("rows")],
-            lambda acc, r: (acc[0] + (r["s"] or 0.0), acc[1] + r["n"], acc[2] + r["rows"]),
-            (0.0, 0, 0),
+        # global prefix sums/counts: in-partition running ones plus the carry
+        run = Window.partitionBy("__pid").orderBy("__mid").rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
         )
-        pre, off_s = _lookup(
-            pre, F.col("__pid"), {p: acc[0] for p, acc in carries.items()}, DoubleType()
-        )
-        pre, off_n = _lookup(
-            pre, F.col("__pid"), {p: acc[1] for p, acc in carries.items()}, LongType()
-        )
-        pre = pre.withColumn(
-            "__gs", F.coalesce(F.col("__ps"), F.lit(0.0)) + F.coalesce(off_s, F.lit(0.0))
-        ).withColumn("__gn", F.col("__pc") + F.coalesce(off_n, F.lit(0)))
+        pre = numbered.withColumn(
+            "__gs", F.coalesce(F.sum(c).over(run), F.lit(0.0)) + carry["s"]
+        ).withColumn("__gn", F.count(c).over(run) + carry["n"])
         # prefix table joined at the window edges: hi = n + n_fwd
         # (clamped), lo = n - m_back - 1 (0 -> zero prefix)
         prefix = pre.select(F.col("__n").alias("__pn"), F.col("__gs").alias("__hs"), F.col("__gn").alias("__hn"))
@@ -2125,7 +2081,7 @@ def rank(df: DataFrame, value: str, by: Sequence[str] = (), descending: bool = F
     1 + count of strictly smaller values, computed on the (much smaller)
     DISTINCT-value table: range-partition it, prefix-sum the counts
     within each partition and add the earlier partitions' total
-    (``_pid_prefix`` + ``_lookup``), then join back on the value."""
+    (``_carry``), then join back on the value."""
     by = _cols(by)
     order = F.col(value).desc() if descending else F.col(value).asc()
     if by:
@@ -2136,26 +2092,16 @@ def rank(df: DataFrame, value: str, by: Sequence[str] = (), descending: bool = F
         .groupBy(value)
         .agg(F.count("*").alias("__c"))
     )
-    ordered = vals.repartitionByRange(order).localCheckpoint(eager=True)
-    ordered = ordered.withColumn("__pid", F.spark_partition_id())
-    offsets, _ = _pid_prefix(
-        ordered, [F.sum("__c").alias("s")], lambda acc, r: acc + r["s"], 0
+    ordered, off, _ = _carry(
+        _range_pass(vals, [order]), [F.sum("__c").alias("s")],
+        lambda acc, r, _: (acc, acc + r["s"]), 0, LongType(),
     )
-    ordered, off = _lookup(ordered, F.col("__pid"), offsets, LongType())
-    w_in = (
-        Window.partitionBy("__pid")
-        .orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    w_in = Window.partitionBy("__pid").orderBy("__mid").rowsBetween(
+        Window.unboundedPreceding, -1
     )
-    ranked = (
-        ordered.withColumn(
-            "rank",
-            F.coalesce(F.sum("__c").over(w_in), F.lit(0))
-            + F.coalesce(off, F.lit(0))
-            + 1,
-        )
-        .select(value, "rank")
-    )
+    ranked = ordered.withColumn(
+        "rank", F.coalesce(F.sum("__c").over(w_in), F.lit(0)) + off + 1
+    ).select(value, "rank")
     return df.join(ranked, on=value, how="left")
 
 
@@ -2767,9 +2713,10 @@ def stats1_iterative(
     stage; instead every supported accumulator decomposes associatively
     (count / sum / sum-of-squares / min / max), so compute a prefix
     within each range partition and add the exclusive-prefix carry of
-    the earlier partitions (``_pid_prefix`` folds the per-partition
-    (count, sum, sum², min, max), ``_lookup`` reads it back). One range
-    exchange, no SinglePartition anywhere.
+    the earlier partitions (``_carry`` folds the per-partition (count,
+    sum, sum², min, max) and reads it back as one struct). Rows are
+    ordered by their range position; no global row number is needed.
+    One range exchange, one collect, no SinglePartition anywhere.
 
     Output columns are named ``{field}_{acc}`` (stats1 -s emits the
     record plus the running stats under the batch naming). Supported
@@ -2797,18 +2744,14 @@ def stats1_iterative(
             }
         )
 
-    # ---- ungrouped: per-range-partition prefix + broadcast carry
-    numbered = global_row_number(df, _cols(order_by), out="__n", keep_pid=True)
-    run = (
-        Window.partitionBy("__pid")
-        .orderBy("__n")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # ---- ungrouped: per-range-partition prefix + one carry struct
+    ordered = _range_pass(df, [F.col(c) for c in _cols(order_by)])
+    run = Window.partitionBy("__pid").orderBy("__mid").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
     need_var = any(a in ("var", "stddev") for a in accs)
     need_sum = need_var or any(a in ("sum", "mean") for a in accs)
     need_cnt = need_var or any(a in ("count", "mean") for a in accs)
-    need_min = "min" in accs
-    need_max = "max" in accs
     # Miller-typed results: min/max/sum of an integer column stay integer
     # (reference pkg/lib/arithmetic.go:69-100) — mirror the grouped path,
     # which aggregates the uncast column. Only the moment terms (s2, and
@@ -2819,71 +2762,47 @@ def stats1_iterative(
     def _is_int(f: str) -> bool:
         return dtypes.get(f) in _INT_T
 
-    prefix_cols: dict[str, Column] = {}
+    # the associative per-partition statistics the accumulators need:
+    # name -> (aggregate, how two partitions' values combine, carry type)
+    need = {"c": need_cnt, "s": need_sum, "s2": need_var, "mn": "min" in accs, "mx": "max" in accs}
+    stats = {}
     for f in values:
-        raw = F.col(f)
-        v = raw.cast("double")
-        if need_cnt:
-            prefix_cols[f"__c_{f}"] = F.count(raw).over(run)
-        if need_sum:
-            prefix_cols[f"__s_{f}"] = F.sum(raw if _is_int(f) else v).over(run)
-        if need_var:
-            prefix_cols[f"__s2_{f}"] = F.sum(v * v).over(run)
-        if need_min:
-            prefix_cols[f"__mn_{f}"] = F.min(raw).over(run)
-        if need_max:
-            prefix_cols[f"__mx_{f}"] = F.max(raw).over(run)
-    pre = numbered.withColumns(prefix_cols)
+        raw, v = F.col(f), F.col(f).cast("double")
+        every = {
+            "c": (F.count(raw), operator.add, LongType()),
+            "s": (F.sum(raw if _is_int(f) else v), operator.add,
+                  LongType() if _is_int(f) else DoubleType()),
+            "s2": (F.sum(v * v), operator.add, DoubleType()),
+            "mn": (F.min(raw), min, df.schema[f].dataType),
+            "mx": (F.max(raw), max, df.schema[f].dataType),
+        }
+        stats |= {f"{k}_{f}": spec for k, spec in every.items() if need[k]}
 
-    # per-partition totals: one tiny row per range partition, folded on
-    # the driver into EXCLUSIVE prefix carries
-    agg_list = []
-    for f in values:
-        raw = F.col(f)
-        v = raw.cast("double")
-        agg_list += [
-            F.count(raw).alias(f"c_{f}"),
-            F.sum(raw if _is_int(f) else v).alias(f"s_{f}"),
-            F.sum(v * v).alias(f"s2_{f}"),
-            F.min(raw).alias(f"mn_{f}"),
-            F.max(raw).alias(f"mx_{f}"),
-        ]
-
-    def fold(acc: dict, r) -> dict:
-        nxt = {}
-        for f in values:
-            c, s, s2, mn, mx = acc[f]
-            if r[f"s_{f}"] is not None:
-                s, s2 = s + r[f"s_{f}"], s2 + r[f"s2_{f}"]
-            if r[f"mn_{f}"] is not None:
-                mn = r[f"mn_{f}"] if mn is None else min(mn, r[f"mn_{f}"])
-            if r[f"mx_{f}"] is not None:
-                mx = r[f"mx_{f}"] if mx is None else max(mx, r[f"mx_{f}"])
-            nxt[f] = (c + r[f"c_{f}"], s, s2, mn, mx)
-        return nxt
-
-    carries, _ = _pid_prefix(
-        pre, agg_list, fold, {f: (0, 0 if _is_int(f) else 0.0, 0.0, None, None) for f in values}
-    )
-
-    def carry(f: str, idx: int, dtype) -> Column:
-        nonlocal pre
-        pre, c = _lookup(
-            pre, F.col("__pid"), {pid: acc[f][idx] for pid, acc in carries.items()}, dtype
+    def fold(acc, r, _):  # exclusive prefix: a partition joins the carry after it
+        nxt = tuple(
+            a if r[k] is None else r[k] if a is None else op(a, r[k])
+            for a, (k, (_agg, op, _t)) in zip(acc, stats.items())
         )
-        return c
+        return acc, nxt
+
+    ordered, carry, _ = _carry(
+        ordered, [agg.alias(k) for k, (agg, _o, _t) in stats.items()], fold, (None,) * len(stats),
+        StructType([StructField(k, t) for k, (_a, _o, t) in stats.items()]),
+    )
+    # each running statistic once, as a column: a repeated window
+    # expression is evaluated once per use
+    ordered = ordered.withColumns({f"__run_{k}": agg.over(run) for k, (agg, _o, _t) in stats.items()})
+
+    def total(k: str, f: str) -> Column:  # the running value plus the carry; null-free sums
+        if k in ("mn", "mx"):
+            return (F.least if k == "mn" else F.greatest)(F.col(f"__run_{k}_{f}"), carry[f"{k}_{f}"])
+        return F.coalesce(F.col(f"__run_{k}_{f}"), F.lit(0)) + F.coalesce(carry[f"{k}_{f}"], F.lit(0))
 
     out_cols: dict[str, Column] = {}
     for f in values:
-        sum_t = LongType() if _is_int(f) else DoubleType()
-        mm_t = df.schema[f].dataType
-        cnt = (F.col(f"__c_{f}") + carry(f, 0, LongType())) if need_cnt else None
-        ssum = (
-            F.col(f"__s_{f}") + F.coalesce(carry(f, 1, sum_t), F.lit(0).cast(sum_t))
-        ) if need_sum else None
-        ssum2 = (
-            F.col(f"__s2_{f}") + F.coalesce(carry(f, 2, DoubleType()), F.lit(0.0))
-        ) if need_var else None
+        cnt = total("c", f) if need_cnt else None
+        ssum = total("s", f) if need_sum else None
+        ssum2 = total("s2", f) if need_var else None
         for a in accs:
             name = f"{f}_{a}"
             if a == "count":
@@ -2893,16 +2812,16 @@ def stats1_iterative(
             elif a == "mean":
                 out_cols[name] = F.when(cnt > 0, ssum.cast("double") / cnt)
             elif a == "min":
-                out_cols[name] = F.least(F.col(f"__mn_{f}"), carry(f, 3, mm_t))
+                out_cols[name] = total("mn", f)
             elif a == "max":
-                out_cols[name] = F.greatest(F.col(f"__mx_{f}"), carry(f, 4, mm_t))
+                out_cols[name] = total("mx", f)
             elif a in ("var", "stddev"):
                 sd = ssum.cast("double")
                 var = (ssum2 - sd * sd / cnt) / (cnt - 1)
                 out_cols[name] = F.when(
                     cnt > 1, F.sqrt(var) if a == "stddev" else var
                 )
-    return pre.withColumns(out_cols).select(
+    return ordered.withColumns(out_cols).select(
         *df.columns, *[f"{f}_{a}" for f in values for a in accs]
     )
 

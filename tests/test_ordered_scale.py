@@ -56,7 +56,7 @@ def collect_map(df, key="ord"):
     return {r[key]: r.asDict() for r in df.collect()}
 
 
-def test_step_ungrouped_matches_naive(data):
+def check_step_matches_naive(df):
     # The naive reference encodes Miller's heterogeneity event model
     # (see exact.step docstring): with F = max look-forward (2 here,
     # from shift_lead_2), each record's event gates on the presence of
@@ -65,17 +65,17 @@ def test_step_ungrouped_matches_naive(data):
     # advances only on gated-present values.
     steppers = ["shift", "shift_lag_3", "shift_lead_2", "delta", "ratio_2",
                 "rsum", "rprod", "counter", "from-first"]
-    got = collect_map(ev.step(data, steppers, ["x"], order_by=["ord"],
+    got = collect_map(ev.step(df, steppers, ["x"], order_by=["ord"],
                               ewma_alphas=[0.3]))
     w = Window.partitionBy().orderBy("ord")
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     c = F.col("x")
-    n_total = data.count()
+    n_total = df.count()
     rn = F.row_number().over(w)
     gate = F.when(rn + 2 <= F.lit(n_total), F.lead(c, 2).over(w).isNotNull()).otherwise(
         c.isNotNull()
     )
-    base = data.withColumn("__g", gate).withColumn(
+    base = df.withColumn("__g", gate).withColumn(
         "__v", F.when(F.col("__g"), c)
     )
     g = F.col("__g")
@@ -94,6 +94,7 @@ def test_step_ungrouped_matches_naive(data):
             F.when(present, F.coalesce(c / F.lag(v, 2).over(w), F.lit(1.0))),
         )
         .withColumn("x_rsum", F.when(present, F.sum(v).over(run)))
+        .withColumn("x_rprod", F.when(present, F.product(v).over(run)))
         .withColumn("x_counter", F.when(present, F.count(v).over(run)))
         .withColumn(
             "x_from_first",
@@ -103,7 +104,7 @@ def test_step_ungrouped_matches_naive(data):
     exp = collect_map(naive)
     for k in exp:
         for col in ["x_shift", "x_shift_lag_3", "x_shift_lead_2", "x_delta",
-                    "x_ratio_2", "x_rsum", "x_counter", "x_from_first"]:
+                    "x_ratio_2", "x_rsum", "x_rprod", "x_counter", "x_from_first"]:
             g_, e = got[k][col], exp[k][col]
             if e is None or g_ is None:
                 assert g_ == e, (k, col, g_, e)
@@ -122,6 +123,22 @@ def test_step_ungrouped_matches_naive(data):
             continue
         yprev = x if yprev is None else alpha * x + (1 - alpha) * yprev
         assert math.isclose(got[k]["x_ewma_0_3"], yprev, rel_tol=1e-6, abs_tol=1e-9), k
+
+
+def test_step_ungrouped_matches_naive(data):
+    check_step_matches_naive(data)
+
+
+def test_step_tiny_partitions_with_nulls_match_naive(spark):
+    """Partitions of 1-2 rows, shorter than the lag (3) and the forward
+    window (2): a lag source, a gate's ingested record and a running
+    carry each come from two or more partitions away, through absent
+    and gated-off values."""
+    xs = [1.5, None, 2.0, None, None, 4.0, -1.0, None, 3.0, 0.5, None, 2.5, None, 6.0, None, None]
+    df = spark.createDataFrame(list(enumerate(xs)), "ord long, x double").repartition(8)
+    sizes = pid_sizes(df, ["ord"])
+    assert len(sizes) > 1 and max(sizes) <= 2, sizes
+    check_step_matches_naive(df)
 
 
 def test_fill_down_ungrouped_matches_naive(data):
@@ -185,6 +202,43 @@ def test_rank_ungrouped_matches_naive(data):
     nulls = [k for k, v in collect_map(data).items() if v["y"] is None]
     for k in nulls:
         assert got[k] is None
+
+
+def test_stats1_iterative_ungrouped_matches_naive(data):
+    accs = ["count", "sum", "mean", "min", "max", "var", "stddev"]
+    got = collect_map(ev.stats1_iterative(data, accs, ["x", "y"], order_by=["ord"]))
+    run = Window.partitionBy().orderBy("ord").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    naive = {"count": F.count, "sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
+             "var": F.var_samp, "stddev": F.stddev_samp}
+    exp = collect_map(data.withColumns(
+        {f"{f}_{a}": naive[a](f).over(run) for f in ("x", "y") for a in accs}
+    ))
+    for k in exp:
+        for col in [f"{f}_{a}" for f in ("x", "y") for a in accs]:
+            g, e = got[k][col], exp[k][col]
+            if e is None or g is None:
+                assert g == e, (k, col, g, e)
+            else:
+                assert math.isclose(g, e, rel_tol=1e-9, abs_tol=1e-9), (k, col, g, e)
+
+
+def test_fraction_cumulative_ungrouped_matches_naive(data):
+    got = collect_map(ev.fraction(data, "x", cumulative=True, order_by=["ord"]))
+    run = Window.partitionBy().orderBy("ord").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    total = data.agg(F.sum("x")).first()[0]
+    exp = collect_map(data.withColumn(
+        "x_cumulative_fraction", F.when(F.col("x").isNotNull(), F.sum("x").over(run) / total)
+    ))
+    for k in exp:
+        g, e = got[k]["x_cumulative_fraction"], exp[k]["x_cumulative_fraction"]
+        if e is None or g is None:
+            assert g == e, (k, g, e)
+        else:
+            assert math.isclose(g, e, rel_tol=1e-9, abs_tol=1e-12), (k, g, e)
 
 
 def test_mode_and_mad_distributed(data, spark):
@@ -252,7 +306,10 @@ def test_step_lag_spans_multiple_tiny_partitions(spark):
     test_fill_down_ungrouped_matches_naive,
     test_slwin_ungrouped_matches_naive,
     test_rank_ungrouped_matches_naive,
+    test_stats1_iterative_ungrouped_matches_naive,
+    test_fraction_cumulative_ungrouped_matches_naive,
     test_step_lag_spans_multiple_tiny_partitions,
+    test_step_tiny_partitions_with_nulls_match_naive,
 ], ids=lambda f: f.__name__)
 def test_join_lookups_match_naive(check, request, monkeypatch):
     """The same naive references with every driver-table lookup on its

@@ -4,6 +4,8 @@ pkg/transformers/utils/stats1_accumulators.go)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -430,3 +432,42 @@ def test_ungrouped_ordered_verbs_on_empty_input(spark, verb):
     assert empty.collect() == []
     assert empty.columns == one.columns
     assert one.count() == 1
+
+
+@pytest.fixture(scope="module")
+def ordered_frame(spark):
+    rows = [(i, "ab"[i % 2], None if i % 7 == 3 else float(i % 13), float(i % 5)) for i in range(400)]
+    df = spark.createDataFrame(rows, "ord long, g string, x double, y double").repartition(4)
+    df.cache().count()  # the cache's own jobs run here, not inside a verb call
+    return df
+
+
+# Spark jobs a verb may run before it returns (the range sample, the
+# checkpoint and the one per-partition collect, with AQE's stage jobs);
+# rank's range pass runs over a grouped frame, one job more
+_CALL_JOBS = dict.fromkeys(_EMPTY_CASES, 5) | {"rank": 6}
+
+
+@pytest.mark.parametrize("verb", sorted(_EMPTY_CASES))
+def test_ungrouped_ordered_verbs_call_time_jobs(spark, ordered_frame, verb):
+    """Building an ordered verb's plan runs one range pass and one collect,
+    whatever it carries across partitions."""
+    sc = spark.sparkContext
+    group = f"call-jobs-{verb}"
+    sc.setJobGroup(group, group)
+    try:
+        _EMPTY_CASES[verb](ordered_frame)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= _CALL_JOBS[verb], jobs
+
+
+@pytest.mark.parametrize("verb", sorted(_EMPTY_CASES))
+def test_ungrouped_ordered_verbs_join_one_lookup(spark, ordered_frame, verb, monkeypatch, no_coalesce):
+    """With every driver table on the broadcast-join branch, a verb's plan
+    joins at most one lookup: each partition's carries come back as one
+    struct, not one table per field, statistic or offset."""
+    monkeypatch.setattr(ev, "_LOOKUP_LITERAL_MAX", 0)
+    plan = _EMPTY_CASES[verb](ordered_frame)._jdf.queryExecution().optimizedPlan().toString()
+    assert len(set(re.findall(r"__lk\d+", plan))) == 1, plan

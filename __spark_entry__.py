@@ -1401,7 +1401,7 @@ def oracle_sql() -> dict[str, str]:
 
     _boot_h = _md5h("'42:' || CAST(o_orderkey AS VARCHAR)")
     _ci_h = _md5h("'42:' || CAST(b AS VARCHAR) || ':' || k")
-    # 64 simhash bit votes, mirrored from dedup.simhash's voter exprs
+    # 64 simhash bit votes, mirrored from dedup.simhash's counters
     _simhash_bits = " | ".join(
         f"(CASE WHEN sum(CASE WHEN (th >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0"
         f" THEN (CAST(1 AS BIGINT) << {b}) ELSE CAST(0 AS BIGINT) END)"

@@ -4,19 +4,28 @@ n-gram Jaccard.
 Scale notes (the part that matters at 100 TB):
 - exact dedup keys on md5(text) — one hash-partitioned shuffle on a
   128-bit key, perfectly balanced regardless of content skew.
-- MinHash runs entirely JVM-side: shingles via F.transform over a
-  sequence (no explode of the document!), per-permutation min via
-  F.array_min of xxhash64(shingle, seed) — so the signature matrix is
-  computed in whole-stage codegen; only the band → bucket-join shuffles,
-  and bucket keys are uniform hashes (no skew).
+- MinHash runs entirely JVM-side: each token is hashed once into a
+  projected column, the shingle hashes come from one F.transform over
+  the window starts (no explode of the document!), and the permutation
+  minima are min(xxhash64(h, j)) aggregates in one codegen'd hash
+  aggregation; only the band → bucket-join shuffles, and bucket keys
+  are uniform hashes (no skew).
+- SimHash is one aggregate over the token hashes with 64 counters.
+- No lambda captures a computed expression (a lambda re-evaluates one
+  per array element); token arrays enter as a column or a variable.
 - candidate verification (exact Jaccard over shingle sets) happens only
   within LSH buckets — the classic candidate-pair reduction.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from mlrsketch.pipeline.similarity import _bucket_codes, _dot, _hyperplanes, _norm
+# the engine-portable 60-bit hash of the simhash / minhash gate variants
+# (DuckDB computes the identical value); xxhash64 stays the scale path
+from mlrsketch.verbs.exact import md5_60 as md5_60_hash
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", keep_by: str | None = None) -> DataFrame:
@@ -71,14 +80,25 @@ def exact_dedup(df: DataFrame, text_col: str = "text", keep_by: str | None = Non
     )
 
 
-def shingles(text_col: str, n: int = 5):
-    """Word n-gram shingles as an array column, computed JVM-side:
-    transform(sequence(0, n_tokens-n), i -> concat_ws over slice)."""
-    toks = F.split(F.col(text_col), " ")
+def _ngrams(toks: Column, n: int, combine) -> Column:
+    """``combine(slice)`` over every window of n consecutive tokens (one
+    window when there are fewer than n). `toks` must be a column or a
+    lambda variable: a computed expression captured by the window lambda
+    would be evaluated again for every window."""
     count = F.greatest(F.size(toks) - (n - 1), F.lit(1))
     return F.transform(
-        F.sequence(F.lit(0), count - 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+        F.sequence(F.lit(0), count - 1), lambda i: combine(F.slice(toks, i + 1, n))
+    )
+
+
+def shingles(text_col: str, n: int = 5):
+    """Word n-gram shingles as an array column, computed JVM-side. The
+    text is split once per row: the split is the start value of an
+    ``aggregate`` over an empty array, whose finish lambda receives it as
+    a variable."""
+    return F.aggregate(
+        F.array(), F.split(F.col(text_col), " "), lambda acc, _: acc,
+        lambda toks: _ngrams(toks, n, lambda s: F.concat_ws(" ", s)),
     )
 
 
@@ -96,12 +116,12 @@ def minhash_signature(
     xxhash64 over the slice of token hashes — the n-gram STRINGS are
     never materialized (at web scale that's the difference between
     allocating ~n_tokens×shingle_n bytes of transient strings per
-    document and none). Tokens are NOT hashed once each, though: the
-    per-shingle lambda captures the whole ``th = transform(split(text),
-    xxhash64)`` expression, which Catalyst re-evaluates per shingle, so
-    every token array is re-split and re-hashed once per shingle. The
-    base hashes are exploded to (id, h) pairs and the n permutation
-    minima are n ``min(xxhash64(h, j))`` aggregates in a single
+    document and none). Each token is hashed once: the token hashes are
+    projected as a column ``__th`` and the per-shingle lambda reads only
+    that column (``_ngrams`` references it twice, which keeps the
+    optimizer from inlining the hashing back into the lambda). The base
+    hashes are exploded to (id, h) pairs and the n permutation minima
+    are n ``min(xxhash64(h, j))`` aggregates in a single
     whole-stage-codegen'd hash aggregation. Because a document's
     shingles are colocated in its input partition, the map-side partial
     aggregate collapses to one row per doc before the (only) shuffle —
@@ -117,29 +137,24 @@ def minhash_signature(
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(2, target // 2):
         df = df.repartition(target)
-    toks = F.split(F.col(text_col), " ")
-    count = F.greatest(F.size(toks) - (shingle_n - 1), F.lit(1))
     if hash_family == "md5":
         # Engine-portable variant (the oracle-checkable gate config):
         # shingle STRINGS are materialized and each permutation is
         # md5_60_hash("j:" + shingle) — DuckDB reproduces every value
         # exactly. Costlier than the xxhash64 path; test-scale use.
-        sh_s = F.transform(
-            F.sequence(F.lit(0), count - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, shingle_n)),
-        )
-        ex = df.select(F.col(id_col), F.explode(sh_s).alias("__s"))
+        ex = df.select(F.col(id_col), F.explode(shingles(text_col, shingle_n)).alias("__s"))
         aggs = [
             F.min(md5_60_hash(F.concat_ws(":", F.lit(str(j)), F.col("__s")))).alias(f"__m{j}")
             for j in range(n_hashes)
         ]
         return ex.groupBy(id_col).agg(*aggs)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    sh_h = F.transform(
-        F.sequence(F.lit(0), count - 1),
-        lambda i: F.xxhash64(F.slice(th, i + 1, shingle_n)),
+    th = df.select(
+        F.col(id_col),
+        F.transform(F.split(F.col(text_col), " "), lambda t: F.xxhash64(t)).alias("__th"),
     )
-    ex = df.select(F.col(id_col), F.explode(sh_h).alias("__h"))
+    ex = th.select(
+        F.col(id_col), F.explode(_ngrams(F.col("__th"), shingle_n, F.xxhash64)).alias("__h")
+    )
     aggs = [
         F.min(F.xxhash64(F.col("__h"), F.lit(j))).alias(f"__m{j}")
         for j in range(n_hashes)
@@ -220,46 +235,34 @@ def minhash_lsh_pairs(
     )
 
 
-def md5_60_hash(col):
-    """Engine-portable 60-bit token hash (first 15 hex chars of md5 as
-    int) — DuckDB computes the identical value, which makes simhash /
-    minhash gate variants exactly oracle-checkable. xxhash64 stays the
-    default (JVM-native, ~10x cheaper) for the scale path."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def simhash(df: DataFrame, text_col: str = "text", out: str = "simhash",
             token_hash=None) -> DataFrame:
     """64-bit SimHash (Charikar 2002) over whitespace tokens, JVM-side.
 
     For each bit position b: sign of sum over tokens of
     (+1 if bit b of hash(token) set else -1). Near-duplicates have
-    small Hamming distance. Implemented as 64 aggregate expressions over
-    the token array — no shuffle, no Python. `token_hash` swaps the
-    hash family (default xxhash64; md5_60_hash for the oracle-portable
-    variant).
+    small Hamming distance. Implemented as ONE ``aggregate`` over the
+    token hashes with 64 counters as its accumulator — one pass, no
+    shuffle, no Python; the hashes are its argument, evaluated once per
+    row. `token_hash` swaps the hash family (default xxhash64;
+    md5_60_hash for the oracle-portable variant). A null text hashes
+    to 0.
     """
-    toks = F.split(F.col(text_col), " ")
-    th = F.transform(toks, token_hash or (lambda t: F.xxhash64(t)))
+    th = F.transform(F.split(F.col(text_col), " "), token_hash or (lambda t: F.xxhash64(t)))
+    zero, one = F.lit(0).cast("long"), F.lit(1).cast("long")
 
-    def voter(b: int):
-        # closure factory, not a default arg — see perm() note above
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
+    def vote(counters, h):
+        return F.transform(counters, lambda c, b: c + F.when(
+            F.call_function("shiftright", h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1))
 
-    bit_exprs = []
-    for b in range(64):
-        vote = F.aggregate(th, F.lit(0).cast("long"), voter(b))
-        bit_exprs.append(
-            F.when(vote > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
+    def fold(counters):
+        bits = F.transform(
+            counters, lambda c, b: F.when(c > 0, F.call_function("shiftleft", one, b)).otherwise(zero)
         )
-    sh = bit_exprs[0]
-    for e in bit_exprs[1:]:
-        sh = sh.bitwiseOR(e)
-    return df.withColumn(out, sh)
+        return F.aggregate(bits, zero, lambda acc, v: acc.bitwiseOR(v))
+
+    sh = F.aggregate(th, F.array_repeat(zero, 64), vote, fold)
+    return df.withColumn(out, F.coalesce(sh, zero))
 
 
 def simhash_near_dups(df: DataFrame, id_col: str, text_col: str = "text",
@@ -337,65 +340,29 @@ def embedding_near_dup_pairs(
 
     Scale path (default): random-hyperplane LSH (Charikar 2002) bands —
     two vectors are candidates iff they share a sign-pattern bucket in
-    ANY band; exact cosine verifies candidates. The self-join is on
-    (band, bucket), a uniform key, so the shuffle is balanced and the
-    quadratic blow-up is confined to bucket-local pairs. With
-    brute_force=True does the O(n^2) cross-join — the correctness
-    oracle at test scale.
+    ANY band; exact cosine verifies candidates. The band codes come from
+    similarity's bucketer (the band index rides in each code's high
+    bits), so the self-join is on one uniform key, the shuffle is
+    balanced and the quadratic blow-up is confined to bucket-local
+    pairs. With brute_force=True does the O(n^2) cross-join — the
+    correctness oracle at test scale.
     """
-    import numpy as np
-
-    def _dot(a, b):
-        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-
-    norm = F.sqrt(_dot(F.col(vec_col), F.col(vec_col)))
-    base = df.select(id_col, F.col(vec_col)).withColumn("__norm", norm)
-
-    if brute_force:
-        a = base.select(
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("__va"),
-            F.col("__norm").alias("__na"),
-        )
-        b = base.select(
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("__vb"),
-            F.col("__norm").alias("__nb"),
-        )
-        pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    else:
+    rows = df.select(id_col, vec_col, _norm(F.col(vec_col)).alias("__norm"))
+    cond = F.col("id_a") < F.col("id_b")
+    if not brute_force:
         dim = len(df.select(vec_col).first()[0])
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((n_bands, band_bits, dim))
-        banded = base
-        for t in range(n_bands):
-            acc = F.lit(0).cast("long")
-            for bit in range(band_bits):
-                plane = F.array(*[F.lit(float(v)) for v in planes[t, bit]])
-                acc = acc.bitwiseOR(
-                    F.shiftleft((_dot(F.col(vec_col), plane) > 0).cast("long"), bit)
-                )
-            banded = banded.withColumn(f"__b{t}", acc)
-        buckets = banded.select(
-            id_col, vec_col, "__norm",
-            F.explode(
-                F.array(*[
-                    F.struct(F.lit(t).alias("band"), F.col(f"__b{t}").alias("bucket"))
-                    for t in range(n_bands)
-                ])
-            ).alias("__bb"),
-        ).select(id_col, vec_col, "__norm", "__bb.band", "__bb.bucket")
-        a = buckets.select(
-            F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"),
-            F.col("__norm").alias("__na"), "band", "bucket",
-        )
-        b = buckets.select(
-            F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"),
-            F.col("__norm").alias("__nb"), "band", "bucket",
-        )
-        pairs = a.join(b, ["band", "bucket"]).filter(F.col("id_a") < F.col("id_b")).dropDuplicates(
-            ["id_a", "id_b"]
-        )
+        planes = _hyperplanes(dim, n_bands, band_bits, seed)
+        rows = rows.withColumn("__k", F.explode(_bucket_codes(F.col(vec_col), planes)))
+        cond = cond & (F.col("__ka") == F.col("__kb"))
+
+    def side(s: str) -> DataFrame:
+        cols = [F.col(id_col).alias(f"id_{s}"), F.col(vec_col).alias(f"__v{s}"),
+                F.col("__norm").alias(f"__n{s}")]
+        return rows.select(*cols, *([] if brute_force else [F.col("__k").alias(f"__k{s}")]))
+
+    pairs = side("a").join(side("b"), cond)
+    if not brute_force:
+        pairs = pairs.dropDuplicates(["id_a", "id_b"])
 
     cos = _dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))
     return (

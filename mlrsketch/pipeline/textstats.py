@@ -21,10 +21,11 @@ _LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def _count_token(text: Column, token: str) -> Column:
-    """Occurrences of a whole token in a space-separated text column:
-    size(filter(split(text,' '), t -> t = token)). Pure JVM."""
-    return F.size(F.filter(F.split(text, " "), lambda t: t == F.lit(token)))
+def _count_token(token: str) -> Column:
+    """Occurrences of a whole token in the ``__toks`` column, the text
+    split once per row by the caller: size(filter(__toks, t -> t =
+    token)). Pure JVM."""
+    return F.size(F.filter(F.col("__toks"), lambda t: t == F.lit(token)))
 
 
 def token_count(df: DataFrame, text_col: str = "text", out: str = "n_tokens") -> DataFrame:
@@ -43,18 +44,20 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """
     text = F.col(text_col)
     n_chars = F.length(text)
-    n_tokens = F.size(F.split(text, " "))
-    stop = _count_token(text, "the") + _count_token(text, "and") + _count_token(text, "of")
+    n_tokens = F.size("__toks")
+    stop = _count_token("the") + _count_token("and") + _count_token("of")
     len_score = F.least(n_chars / F.lit(500.0), F.lit(1.0))
     alpha = (n_chars - F.length(F.regexp_replace(text, "[a-z ]", ""))) / n_chars
     stop_ratio = F.least(F.lit(10.0) * stop / n_tokens, F.lit(1.0))
     return (
-        df.withColumn("len_score", F.round(len_score, 6))
+        df.withColumn("__toks", F.split(text, " "))
+        .withColumn("len_score", F.round(len_score, 6))
         .withColumn("alpha_ratio", F.round(alpha, 6))
         .withColumn("stop_ratio", F.round(stop_ratio, 6))
         .withColumn(
             "quality_score", F.round((len_score + alpha + stop_ratio) / 3.0, 6)
         )
+        .drop("__toks")
     )
 
 
@@ -64,16 +67,19 @@ def lang_id(df: DataFrame, text_col: str = "text", out: str = "lang_pred") -> Da
     tie-break: language code ascending (struct max on (score, -code)
     is not SQL-portable, so ties go to the FIRST language in sorted
     order among the maxima — implemented via greatest + case)."""
-    text = F.col(text_col)
     scores = {
-        lang: sum((_count_token(text, m) for m in markers), F.lit(0))
+        lang: sum((_count_token(m) for m in markers), F.lit(0))
         for lang, markers in sorted(_LANG_MARKERS.items())
     }
     best = F.greatest(*scores.values())
     expr = F.lit("und")
     for lang in sorted(_LANG_MARKERS, reverse=True):
         expr = F.when(scores[lang] == best, F.lit(lang)).otherwise(expr)
-    return df.withColumn(out, F.when(best == 0, F.lit("und")).otherwise(expr))
+    return (
+        df.withColumn("__toks", F.split(F.col(text_col), " "))
+        .withColumn(out, F.when(best == 0, F.lit("und")).otherwise(expr))
+        .drop("__toks")
+    )
 
 
 def fingerprint(df: DataFrame, text_col: str = "text", out: str = "fp") -> DataFrame:

@@ -845,9 +845,15 @@ def merge_fields(
         if fields
         else F.array().cast("array<double>")
     )
-    nn = F.filter(arr, lambda x: x.isNotNull())
-    out = df
-    for a in _cols(accs):
+    accs = _cols(accs)
+    # The non-null values, and their sorted copy when a percentile needs
+    # it, are projected once: every accumulator reads these columns
+    # instead of filtering (and sorting) the array again.
+    out = df.withColumn("__nn", F.filter(arr, lambda x: x.isNotNull()))
+    nn, srt = F.col("__nn"), F.col("__srt")
+    if any(_pct_needs(a) is not None for a in accs):
+        out = out.withColumn("__srt", F.array_sort(nn))
+    for a in accs:
         name = f"{out_prefix}_{a}"
         ssum = F.aggregate(nn, F.lit(0.0), lambda acc, x: acc + x)
         ssum2 = F.aggregate(nn, F.lit(0.0), lambda acc, x: acc + x * x)
@@ -858,7 +864,6 @@ def merge_fields(
             # int(p/100*n) clamped (percentiles.go:193-208); median/iqr/
             # fences share the same picks. With -i, R-type-7 linear
             # interpolation at (p/100)*(n-1) (percentiles.go:157-176).
-            srt = F.array_sort(nn)
 
             def pick(p: float) -> Column:
                 if interpolated:
@@ -906,7 +911,7 @@ def merge_fields(
         else:
             raise ValueError(f"merge-fields accumulator not supported: {a}")
         out = out.withColumn(name, c)
-    return out
+    return out.drop("__nn", "__srt")
 
 
 def stats2(df: DataFrame, x: str, y: str, stats: Sequence[str], by: Sequence[str] = ()) -> DataFrame:

@@ -483,11 +483,13 @@ def sketch_profile(
 
 def build_bloom(df: DataFrame, of: str, n_bits: int = 1 << 23, n_hashes: int = 7) -> BloomFilter:
     """Build a Bloom filter over column `of` with the two-level plan and
-    return the merged driver-side filter (state is n_bits/8 bytes)."""
+    return the merged driver-side filter (state is n_bits/8 bytes). A
+    null value is not inserted."""
     spec = SketchSpec(
         make=lambda: BloomFilter(n_bits=n_bits, n_hashes=n_hashes),
-        update=lambda sk, pdf: sk.add_hashes(pdf["__h"].to_numpy(dtype=np.int64)),
+        update=lambda sk, pdf: sk.add_hashes(_value_hashes(pdf)),
         finalize=lambda sk: pd.DataFrame({"state": [sk.serialize()]}),
+        prepare=_prepare_hash,
         deserialize=BloomFilter.deserialize,
     )
     schema = StructType([StructField("state", BinaryType())])

@@ -191,3 +191,61 @@ def test_exact_dedup_keep_first_never_shuffles_payload(spark, tables):
     # the aggregate side is partial/final (map-side combine before the
     # key-only exchange)
     assert "partial_count" in p or "HashAggregate" in p, p
+
+
+def optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def lambda_bodies(p: str) -> list[str]:
+    """The text of every ``lambdafunction(...)`` in a plan string."""
+    bodies, start = [], p.find("lambdafunction(")
+    while start >= 0:
+        depth, end = 0, start + len("lambdafunction")
+        while True:
+            depth += {"(": 1, ")": -1}.get(p[end], 0)
+            end += 1
+            if depth == 0:
+                break
+        bodies.append(p[start:end])
+        start = p.find("lambdafunction(", start + 1)
+    return bodies
+
+
+def test_token_arrays_are_split_once(spark, tables):
+    """Each text is split, and each token hashed, once per row. A lambda
+    that captured the split (instead of reading a projected column or a
+    lambda variable) would run it once per array element: the plan would
+    show `split(` inside a lambda body, or once per simhash bit."""
+    from mlrsketch.pipeline import dedup as dd
+
+    docs = tables["documents"]
+    cases = {
+        "minhash xxhash": dd.minhash_signature(docs, "doc_id", "text", 8),
+        "minhash md5": dd.minhash_signature(docs, "doc_id", "text", 8, hash_family="md5"),
+        "simhash xxhash": dd.simhash(docs, "text"),
+        "simhash md5": dd.simhash(docs, "text", token_hash=dd.md5_60_hash),
+        "ngram_jaccard_pairs": dd.ngram_jaccard_pairs(docs, "doc_id", "text", n=2),
+    }
+    for name, df in cases.items():
+        p = optimized(df)
+        # once per scan of the input: the n-gram self-join reads it twice
+        assert p.count("split(") == p.count("Relation ["), (name, p)
+        assert not any("split(" in b for b in lambda_bodies(p)), (name, p)
+    assert optimized(cases["simhash md5"]).count("aggregate(") == 2  # the pass + its fold
+
+
+def test_lsh_plan_does_not_grow_with_tables_and_bits(spark):
+    """lsh_topk computes every table's bucket code in one expression over
+    one planes literal, so its plan has as many dot products at 8 x 12
+    as at 2 x 8."""
+    from mlrsketch.pipeline import similarity as sim
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    q = [float(x) for x in emb.first()["embedding"]]
+
+    def counts(n_tables, bits):
+        p = optimized(sim.lsh_topk(emb, q, k=10, n_tables=n_tables, bits=bits))
+        return p.count("zip_with("), p.count("aggregate(")
+
+    assert counts(8, 12) == counts(2, 8)

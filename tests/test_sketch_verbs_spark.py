@@ -255,6 +255,17 @@ def test_build_bloom_empty_input(pages_df):
     assert not bloom.bits.any()
 
 
+def test_build_bloom_skips_null_values(spark):
+    """A null value is not inserted: Spark's xxhash64(null) is its seed,
+    which would set the seed's bits as if it were a value."""
+    nulls = spark.createDataFrame([(None,), (None,), (None,)], "url string")
+    bloom = sv.build_bloom(nulls, "url", n_bits=1 << 12, n_hashes=3)
+    assert bloom.n_inserted == 0
+    assert not bloom.bits.any()
+    mixed = spark.createDataFrame([("a",), (None,), ("b",)], "url string")
+    assert sv.build_bloom(mixed, "url", n_bits=1 << 12, n_hashes=3).n_inserted == 2
+
+
 def test_topk_null_and_void_groups_stay_apart(spark):
     """A null group and a "" group are two groups with their own counts;
     a null text or value is skipped, a "" value is counted."""

@@ -3631,6 +3631,8 @@ def v_step(df, argv):
     alphas = [float(a) for a in _csl(fl["-d"])] if "-d" in fl else []
     if has_ewma and not alphas:
         raise Unsupported("ewma without -d")
+    if has_ewma and any(not 0 < a <= 1 for a in alphas):
+        raise Unsupported("ewma alpha outside (0, 1]")
     by = _csl(fl["-g"]) if "-g" in fl else []
     values = _csl(fl["-f"])
     if any(v not in df.columns for v in values):

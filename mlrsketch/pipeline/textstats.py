@@ -38,7 +38,8 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic quality features + a composite score in [0,1]:
 
     - len_score: min(n_chars/500, 1) — longer docs up to a cap
-    - alpha_ratio: fraction of [a-z ] characters
+    - alpha_ratio: fraction of [a-z ] characters (null, and so the
+      score, for '')
     - stop_ratio: min(10 * stopword_tokens / n_tokens, 1)
     score = round((len_score + alpha_ratio + stop_ratio)/3, 6)
     """
@@ -47,7 +48,8 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     n_tokens = F.size("__toks")
     stop = _count_token("the") + _count_token("and") + _count_token("of")
     len_score = F.least(n_chars / F.lit(500.0), F.lit(1.0))
-    alpha = (n_chars - F.length(F.regexp_replace(text, "[a-z ]", ""))) / n_chars
+    # null for '' (no characters), as SQL's x / 0 gives NULL
+    alpha = F.try_divide(n_chars - F.length(F.regexp_replace(text, "[a-z ]", "")), n_chars)
     stop_ratio = F.least(F.lit(10.0) * stop / n_tokens, F.lit(1.0))
     return (
         df.withColumn("__toks", F.split(text, " "))

@@ -31,8 +31,9 @@ import itertools
 import operator
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+from pyspark.sql.internal import InternalFunction
 from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
@@ -68,6 +69,8 @@ def _cols(c: str | Sequence[str]) -> list[str]:
 _LOOKUP_LITERAL_MAX = 300
 _lookup_ids = itertools.count()
 _LOCAL_BITS = 33  # monotonically_increasing_id: (partition << 33) | row index
+# rows per block of a bounded frame (_framed), before the halo
+_FRAME_BLOCK = 1024
 
 
 def _range_pass(df: DataFrame, order: Sequence[Column]) -> DataFrame:
@@ -174,6 +177,33 @@ def _numbered(tagged: DataFrame, aggs=(), fold=None, init=None, fields=()):
         StructType([StructField("off", LongType()), *fields]),
     )
     return tagged.withColumn("__n", _local_index() + 1 + carry["off"]), carry, n_total, acc
+
+
+def _framed(
+    df: DataFrame, order_by: Sequence[str], back: int, fwd: int, cols: dict[str, Column]
+) -> DataFrame:
+    """``df`` with each ``cols`` aggregate over the frame of the ``back``
+    rows before and ``fwd`` rows after every row in global ``order_by``
+    order, without a single-task window.
+
+    global_row_number numbers the rows; the numbers are cut into blocks
+    of B = max(back, fwd, _FRAME_BLOCK). A row also goes, read-only, into
+    the next block when it is within ``back`` of its block's end, and
+    into the previous one when within ``fwd`` of its block's start, so
+    every home row's frame lies in its own block: one explode, one
+    window partitioned by block, and each row's home copy kept."""
+    size = max(back, fwd, _FRAME_BLOCK)
+    n0, home = F.col("__n") - 1, F.col("__home")
+    numbered = global_row_number(df, order_by, out="__n").withColumn("__home", F.floor(n0 / size))
+    off = n0 - home * size
+    blocks = F.sequence(home - (off < fwd).cast("long"), home + (off >= size - back).cast("long"))
+    frame = Window.partitionBy("__blk").orderBy("__n").rowsBetween(-back, fwd)
+    out = (
+        numbered.withColumn("__blk", F.explode(blocks))
+        .withColumns({name: agg.over(frame) for name, agg in cols.items()})
+        .filter(F.col("__blk") == home)
+    )
+    return _keep(out, [*df.columns, *cols])
 
 
 def _keep(out: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -900,14 +930,14 @@ def merge_fields(
             c = F.array_max(nn)
         elif a == "sum":
             c = ssum
-        elif a == "mean":
-            c = ssum / cnt
+        elif a == "mean":  # no value, no mean (as stats1 -s)
+            c = F.when(cnt > 0, ssum / cnt)
         elif a == "count":
             c = cnt
         elif a == "var":  # sample variance from raw moments (n-1 denom)
-            c = (ssum2 - ssum * ssum / cnt) / (cnt - 1)
+            c = F.when(cnt > 1, (ssum2 - ssum * ssum / cnt) / (cnt - 1))
         elif a == "stddev":
-            c = F.sqrt((ssum2 - ssum * ssum / cnt) / (cnt - 1))
+            c = F.when(cnt > 1, F.sqrt((ssum2 - ssum * ssum / cnt) / (cnt - 1)))
         else:
             raise ValueError(f"merge-fields accumulator not supported: {a}")
         out = out.withColumn(name, c)
@@ -1634,6 +1664,20 @@ def _steppers_max_forward(steppers: Sequence[str], slwins: Sequence[tuple[int, i
     return f_max
 
 
+def _ewma(v: Column, alpha: float, run: WindowSpec, seed: Column) -> Column:
+    """Miller's ewma y_t = αx_t + (1-α)y_{t-1} (step.go:647-651) over the
+    non-null ``v`` in ``run`` (an unbounded-preceding frame), started
+    from ``seed`` (y_0; the first value itself when nothing precedes).
+
+    The JVM's EWM window aggregate (pandas-on-Spark's ewm().mean())
+    gives the adjust=True mean ew_i = Σ β^(i-j) x_j / Σ β^(i-j), β = 1-α,
+    over the first i values; the recursion is y_i = (1-β^i)·ew_i + β^i·y_0.
+    Every term shrinks as i grows, so no length overflows it."""
+    decay = F.pow(F.lit(1.0 - alpha), F.count(v).over(run))
+    ew = InternalFunction.ewm(v, alpha, True).over(run)
+    return (1.0 - decay) * ew + decay * seed
+
+
 def step(
     df: DataFrame,
     steppers: Sequence[str],
@@ -1674,7 +1718,12 @@ def step(
     the gated values before it, the raw values after it and the
     running carries) comes from one driver collect and returns as one
     struct per partition.
+
+    Every ewma alpha must lie in (0, 1], the JVM EWM aggregate's domain
+    (ValueError otherwise); Miller takes any -d value.
     """
+    if any(not 0 < a <= 1 for a in ewma_alphas):
+        raise ValueError(f"ewma alpha outside (0, 1]: {list(ewma_alphas)}")
     by = _cols(by)
     values = _cols(values)
     steppers = _cols(steppers)
@@ -1737,22 +1786,10 @@ def step(
             # window -> VOID
             e = F.when(gate, F.avg(c).over(base.rowsBetween(-m_back, n_fwd)))
             result_cols[f"{f}_slwin_{m_back}_{n_fwd}"] = e
-        # ewma (step.go:647-651): y_t = αx_t + (1-α)y_{t-1}, y_0 = x_0,
-        # advancing only on gated-open present values. Closed form avoids
-        # applyInPandas: y_t = Σ α'(i) x_i with weights α(1-α)^(t-i) over
-        # the NON-NULL event index; expressed via running sums of
-        # v_i/(1-α)^i. Numerically unstable for long series — for those,
-        # use mlrsketch.verbs.sketch.ewma_pandas (applyInPandas).
+        # ewma (step.go:647-651), advancing only on gated-present values
         for alpha in ewma_alphas:
-            beta = 1.0 - alpha
-            i = F.count(v).over(run)  # index among gated-present values
-            scaled = v * F.pow(F.lit(beta), -i)
-            s1 = F.sum(scaled).over(run)
-            first_scaled = F.first(scaled, ignorenulls=True).over(run)
             label = ("%g" % alpha).replace(".", "_")
-            y = F.pow(F.lit(beta), i) * (
-                F.lit(alpha) * s1 + F.lit(1 - alpha) * first_scaled
-            )
+            y = _ewma(v, alpha, run, F.first(v, ignorenulls=True).over(run))
             result_cols[f"{f}_ewma_{label}"] = F.when(gate & c.isNotNull(), y)
     out = df.withColumns(result_cols)
     if f_max:
@@ -1856,10 +1893,10 @@ def _step_ungrouped(
                 F.min_by(iv, F.when(iv.isNotNull(), F.col("__mid"))).alias(f"__first_{f}"),
             ]
         for alpha, label in ew_labels:
-            # the in-partition ewma recursion's scaled sum (see step())
-            scaled = iv * F.pow(F.lit(1.0 - alpha), -F.count(iv).over(run))
-            tagged = tagged.withColumn(f"__isc_{f}_{label}", scaled)
-            aggs.append(F.sum(f"__isc_{f}_{label}").alias(f"__S_{f}_{label}"))
+            # the in-partition ewm of the values whose gate is known here
+            ew = InternalFunction.ewm(iv, alpha, True).over(run)
+            tagged = tagged.withColumn(f"__ew_{f}_{label}", ew)
+            aggs.append(F.max_by(f"__ew_{f}_{label}", "__mid").alias(f"__ew_{f}_{label}"))
 
     # ---- driver side: one struct per partition; acc keys are its field names
     fields = [StructField("rows", LongType())]
@@ -1910,11 +1947,12 @@ def _step_ungrouped(
             if nxt[f"first_{f}"] is None:
                 nxt[f"first_{f}"] = first if first is not None else next(iter(late), None)
             for alpha, label in ew_labels:
-                # y_t = beta^t (alpha S + y_0), y_0 = the carry, or at the
-                # first present value (S's seed) that value itself
+                # y_t = (1-beta^t) ew + beta^t y_0 (see _ewma), y_0 = the
+                # carry, or at the first present value that value itself
                 beta, y, t = 1.0 - alpha, acc[f"ewma_{f}_{label}"], r[f"__cnt_{f}"]
                 if t:
-                    y = beta ** t * (alpha * r[f"__S_{f}_{label}"] + float(first if y is None else y))
+                    decay = beta ** t
+                    y = (1 - decay) * r[f"__ew_{f}_{label}"] + decay * float(first if y is None else y)
                 for x in map(float, late):
                     y = x if y is None else alpha * x + beta * y
                 nxt[f"ewma_{f}_{label}"] = y
@@ -1950,13 +1988,6 @@ def _step_ungrouped(
         )
         for f in values for k in lag_ks
     })
-    for f in values:
-        if ew_labels:  # index among gated-present values
-            out = out.withColumn(f"__i_{f}", F.count(f"__v_{f}").over(run))
-        for alpha, label in ew_labels:
-            scaled = F.col(f"__v_{f}") * F.pow(F.lit(1.0 - alpha), -F.col(f"__i_{f}"))
-            out = out.withColumn(f"__sc_{f}_{label}", scaled)
-            out = out.withColumn(f"__s1_{f}_{label}", F.sum(f"__sc_{f}_{label}").over(run))
 
     result_cols = {}
     for f in values:
@@ -1988,20 +2019,8 @@ def _step_ungrouped(
             elif s == "from-first":
                 result_cols[name] = F.when(present, c - F.lit(total[f"first_{f}"]))
         for alpha, label in ew_labels:
-            beta = 1.0 - alpha
-            carry_expr = carry[f"ewma_{f}_{label}"]
-            s1 = F.col(f"__s1_{f}_{label}")
-            fs = F.first(F.col(f"__sc_{f}_{label}"), ignorenulls=True).over(run)
-            i_f = F.col(f"__i_{f}")
-            seeded = F.pow(F.lit(beta), i_f) * (
-                F.lit(alpha) * s1 + F.lit(1 - alpha) * fs
-            )
-            carried = F.pow(F.lit(beta), i_f) * (
-                F.lit(alpha) * s1 + F.coalesce(carry_expr, F.lit(0.0))
-            )
-            result_cols[f"{f}_ewma_{label}"] = F.when(
-                present, F.when(carry_expr.isNull(), seeded).otherwise(carried)
-            )
+            seed = F.coalesce(carry[f"ewma_{f}_{label}"], F.first(vc, ignorenulls=True).over(run))
+            result_cols[f"{f}_ewma_{label}"] = F.when(present, _ewma(vc, alpha, run, seed))
 
     out = out.withColumns(result_cols)
     # drain drop rule (see step()): with a forward window larger than the
@@ -2009,7 +2028,7 @@ def _step_ungrouped(
     # at toy scale (n_total < f_max)
     if f_max and n_total < f_max:
         out = out.filter(F.col("__n") <= 2 * n_total - f_max)
-    # __n/__pid/__i and join/scratch columns are internal; __ord (if the
+    # __n/__pid and join/scratch columns are internal; __ord (if the
     # caller carries one) stays
     return _keep(out, [*df.columns, *result_cols])
 
@@ -2025,56 +2044,25 @@ def slwin(
     """`mlr step -a slwin_m_n` (step.go:703-711;
     utils/window_keeper.go:12-60): centered sliding-window mean.
 
-    Grouped: hash-partitioned frame window. Ungrouped: mean over the
-    [n-m, n+k] index range = difference of running sums — the global
-    row number and the running sums' carries come from one _numbered
-    collect, then two self-joins on the window edges; no single-task
-    window."""
-    by = _cols(by)
+    Grouped: hash-partitioned frame window. Ungrouped: the same frame
+    over blocks of consecutive rows, each with a read-only halo of its
+    neighbours' edge rows (_framed); no single-task window.
+
+    Spark sums a sliding frame afresh for every row, so both paths do
+    O(rows * (m+n)) work. That is small for the usual few-row windows,
+    but wide ones cost more than a difference of prefix sums would:
+    on 60k rows (local[4]) 2000,2000 took about 4 s against 1 s. The
+    prefix difference loses the last digits of a long series' sums; the
+    frame's mean equals the single-window one at any length."""
+    name = f"{value}_slwin_{m_back}_{n_fwd}"
     if not by:
-        c = F.col(value).cast("double")
-        numbered, carry, total_rows, _ = _numbered(
-            _range_pass(df, [F.col(o) for o in _cols(order_by)]),
-            [F.sum(c).alias("s"), F.count(c).alias("n")],
-            lambda acc, r, _: (acc, (acc[0] + (r["s"] or 0.0), acc[1] + r["n"])), (0.0, 0),
-            [StructField("s", DoubleType()), StructField("n", LongType())],
-        )
-        # global prefix sums/counts: in-partition running ones plus the carry
-        run = Window.partitionBy("__pid").orderBy("__mid").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        pre = numbered.withColumn(
-            "__gs", F.coalesce(F.sum(c).over(run), F.lit(0.0)) + carry["s"]
-        ).withColumn("__gn", F.count(c).over(run) + carry["n"])
-        # prefix table joined at the window edges: hi = n + n_fwd
-        # (clamped), lo = n - m_back - 1 (0 -> zero prefix)
-        prefix = pre.select(F.col("__n").alias("__pn"), F.col("__gs").alias("__hs"), F.col("__gn").alias("__hn"))
-        hi = F.least(F.col("__n") + n_fwd, F.lit(total_rows))
-        lo = F.col("__n") - m_back - 1
-        res = (
-            pre.withColumn("__hi", hi)
-            .withColumn("__lo", lo)
-            .join(prefix.withColumnsRenamed({"__pn": "__hi"}), on="__hi", how="left")
-            .join(
-                prefix.withColumnsRenamed(
-                    {"__pn": "__lo", "__hs": "__ls", "__hn": "__ln"}
-                ),
-                on="__lo",
-                how="left",
-            )
-        )
-        mean = F.try_divide(
-            F.col("__hs") - F.coalesce(F.col("__ls"), F.lit(0.0)),
-            F.col("__hn") - F.coalesce(F.col("__ln"), F.lit(0)),
-        )
-        name = f"{value}_slwin_{m_back}_{n_fwd}"
-        return _keep(res.withColumn(name, mean), [*df.columns, name])
+        return _framed(df, order_by, m_back, n_fwd, {name: F.avg(value)})
     w = (
         Window.partitionBy(*_cols(by))
         .orderBy(*[F.col(c) for c in _cols(order_by)])
         .rowsBetween(-m_back, n_fwd)
     )
-    return df.withColumn(f"{value}_slwin_{m_back}_{n_fwd}", F.avg(value).over(w))
+    return df.withColumn(name, F.avg(value).over(w))
 
 
 def rank(df: DataFrame, value: str, by: Sequence[str] = (), descending: bool = False) -> DataFrame:
@@ -2663,42 +2651,21 @@ def stats1_windowed(
     records per group, one output per input record. All accumulators
     share one Window frame — Catalyst plans a single WindowExec.
 
-    Ungrouped: rows are hashed into blocks of B >= w consecutive global
-    indices, each row duplicated into its own block and the next one as
-    read-only context ("ghost"); the trailing frame then runs entirely
-    within a block. Bounded ~2x duplication, no single-task window."""
-    by = _cols(by)
-    if by:
-        frame = (
-            Window.partitionBy(*by)
-            .orderBy(*[F.col(c) for c in _cols(order_by)])
-            .rowsBetween(-(w - 1), 0)
-        )
-        out = df
-        for f in _cols(values):
-            for a in _cols(accs):
-                if a not in _WIN_ACCS:
-                    raise ValueError(f"stats1 -w accumulator not supported: {a}")
-                out = out.withColumn(f"{f}_{a}_{w}", _WIN_ACCS[a](F.col(f)).over(frame))
-        return out
-    numbered = global_row_number(df, _cols(order_by), out="__n")
-    B = max(w, 1024)
-    blk = ((F.col("__n") - 1) / B).cast("long")
-    real = numbered.withColumn("__blk", blk).withColumn("__real", F.lit(1))
-    ghost = numbered.withColumn("__blk", blk + 1).withColumn("__real", F.lit(0))
-    both = real.unionByName(ghost)
+    Ungrouped: the trailing frame runs over blocks of consecutive rows,
+    each block also holding the last w-1 rows of the block before it as
+    read-only context (_framed); no single-task window."""
+    for a in _cols(accs):
+        if a not in _WIN_ACCS:
+            raise ValueError(f"stats1 -w accumulator not supported: {a}")
+    cols = {f"{f}_{a}_{w}": _WIN_ACCS[a](F.col(f)) for f in _cols(values) for a in _cols(accs)}
+    if not by:
+        return _framed(df, order_by, w - 1, 0, cols)
     frame = (
-        Window.partitionBy("__blk").orderBy("__n").rowsBetween(-(w - 1), 0)
+        Window.partitionBy(*_cols(by))
+        .orderBy(*[F.col(c) for c in _cols(order_by)])
+        .rowsBetween(-(w - 1), 0)
     )
-    out = both
-    names = []
-    for f in _cols(values):
-        for a in _cols(accs):
-            if a not in _WIN_ACCS:
-                raise ValueError(f"stats1 -w accumulator not supported: {a}")
-            names.append(f"{f}_{a}_{w}")
-            out = out.withColumn(f"{f}_{a}_{w}", _WIN_ACCS[a](F.col(f)).over(frame))
-    return out.filter(F.col("__real") == 1).select(*df.columns, *names)
+    return df.withColumns({name: agg.over(frame) for name, agg in cols.items()})
 
 
 def stats1_iterative(

@@ -14,7 +14,8 @@ inputs, with the sketch's published error bound attached:
   seen_bloom / bloom_dedup
                        ~ `mlr uniq -a` membership
                          (pkg/transformers/uniq.go:391-425)
-  ewma_pandas          ~ `mlr step -a ewma` (pkg/transformers/step.go:647)
+  ewma_pandas          ~ `mlr step -a ewma` (pkg/transformers/step.go:647),
+                         step by step (exact.step is the window path)
 
 All run the two-level partial/final plan in mlrsketch.agg: per-partition
 Arrow-batched partials, associative merge, single KB-scale shuffle.
@@ -521,7 +522,8 @@ def bloom_filter_new(df: DataFrame, of: str, bloom: BloomFilter) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ewma (order-sensitive; no closed Catalyst form that is numerically stable)
+# ewma, step by step (order-sensitive; exact.step's window form is within
+# a few ULP of the sequential recursion, this one runs the recursion)
 # ---------------------------------------------------------------------------
 
 
@@ -534,7 +536,10 @@ def ewma_pandas(
 ) -> DataFrame:
     """`mlr step -a ewma -d a1,a2 -f value` (reference: step.go:647-651):
     y_0 = x_0; y_t = a*x_t + (1-a)*y_{t-1}, one output column per alpha.
-    applyInPandas per group, pandas ewm (adjust=False matches Miller).
+    applyInPandas per group, pandas ewm (adjust=False matches Miller):
+    a sequential float recursion, whose last bits a 9-digit compare of a
+    rounding tie can see. The scale path, without a per-group Python
+    task, is exact.step(..., ewma_alphas=...).
     """
     by = list(by)
     cols = {

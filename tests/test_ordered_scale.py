@@ -56,7 +56,7 @@ def collect_map(df, key="ord"):
     return {r[key]: r.asDict() for r in df.collect()}
 
 
-def check_step_matches_naive(df):
+def check_step_matches_naive(df, alphas=(0.3,)):
     # The naive reference encodes Miller's heterogeneity event model
     # (see exact.step docstring): with F = max look-forward (2 here,
     # from shift_lead_2), each record's event gates on the presence of
@@ -66,7 +66,7 @@ def check_step_matches_naive(df):
     steppers = ["shift", "shift_lag_3", "shift_lead_2", "delta", "ratio_2",
                 "rsum", "rprod", "counter", "from-first"]
     got = collect_map(ev.step(df, steppers, ["x"], order_by=["ord"],
-                              ewma_alphas=[0.3]))
+                              ewma_alphas=list(alphas)))
     w = Window.partitionBy().orderBy("ord")
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     c = F.col("x")
@@ -113,20 +113,54 @@ def check_step_matches_naive(df):
 
     # ewma vs sequential reference: the recursion advances only on
     # gated-present values; gated-off or absent rows emit nothing
-    rows = sorted(exp)
-    yprev = None
-    alpha = 0.3
-    for k in rows:
-        x = exp[k]["x"]
-        if not exp[k]["__g"] or x is None:
-            assert got[k]["x_ewma_0_3"] is None, k
+    for alpha in alphas:
+        check_ewma(got, {k: exp[k]["x"] if exp[k]["__g"] else None for k in exp}, alpha)
+
+
+def check_ewma(got, xs, alpha):
+    """``got``'s x ewma against Miller's recursion (step.go:647-651) over
+    ``xs`` (key -> x, None where no event advances it)."""
+    name = "x_ewma_" + ("%g" % alpha).replace(".", "_")
+    y = None
+    for k in sorted(xs):
+        x = xs[k]
+        if x is None:
+            assert got[k][name] is None, (k, alpha)
             continue
-        yprev = x if yprev is None else alpha * x + (1 - alpha) * yprev
-        assert math.isclose(got[k]["x_ewma_0_3"], yprev, rel_tol=1e-6, abs_tol=1e-9), k
+        y = x if y is None else alpha * x + (1 - alpha) * y
+        assert math.isclose(got[k][name], y, rel_tol=1e-9, abs_tol=1e-12), (k, alpha, got[k][name], y)
 
 
 def test_step_ungrouped_matches_naive(data):
     check_step_matches_naive(data)
+
+
+@pytest.fixture(scope="module")
+def long_data(spark):
+    """4,000 rows with nulls over several range partitions: long enough
+    that a running statistic whose terms grow with the row index (an
+    ewma scaled by (1-alpha)^-i) leaves the double range."""
+    rng = random.Random(11)
+    rows = [(i, None if rng.random() < 0.1 else round(rng.uniform(-5, 5), 3)) for i in range(4000)]
+    rows[0] = (0, 1.5)
+    return spark.createDataFrame(rows, "ord long, x double").repartition(8).cache()
+
+
+def test_step_ungrouped_ewma_at_length_matches_naive(long_data):
+    assert len(pid_sizes(long_data, ["ord"])) > 4
+    check_step_matches_naive(long_data, alphas=(0.9, 0.3))
+
+
+def test_step_grouped_ewma_at_length_matches_recursion(long_data):
+    """One 4,000-row group: the grouped path's ewma against the recursion
+    over the group's non-null values."""
+    alphas = [0.9, 0.5, 0.3, 0.001, 1.0]
+    got = collect_map(ev.step(long_data.withColumn("g", F.lit("a")), [], ["x"], order_by=["ord"],
+                              by=["g"], ewma_alphas=alphas))
+    xs = {k: r["x"] for k, r in got.items()}
+    assert len(xs) == 4000
+    for alpha in alphas:
+        check_ewma(got, xs, alpha)
 
 
 def test_step_tiny_partitions_with_nulls_match_naive(spark):
@@ -167,6 +201,35 @@ def test_slwin_ungrouped_matches_naive(data):
             assert g == e, k
         else:
             assert math.isclose(g, e, rel_tol=1e-9), k
+
+
+def naive_framed(df, back, fwd, cols):
+    """``cols`` (name -> aggregate) over one single-task frame."""
+    w = Window.partitionBy().orderBy("ord").rowsBetween(-back, fwd)
+    return collect_map(df.withColumns({k: agg.over(w) for k, agg in cols.items()}))
+
+
+@pytest.mark.parametrize("back,fwd", [(3, 2), (0, 5), (40, 3)])
+def test_slwin_across_frame_blocks_matches_naive(data, monkeypatch, back, fwd):
+    """Blocks of 16 rows put every frame's halo across a block edge
+    (500 rows fit one default block); a 40-row back window is larger
+    than a block."""
+    monkeypatch.setattr(ev, "_FRAME_BLOCK", 16)
+    name = f"x_slwin_{back}_{fwd}"
+    got = collect_map(ev.slwin(data, "x", back, fwd, order_by=["ord"]))
+    exp = naive_framed(data, back, fwd, {name: F.avg("x")})
+    assert {k: r[name] for k, r in got.items()} == {k: r[name] for k, r in exp.items()}
+
+
+@pytest.mark.parametrize("w", [1, 5, 40])
+def test_stats1_windowed_across_frame_blocks_matches_naive(data, monkeypatch, w):
+    monkeypatch.setattr(ev, "_FRAME_BLOCK", 16)
+    accs = ["count", "sum", "mean", "min", "max", "var", "stddev"]
+    got = collect_map(ev.stats1_windowed(data, accs, ["x", "y"], w, order_by=["ord"]))
+    exp = naive_framed(data, w - 1, 0, {
+        f"{f}_{a}_{w}": ev._WIN_ACCS[a](f) for f in ("x", "y") for a in accs
+    })
+    assert got == exp
 
 
 def test_stats1_windowed_ungrouped_matches_naive(data):

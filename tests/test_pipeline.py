@@ -124,6 +124,18 @@ def test_quality_score_range(spark, docs):
     assert bad == 0
 
 
+def test_quality_score_of_empty_text_is_null(spark, docs):
+    """'' has no characters to take a ratio of: its alpha_ratio and score
+    are null (as the SQL reference's ``/ nc`` gives), not a failed job."""
+    empty = spark.createDataFrame([(-1, "")], "doc_id long, text string")
+    out = textstats.quality_score(docs.select("doc_id", "text").unionByName(empty))
+    rows = {r["doc_id"]: r for r in out.collect()}
+    assert len(rows) == docs.count() + 1
+    assert rows[-1]["alpha_ratio"] is None and rows[-1]["quality_score"] is None
+    assert rows[-1]["len_score"] == 0.0
+    assert all(r["quality_score"] is not None for k, r in rows.items() if k != -1)
+
+
 def test_ivf_topk_recall(spark):
     from pyspark.sql import functions as F
 

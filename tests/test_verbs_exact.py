@@ -166,6 +166,19 @@ def test_ewma_closed_form_matches_recurrence(spark, abixy):
         assert abs(r["x_ewma_0_3"] - y) < 1e-9
 
 
+@pytest.mark.parametrize("alpha", [0.0, -0.5, 1.5])
+def test_step_rejects_ewma_alpha_outside_unit_interval(spark, abixy, alpha):
+    """The EWM window aggregate takes alpha in (0, 1] only: step and the
+    CLI refuse the rest up front rather than fail in the JVM."""
+    from mlrsketch.mlrcli import Unsupported, v_step
+
+    for by in ([], ["a"]):
+        with pytest.raises(ValueError, match="outside"):
+            ev.step(abixy, [], ["x"], order_by=["i"], by=by, ewma_alphas=[0.5, alpha])
+    with pytest.raises(Unsupported, match="outside"):
+        v_step(abixy, ["-a", "ewma", "-d", f"0.5,{alpha}", "-f", "x"])
+
+
 def test_fill_down(spark):
     df = spark.createDataFrame(
         [(1, 10.0), (2, None), (3, None), (4, 40.0), (5, None)], ["i", "v"]
@@ -273,6 +286,23 @@ def test_merge_fields_rowwise(spark):
     df = spark.createDataFrame([(1.0, 5.0, 3.0)], ["a", "b", "c"])
     r = ev.merge_fields(df, ["min", "max", "sum", "mean"], ["a", "b", "c"], "m").collect()[0]
     assert (r["m_min"], r["m_max"], r["m_sum"], r["m_mean"]) == (1.0, 5.0, 9.0, 3.0)
+
+
+def test_merge_fields_few_values_give_null_not_divide_by_zero(spark):
+    """A record with one non-null value has no sample variance, and one
+    with none has no mean either: null, not a failed job under ANSI
+    mode."""
+    df = spark.createDataFrame(
+        [(1, 1.0, 3.0, 5.0, None), (2, None, 4.0, None, None), (3, None, None, None, None)],
+        "i int, a double, b double, c double, d double",
+    )
+    accs = ["count", "sum", "mean", "var", "stddev"]
+    got = {r["i"]: r for r in ev.merge_fields(df, accs, ["a", "b", "c", "d"], "m").collect()}
+    assert (got[1]["m_count"], got[1]["m_mean"], got[1]["m_var"], got[1]["m_stddev"]) == (3, 3.0, 4.0, 2.0)
+    assert (got[2]["m_count"], got[2]["m_sum"], got[2]["m_mean"]) == (1, 4.0, 4.0)
+    assert got[2]["m_var"] is None and got[2]["m_stddev"] is None
+    assert (got[3]["m_count"], got[3]["m_sum"]) == (0, 0.0)
+    assert got[3]["m_mean"] is None and got[3]["m_var"] is None and got[3]["m_stddev"] is None
 
 
 def test_rank_competition_style(spark):
@@ -418,6 +448,9 @@ _EMPTY_CASES = {
     "percentiles_rank_grouped": lambda d: ev.percentiles_rank(d, "x", [50, 90], by=["g"]),
     "percentiles_rank_global": lambda d: ev.percentiles_rank(d, "x", [50, 90]),
     "cat_numbered": lambda d: ev.cat_numbered(d, order_by=["ord"]),
+    "stats1_windowed": lambda d: ev.stats1_windowed(
+        d, ["count", "sum", "mean", "min", "max", "var"], ["x"], 3, order_by=["ord"]
+    ),
 }
 
 
@@ -471,3 +504,14 @@ def test_ungrouped_ordered_verbs_join_one_lookup(spark, ordered_frame, verb, mon
     monkeypatch.setattr(ev, "_LOOKUP_LITERAL_MAX", 0)
     plan = _EMPTY_CASES[verb](ordered_frame)._jdf.queryExecution().optimizedPlan().toString()
     assert len(set(re.findall(r"__lk\d+", plan))) == 1, plan
+
+
+@pytest.mark.parametrize("verb", ["slwin", "stats1_windowed"])
+def test_ungrouped_framed_verbs_join_only_the_lookup(ordered_frame, verb, monkeypatch, no_coalesce):
+    """A bounded frame reads its halo rows from the neighbouring block,
+    so the plan's one join is the row-offset lookup: no prefix table is
+    joined back at the window edges."""
+    monkeypatch.setattr(ev, "_LOOKUP_LITERAL_MAX", 0)
+    plan = _EMPTY_CASES[verb](ordered_frame)._jdf.queryExecution().optimizedPlan().toString()
+    joins = [line for line in plan.splitlines() if re.search(r"\bJoin \w+", line)]
+    assert len(joins) == 1 and "__lk" in joins[0], plan

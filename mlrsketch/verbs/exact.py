@@ -56,6 +56,10 @@ def _cols(c: str | Sequence[str]) -> list[str]:
 # small row per partition and folds, on the driver, what earlier (and, for
 # step, later) partitions contribute to it. (3) _lookup reads that one
 # per-partition value (a struct when a verb needs several) back by __pid.
+# step, stats1 -s and fill-down have one body each (_ordered): grouped,
+# they run it over Window.partitionBy(by), where nothing precedes a
+# group, so the carry is a typed null and every carry term is coalesced
+# to its identity.
 # ---------------------------------------------------------------------------
 
 # A literal map inlines every entry into the Catalyst plan at each use,
@@ -157,26 +161,23 @@ def _carry(tagged: DataFrame, aggs: Sequence[Column], fold, init, dtype):
     return tagged, value, acc
 
 
-def _numbered(tagged: DataFrame, aggs=(), fold=None, init=None, fields=()):
-    """global_row_number's row offsets for a _range_pass frame, with the
-    caller's own per-partition aggregates and fold on the same collect.
+def _ordered(df: DataFrame, order_by, by, aggs, fold, init, dtype, prep=None):
+    """One ordered verb's ``(frame, w, carry, acc)``, so that one body
+    serves the grouped and the ungrouped verb.
 
-    ``fold(acc, row, later)`` returns ``(tuple of fields, acc)`` as in
-    _pid_prefix; ``row["__rows"]`` is the partition's row count. Rows gain
-    ``__n``, the 1-up row number in range order. Returns ``(frame, carry,
-    n_total, acc)``: ``carry`` is the partition's struct of ``off`` (rows
-    before it) and the caller's ``fields``."""
-
-    def with_offset(acc, r, later):
-        n, inner = acc
-        value, inner = fold(inner, r, later) if fold else ((), None)
-        return (n, *value), (n + r["__rows"], inner)
-
-    tagged, carry, (n_total, acc) = _carry(
-        tagged, [F.count(F.lit(1)).alias("__rows"), *aggs], with_offset, (0, init),
-        StructType([StructField("off", LongType()), *fields]),
-    )
-    return tagged.withColumn("__n", _local_index() + 1 + carry["off"]), carry, n_total, acc
+    Grouped: ``df``, ``Window.partitionBy(*by).orderBy(order)``, a typed
+    null ``carry`` (nothing precedes a group within its window partition)
+    and ``init``; no Spark job runs. Ungrouped: a _range_pass frame with
+    ``prep(frame, w)``'s columns, the window over each range partition
+    and the _carry of ``aggs``/``fold`` (see _pid_prefix). The body
+    coalesces every carry term to its identity."""
+    by, order = _cols(by), [F.col(c) for c in _cols(order_by)]
+    if by:
+        return df, Window.partitionBy(*by).orderBy(*order), F.lit(None).cast(dtype), init
+    w = Window.partitionBy("__pid").orderBy("__mid")
+    tagged = _range_pass(df, order)
+    tagged, carry, acc = _carry(prep(tagged, w) if prep else tagged, aggs, fold, init, dtype)
+    return tagged, w, carry, acc
 
 
 def _framed(
@@ -210,7 +211,8 @@ def _keep(out: DataFrame, cols: Sequence[str]) -> DataFrame:
     """``out`` without its internal (``__pid``, ``__lk<n>``, ...) columns:
     only ``cols``, in ``out``'s column order."""
     cols = set(cols)
-    return out.select(*[c for c in out.columns if c in cols])
+    keep = [c for c in out.columns if c in cols]
+    return out if len(keep) == len(out.columns) else out.select(*keep)
 
 
 def _ieee_div(num: Column, den: Column) -> Column:
@@ -1015,15 +1017,17 @@ def global_row_number(
     """Distributed 1-up row number in a global ``order_by`` order.
 
     A bare ``Window.orderBy`` funnels EVERY row through one task — fatal
-    at 100 TB. Classic two-pass instead (_numbered): range-partition on
-    the order keys, so partition p holds a contiguous key range; number
-    rows within each partition by their _local_index; add each
-    partition's start offset, the exclusive prefix of per-partition
-    counts. One range exchange, one collect, no window, no single-task
-    stage. step and slwin fold their own carries into the same collect.
+    at 100 TB. Classic two-pass instead: range-partition on the order
+    keys, so partition p holds a contiguous key range; number rows within
+    each partition by their _local_index; add each partition's start
+    offset, the exclusive prefix of per-partition counts (_carry). One
+    range exchange, one collect, no window, no single-task stage.
     """
     tagged = _range_pass(df, [F.col(c) for c in _cols(order_by)])
-    numbered = _numbered(tagged)[0].withColumnRenamed("__n", out)
+    tagged, off, _ = _carry(
+        tagged, [F.count(F.lit(1)).alias("rows")], lambda n, r, _: (n, n + r["rows"]), 0, LongType()
+    )
+    numbered = tagged.withColumn(out, _local_index() + 1 + off)
     return _keep(numbered, [*df.columns, out, *(["__pid"] if keep_pid else [])])
 
 
@@ -1197,15 +1201,15 @@ def fill_down(
     A field with no prior carry keeps its original value (absent stays
     absent, void stays void — fill_down.go:176-180).
 
-    Grouped: one hash-partitioned window. Ungrouped: range-partition on
-    the order key, fill within each partition, and resolve the
-    cross-partition carry (the last rememberable value of every
-    PREVIOUS partition) with one _carry (a last-non-null fold over one
-    tiny row per partition, read back as one struct of every field),
-    instead of an empty-partition window that serializes all rows
-    through one task."""
+    One body (_ordered): a missing value is filled from the last
+    rememberable value up to it in its window partition, else from the
+    partition's carry. Grouped, that partition is the group and the
+    carry is null. Ungrouped, rows are range-partitioned on the order
+    key and the carry is the last rememberable value of every PREVIOUS
+    partition (a last-non-null fold over one tiny row per partition,
+    read back as one struct of every field), not an empty-partition
+    window that serializes all rows through one task."""
     fields = list(dict.fromkeys(_cols(fields)))
-    order_by = _cols(order_by)
     str_cols = {c for c, t in df.dtypes if t == "string"}
 
     def memcol(f):  # the value a row contributes to the carry, else null
@@ -1225,34 +1229,22 @@ def fill_down(
             missing = c.isNull() | (c == "")
         return F.when(missing, F.coalesce(carryv, c)).otherwise(c)
 
-    if by:
-        w = (
-            Window.partitionBy(*_cols(by))
-            .orderBy(*[F.col(c) for c in order_by])
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return df.withColumns(
-            {f: fill_expr(f, F.last(memcol(f), ignorenulls=True).over(w)) for f in fields}
-        )
     # per-partition last rememberable value of each field, in order:
     # max_by(f, __mid-when-rememberable); the fold keeps the latest one
-    ordered = _range_pass(df, [F.col(c) for c in order_by])
-    ordered, carry, _ = _carry(
-        ordered,
+    frame, w, carry, _ = _ordered(
+        df, order_by, by,
         [F.max_by(memcol(f), F.when(memcol(f).isNotNull(), F.col("__mid"))).alias(f)
          for f in fields],
         lambda acc, r, _: (acc, tuple(a if r[f] is None else r[f] for a, f in zip(acc, fields))),
         (None,) * len(fields),
         StructType([StructField(f, df.schema[f].dataType) for f in fields]),
     )
-    w_in = Window.partitionBy("__pid").orderBy("__mid").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     filled = {
-        f: fill_expr(f, F.coalesce(F.last(memcol(f), ignorenulls=True).over(w_in), carry[f]))
+        f: fill_expr(f, F.coalesce(F.last(memcol(f), ignorenulls=True).over(run), carry[f]))
         for f in fields
     }
-    return _keep(ordered.withColumns(filled), df.columns)
+    return _keep(frame.withColumns(filled), df.columns)
 
 
 def clean_whitespace(df: DataFrame, fields: Sequence[str] | None = None) -> DataFrame:
@@ -1709,18 +1701,26 @@ def step(
     its first min(m, max(0, 2m-F)) records — verb-step/0022 and 0026
     goldens encode this.
 
-    Grouped: one shuffle on the group keys; all steppers share the same
-    window, so Catalyst plans a single Window exec. Ungrouped: an
-    empty-partition window would single-task every row, so the work is
-    decomposed scale-safely instead (_step_ungrouped) — every window
-    (gate, lag, lead, running aggregate) runs within a range partition,
-    and what a partition needs from its neighbours (its row offset,
-    the gated values before it, the raw values after it and the
-    running carries) comes from one driver collect and returns as one
-    struct per partition.
+    One body (_ordered): every window (gate, lag, lead, running
+    aggregate) runs within a window partition, and what a partition
+    needs from its neighbours comes from its carry struct. Grouped, the
+    partition is the group and the carry is null. Ungrouped, an
+    empty-partition window would single-task every row, so rows are
+    range-partitioned instead. A row's gate reads the record F ahead,
+    which for a partition's last F rows lies in a later partition, so
+    each partition sends its row count, its first F and last max(K, F)
+    raw values of each field (K the largest lag) and its running
+    aggregates over the rows whose gate it knows. ONE driver collect
+    resolves the other gates from the later partitions' heads, chains
+    partitions shorter than the edges, and returns one struct per
+    partition: its offset and size and, per field, the K gated values
+    before it (lags), the F raw values after it (gates, leads) and the
+    running carries.
 
     Every ewma alpha must lie in (0, 1], the JVM EWM aggregate's domain
-    (ValueError otherwise); Miller takes any -d value.
+    (ValueError otherwise); Miller takes any -d value. slwin steppers
+    run grouped only; ungrouped, compose slwin() after step()
+    (ValueError otherwise).
     """
     if any(not 0 < a <= 1 for a in ewma_alphas):
         raise ValueError(f"ewma alpha outside (0, 1]: {list(ewma_alphas)}")
@@ -1728,159 +1728,50 @@ def step(
     values = _cols(values)
     steppers = _cols(steppers)
     slwins = list(slwins)
-    f_max = _steppers_max_forward(steppers, slwins)
-    if not by:
-        return _step_ungrouped(df, steppers, values, order_by, ewma_alphas, slwins, f_max)
-    base = Window.partitionBy(*by).orderBy(*[F.col(c) for c in _cols(order_by)])
-    run = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grp_m = F.count(F.lit(1)).over(Window.partitionBy(*by))
-    grp_j = F.row_number().over(base)
-    result_cols: dict[str, Column] = {}
-    for f in values:
-        c = F.col(f)
-        # het gate: ingested-record field presence (see docstring)
-        if f_max:
-            gate = F.when(
-                grp_j + f_max <= grp_m, F.lead(c, f_max).over(base).isNotNull()
-            ).otherwise(c.isNotNull())
-        else:
-            gate = c.isNotNull()
-        v = F.when(gate, c)  # the value each event pushes into prev-caches
-        for s in steppers:
-            # parameterized steppers shift_lag_N / shift_lead_N / delta_N /
-            # ratio_N (step.go:679-701 registers the _n variants)
-            base_name, lag_n = _parse_stepper(s)
-            if base_name in ("shift", "shift_lag"):
-                # outputs VOID when no prev (absent==null here; the two
-                # canonicalize identically in the fixed-schema mapping)
-                e = F.when(gate, F.lag(v, lag_n).over(base))
-            elif base_name == "shift_lead":
-                e = F.when(gate, F.lead(c, lag_n).over(base))
-            elif base_name == "delta":  # step.go:639-645: no prev gets 0
-                e = F.when(
-                    gate & c.isNotNull(),
-                    F.coalesce(c - F.lag(v, lag_n).over(base), F.lit(0)),
-                )
-            elif base_name == "ratio":  # leading records (no lag yet) get 1
-                e = F.when(
-                    gate & c.isNotNull(),
-                    F.coalesce(c / F.lag(v, lag_n).over(base), F.lit(1.0)),
-                )
-            elif s == "rsum":
-                e = F.when(gate & c.isNotNull(), F.sum(v).over(run))
-            elif s == "rprod":
-                e = F.when(gate & c.isNotNull(), F.exp(F.sum(F.log(v)).over(run)))
-            elif s == "counter":
-                e = F.when(gate & c.isNotNull(), F.count(v).over(run))
-            elif s == "from-first":
-                e = F.when(
-                    gate & c.isNotNull(),
-                    c - F.first(v, ignorenulls=True).over(run),
-                )
-            else:
-                raise ValueError(f"unknown stepper: {s}")
-            result_cols[f"{f}_{s.replace('-', '_')}"] = e
-        for m_back, n_fwd in slwins:
-            # slwin averages the RAW field over the positional window,
-            # skipping absent/void slots (step.go:1575-1608); empty
-            # window -> VOID
-            e = F.when(gate, F.avg(c).over(base.rowsBetween(-m_back, n_fwd)))
-            result_cols[f"{f}_slwin_{m_back}_{n_fwd}"] = e
-        # ewma (step.go:647-651), advancing only on gated-present values
-        for alpha in ewma_alphas:
-            label = ("%g" % alpha).replace(".", "_")
-            y = _ewma(v, alpha, run, F.first(v, ignorenulls=True).over(run))
-            result_cols[f"{f}_ewma_{label}"] = F.when(gate & c.isNotNull(), y)
-    out = df.withColumns(result_cols)
-    if f_max:
-        # drain drop rule (see docstring): keep first min(m, 2m-F) of each group
-        out = (
-            out.withColumn("__m_", grp_m)
-            .withColumn("__j_", grp_j)
-            .filter(
-                (F.col("__m_") >= f_max)
-                | (F.col("__j_") <= 2 * F.col("__m_") - f_max)
-            )
-            .drop("__m_", "__j_")
-        )
-    return out
-
-
-def _parse_stepper(s: str) -> tuple[str, int]:
-    parts = s.rsplit("_", 1)
-    if len(parts) == 2 and parts[1].isdigit() and parts[0] in (
-        "shift_lag", "shift_lead", "delta", "ratio"
-    ):
-        return parts[0], int(parts[1])
-    return s, 1
-
-
-def _step_ungrouped(
-    df: DataFrame,
-    steppers: Sequence[str],
-    values: Sequence[str],
-    order_by: Sequence[str],
-    ewma_alphas: Sequence[float] = (),
-    slwins: Sequence[tuple[int, int]] = (),
-    f_max: int = 0,
-) -> DataFrame:
-    """Ungrouped steppers without a single-task window (see step()).
-
-    The same het event model as the grouped path, over one range pass
-    and ONE collect (_numbered). A row's gate reads the record f_max
-    ahead, which for a partition's last f_max rows lies in a later
-    partition. So each partition sends its row count, its first f_max
-    and last max(K, f_max) raw values of each field (K the largest lag;
-    window values at its first and last row) and its running aggregates
-    over the rows whose gate it knows. The driver resolves the other
-    gates from the later partitions' heads, chains partitions shorter
-    than the edges, and returns one struct per partition: its offset and
-    size and, per field, the K gated values before it (lags), the f_max
-    raw values after it (gates, leads) and the running carries. slwin
-    composes separately via slwin() (the caller handles it); a het input
-    mixing slwin with forward steppers ungrouped would need a shared
-    f_max across both — no reference golden exercises that combination.
-    """
-    if slwins:
+    if slwins and not by:
         raise ValueError("ungrouped slwin: compose slwin() after step()")
-    values = _cols(values)
-    steppers = _cols(steppers)
     for s in steppers:
         if _parse_stepper(s)[0] not in (
             "shift", "shift_lag", "shift_lead", "delta", "ratio", "rsum", "rprod", "counter",
             "from-first",
         ):
             raise ValueError(f"unknown stepper: {s}")
+    f_max = _steppers_max_forward(steppers, slwins)
     lag_ks = sorted({k for b, k in map(_parse_stepper, steppers)
                      if b in ("shift", "shift_lag", "delta", "ratio")})
     k_lag = max(lag_ks, default=0)
     k_tail = max(k_lag, f_max)
     ew_labels = [(a, ("%g" % a).replace(".", "_")) for a in ewma_alphas]
     running = bool(ew_labels) or any(s in ("rsum", "rprod", "counter", "from-first") for s in steppers)
-    w_ord = Window.partitionBy("__pid").orderBy("__mid")
-    run = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     dtypes = {f: df.schema[f].dataType for f in values}
-    sum_t = {f: df.select(F.sum(f)).schema[0].dataType for f in values} if running else {}
+    sums = df.select(*map(F.sum, values)).schema if running else []
+    sum_t = {f: fld.dataType for f, fld in zip(values, sums)}
 
-    # ---- executor side: edge windows and the running aggregates over the
-    # rows whose gate is in-partition (all but the last f_max; a
-    # gated-off or absent value is null)
-    tagged = _range_pass(df, [F.col(c) for c in _cols(order_by)])
-    edges = {}
-    for f in values:
-        c = F.col(f)
-        if k_tail:
-            edges[f"__tail_{f}"] = F.array(*[
-                F.lag(c, i).over(w_ord) if i else c for i in reversed(range(k_tail))
-            ])
-        if f_max:
-            edges[f"__head_{f}"] = F.array(*[
-                F.lead(c, i).over(w_ord) if i else c for i in range(f_max)
-            ])
-            edges[f"__iv_{f}"] = F.when(F.lead(c.isNotNull(), f_max).over(w_ord), c)
-        else:
-            edges[f"__iv_{f}"] = c
-    tagged = tagged.withColumns(edges)
+    def prep(tagged, w):
+        # ungrouped, executor side: edge windows and the running
+        # aggregates over the rows whose gate is in-partition (all but
+        # the last f_max; a gated-off or absent value is null)
+        edges = {}
+        for f in values:
+            c = F.col(f)
+            if k_tail:
+                edges[f"__tail_{f}"] = F.array(*[
+                    F.lag(c, i).over(w) if i else c for i in reversed(range(k_tail))
+                ])
+            if f_max:
+                edges[f"__head_{f}"] = F.array(*[
+                    F.lead(c, i).over(w) if i else c for i in range(f_max)
+                ])
+                edges[f"__iv_{f}"] = F.when(F.lead(c.isNotNull(), f_max).over(w), c)
+            else:
+                edges[f"__iv_{f}"] = c
+        # the in-partition ewm of the values whose gate is known here
+        run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        return tagged.withColumns(edges).withColumns({
+            f"__ew_{f}_{label}": InternalFunction.ewm(F.col(f"__iv_{f}"), alpha, True).over(run)
+            for f in values for alpha, label in ew_labels
+        })
+
     aggs = []
     for f in values:
         aggs += [F.max_by(f"__tail_{f}", "__mid").alias(f"__tail_{f}")] if k_tail else []
@@ -1892,22 +1783,19 @@ def _step_ungrouped(
                 F.product(iv).alias(f"__prod_{f}"),
                 F.min_by(iv, F.when(iv.isNotNull(), F.col("__mid"))).alias(f"__first_{f}"),
             ]
-        for alpha, label in ew_labels:
-            # the in-partition ewm of the values whose gate is known here
-            ew = InternalFunction.ewm(iv, alpha, True).over(run)
-            tagged = tagged.withColumn(f"__ew_{f}_{label}", ew)
-            aggs.append(F.max_by(f"__ew_{f}_{label}", "__mid").alias(f"__ew_{f}_{label}"))
+        aggs += [F.max_by(f"__ew_{f}_{label}", "__mid").alias(f"__ew_{f}_{label}")
+                 for _a, label in ew_labels]
 
     # ---- driver side: one struct per partition; acc keys are its field names
-    fields = [StructField("rows", LongType())]
-    init = {}
+    fields = [StructField("off", LongType()), StructField("rows", LongType())]
+    init = {"off": 0}
     for f in values:
         fields += [StructField(f"lag_{f}", ArrayType(dtypes[f]))] if k_lag else []
         fields += [StructField(f"ahead_{f}", ArrayType(dtypes[f]))] if f_max else []
         init |= {f"lag_{f}": [], f"first_{f}": None}
         if running:
             fields += [StructField(f"rsum_{f}", sum_t[f]), StructField(f"counter_{f}", LongType()),
-                       StructField(f"rprod_{f}", DoubleType())]
+                       StructField(f"rprod_{f}", DoubleType()), StructField(f"first_{f}", dtypes[f])]
             init |= {f"rsum_{f}": None, f"counter_{f}": 0, f"rprod_{f}": 1.0}
         for _a, label in ew_labels:
             fields.append(StructField(f"ewma_{f}_{label}", DoubleType()))
@@ -1915,6 +1803,7 @@ def _step_ungrouped(
 
     def fold(acc, r, later):
         cnt, nxt = r["__rows"], dict(acc)
+        nxt["off"] += cnt
         ahead, seen = {f: [] for f in values}, 0
         for q in later if f_max else ():  # the heads of the next partitions, up to f_max rows
             if seen >= f_max:
@@ -1959,78 +1848,112 @@ def _step_ungrouped(
         struct = acc | {"rows": cnt} | {f"ahead_{f}": ahead[f] for f in values}
         return tuple(struct[fld.name] for fld in fields), nxt
 
-    out, carry, n_total, total = _numbered(tagged, aggs, fold, init, fields)
-    out = out.withColumn("__pos", _local_index() + 1)
-    pos, cnt, n = F.col("__pos"), carry["rows"], F.col("__n")
+    out, w, carry, acc = _ordered(df, order_by, by, [F.count(F.lit(1)).alias("__rows"), *aggs],
+                                  fold, init, StructType(fields), prep)
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # a row's 1-up position in its window partition and the partition's
+    # size, then its number in the stream (or group) and that size.
+    # Grouped, every carry term below folds to null and takes pos and
+    # cnt with it; only the drain rule reads n and n_total
+    if by:
+        pos = n = F.row_number().over(w)
+        cnt = n_total = F.count(F.lit(1)).over(Window.partitionBy(*by))
+    else:
+        pos, cnt = _local_index() + 1, carry["rows"]
+        n, n_total = pos + carry["off"], F.lit(acc["off"])
 
-    def edge(f, k) -> Column:  # the raw value k rows after a tail row, from the next partitions
+    def edge(f, k) -> Column:
+        """The raw value k rows after a row, from the next partitions;
+        null within the partition (a negative index)."""
         return F.get(carry[f"ahead_{f}"], (pos + k - cnt - 1).cast("int"))
 
-    for f in values:
-        c = F.col(f)
-        gate = c.isNotNull()
-        if f_max:
-            # het gate: the presence of the record f_max ahead (the
-            # 'ingested' record of this center's event); rows with no
-            # record f_max ahead gate on their own presence (drain events)
-            ahead_present = F.when(
-                pos + f_max <= cnt, F.lead(c.isNotNull(), f_max).over(w_ord)
-            ).otherwise(edge(f, f_max).isNotNull())
-            gate = F.when(n + f_max <= F.lit(n_total), ahead_present).otherwise(c.isNotNull())
-        out = out.withColumn(f"__g_{f}", gate)
-    # the value each event pushes into prev-caches (null when gated off)
-    out = out.withColumns({f"__v_{f}": F.when(F.col(f"__g_{f}"), F.col(f)) for f in values})
-    # prev-caches see the GATED sequence (clearPrevValue pushes nil); a
-    # row within k of its partition's start reads the carried lags
-    out = out.withColumns({
-        f"__lag{k}_{f}": F.when(pos > k, F.lag(f"__v_{f}", k).over(w_ord)).otherwise(
-            F.get(carry[f"lag_{f}"], (F.lit(k) - pos).cast("int"))
-        )
-        for f in values for k in lag_ks
-    })
+    gates = {f: F.col(f).isNotNull() for f in values}
+    if f_max:
+        # het gate: the presence of the record f_max ahead (the
+        # 'ingested' record of this center's event), within the
+        # partition or else from the next ones; rows with no record
+        # f_max ahead gate on their own presence (drain events). A
+        # window, so computed once as a column
+        out = out.withColumns({
+            f"__g_{f}": F.coalesce(
+                F.lead(F.col(f).isNotNull(), f_max).over(w),
+                F.when(pos + f_max - cnt - 1 < F.size(carry[f"ahead_{f}"]),
+                       edge(f, f_max).isNotNull()),
+                F.col(f).isNotNull(),
+            )
+            for f in values
+        })
+        gates = {f: F.col(f"__g_{f}") for f in values}
 
     result_cols = {}
     for f in values:
-        c = F.col(f)
-        vc = F.col(f"__v_{f}")
-        gate = F.col(f"__g_{f}")
+        c, gate = F.col(f), gates[f]
+        vc = F.when(gate, c)  # the value each event pushes into prev-caches (null when gated off)
         present = gate & c.isNotNull()
+
+        def lag(k: int) -> Column:
+            """The k-th previous GATED value (clearPrevValue pushes nil);
+            a row within k of its partition's start reads the carried
+            lags (past k, a negative index reads null)."""
+            return F.coalesce(
+                F.lag(vc, k).over(w), F.get(carry[f"lag_{f}"], (F.lit(k) - pos).cast("int"))
+            )
+
         for s in steppers:
             base_name, k = _parse_stepper(s)
             name = f"{f}_{s.replace('-', '_')}"
-            lag = F.col(f"__lag{k}_{f}")
             if base_name in ("shift", "shift_lag"):
-                result_cols[name] = F.when(gate, lag)
+                # outputs VOID when no prev (absent==null here; the two
+                # canonicalize identically in the fixed-schema mapping)
+                result_cols[name] = F.when(gate, lag(k))
             elif base_name == "shift_lead":
                 # shift_lead reads the raw next-record value (step.go:1087-1106)
-                nxt = F.when(pos + k <= cnt, F.lead(c, k).over(w_ord)).otherwise(edge(f, k))
-                result_cols[name] = F.when(gate, nxt)
-            elif base_name == "delta":
-                result_cols[name] = F.when(present, F.coalesce(c - lag, F.lit(0)))
-            elif base_name == "ratio":
-                result_cols[name] = F.when(present, F.coalesce(c / lag, F.lit(1.0)))
+                result_cols[name] = F.when(gate, F.coalesce(F.lead(c, k).over(w), edge(f, k)))
+            elif base_name == "delta":  # step.go:639-645: no prev gets 0
+                result_cols[name] = F.when(present, F.coalesce(c - lag(k), F.lit(0)))
+            elif base_name == "ratio":  # leading records (no lag yet) get 1
+                result_cols[name] = F.when(present, F.coalesce(c / lag(k), F.lit(1.0)))
             elif s == "rsum":
                 e = F.sum(vc).over(run) + F.coalesce(carry[f"rsum_{f}"], F.lit(0))
                 result_cols[name] = F.when(present, e)
             elif s == "counter":
-                result_cols[name] = F.when(present, F.count(vc).over(run) + carry[f"counter_{f}"])
+                e = F.count(vc).over(run) + F.coalesce(carry[f"counter_{f}"], F.lit(0))
+                result_cols[name] = F.when(present, e)
             elif s == "rprod":
-                result_cols[name] = F.when(present, F.product(vc).over(run) * carry[f"rprod_{f}"])
+                e = F.product(vc).over(run) * F.coalesce(carry[f"rprod_{f}"], F.lit(1.0))
+                result_cols[name] = F.when(present, e)
             elif s == "from-first":
-                result_cols[name] = F.when(present, c - F.lit(total[f"first_{f}"]))
+                first = F.coalesce(carry[f"first_{f}"], F.first(vc, ignorenulls=True).over(run))
+                result_cols[name] = F.when(present, c - first)
+        for m_back, n_fwd in slwins:
+            # slwin averages the RAW field over the positional window,
+            # skipping absent/void slots (step.go:1575-1608); empty
+            # window -> VOID
+            result_cols[f"{f}_slwin_{m_back}_{n_fwd}"] = F.when(
+                gate, F.avg(c).over(w.rowsBetween(-m_back, n_fwd))
+            )
+        # ewma (step.go:647-651), advancing only on gated-present values
         for alpha, label in ew_labels:
             seed = F.coalesce(carry[f"ewma_{f}_{label}"], F.first(vc, ignorenulls=True).over(run))
             result_cols[f"{f}_ewma_{label}"] = F.when(present, _ewma(vc, alpha, run, seed))
 
     out = out.withColumns(result_cols)
-    # drain drop rule (see step()): with a forward window larger than the
-    # stream, the reference's drain loop drops the tail — only reachable
-    # at toy scale (n_total < f_max)
-    if f_max and n_total < f_max:
-        out = out.filter(F.col("__n") <= 2 * n_total - f_max)
-    # __n/__pid and join/scratch columns are internal; __ord (if the
-    # caller carries one) stays
+    if f_max:
+        # drain drop rule (see docstring): keep the first min(m, 2m-F)
+        # rows of a group, or of the stream (a no-op past F rows)
+        out = out.withColumns({"__n": n, "__nt": n_total}).filter(
+            (F.col("__nt") >= f_max) | (F.col("__n") <= 2 * F.col("__nt") - f_max)
+        )
     return _keep(out, [*df.columns, *result_cols])
+
+
+def _parse_stepper(s: str) -> tuple[str, int]:
+    parts = s.rsplit("_", 1)
+    if len(parts) == 2 and parts[1].isdigit() and parts[0] in (
+        "shift_lag", "shift_lead", "delta", "ratio"
+    ):
+        return parts[0], int(parts[1])
+    return s, 1
 
 
 def slwin(
@@ -2322,27 +2245,6 @@ def flatten_structs(df: DataFrame, sep: str = ".") -> DataFrame:
     return df.select(*out_cols)
 
 
-def unflatten_structs(df: DataFrame, sep: str = ".") -> DataFrame:
-    """`mlr unflatten` (pkg/transformers/unflatten.go:20): dotted column
-    names reassembled into struct columns (single level of nesting per
-    dotted prefix, applied recursively)."""
-    groups: dict[str, list[str]] = {}
-    plain: list[str] = []
-    for c in df.columns:
-        if sep in c:
-            groups.setdefault(c.split(sep, 1)[0], []).append(c)
-        else:
-            plain.append(c)
-    sel: list[Column] = [F.col(f"`{c}`") for c in plain]
-    for prefix, cols in groups.items():
-        sel.append(
-            F.struct(
-                *[F.col(f"`{c}`").alias(c.split(sep, 1)[1]) for c in cols]
-            ).alias(prefix)
-        )
-    return df.select(*sel)
-
-
 def json_stringify(df: DataFrame, fields: Sequence[str]) -> DataFrame:
     """`mlr json-stringify -f ...` (pkg/transformers/json_stringify.go:35)."""
     return df.withColumns({f: F.to_json(F.col(f)) for f in _cols(fields)})
@@ -2516,52 +2418,6 @@ def bootstrap_ci_hash(
     )
 
 
-def bootstrap_ci(
-    df: DataFrame,
-    value: str,
-    by: Sequence[str] = (),
-    n_boot: int = 200,
-    lo: float = 0.025,
-    hi: float = 0.975,
-    seed: int = 42,
-) -> DataFrame:
-    """`mlr bootstrap-ci` (pkg/transformers/bootstrap_ci.go:29):
-    bootstrap confidence interval for the per-group mean. Vectorized
-    resampling per group via applyInPandas (numpy draws an
-    (n_boot x n) index matrix in one shot — no Python loop per row)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    by = _cols(by)
-    by_fields = [df.schema[c] for c in by]
-    schema = StructType(
-        by_fields
-        + [
-            StructField(f"{value}_mean", DoubleType()),
-            StructField(f"{value}_ci_lo", DoubleType()),
-            StructField(f"{value}_ci_hi", DoubleType()),
-        ]
-    )
-
-    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf[value].to_numpy(dtype=np.float64)
-        x = x[~np.isnan(x)]
-        # group-content-derived seed: deterministic under any partitioning
-        gseed = (seed + len(x) + int(abs(float(x.sum())) * 1000) % 100003) % (2**31)
-        rng = np.random.default_rng(gseed)
-        idx = rng.integers(0, len(x), size=(n_boot, len(x)))
-        means = x[idx].mean(axis=1)
-        row = {c: pdf[c].iloc[0] for c in by}
-        row[f"{value}_mean"] = float(x.mean())
-        row[f"{value}_ci_lo"] = float(np.quantile(means, lo))
-        row[f"{value}_ci_hi"] = float(np.quantile(means, hi))
-        return pd.DataFrame([row])
-
-    grouped = df.groupBy(*by) if by else df.groupBy()
-    return grouped.applyInPandas(python_task(per_group), schema=schema)
-
-
 # ---------------------------------------------------------------------------
 # survival analysis (SURVEY.md §2.5: surv)
 # ---------------------------------------------------------------------------
@@ -2668,6 +2524,15 @@ def stats1_windowed(
     return df.withColumns({name: agg.over(frame) for name, agg in cols.items()})
 
 
+def _merge_moments(a, b):
+    """Chan, Golub & LeVeque's pairwise update of two (count, mean, M2)
+    summaries, M2 the sum of squared deviations from the mean; numbers
+    or Columns. The caller ensures a nonzero total count."""
+    (na, ma, m2a), (nb, mb, m2b) = a, b
+    n, d = na + nb, mb - ma
+    return n, ma + d * nb / n, m2a + m2b + d * d * na * nb / n
+
+
 def stats1_iterative(
     df: DataFrame,
     accs: Sequence[str],
@@ -2679,16 +2544,17 @@ def stats1_iterative(
     (expanding/cumulative) stats appended to each record, one output
     per input record.
 
-    Grouped: a single WindowExec partitioned by the group keys — each
-    group's expanding frame runs where its rows live, distributed
-    across groups. Ungrouped: a bare expanding window is a single-task
-    stage; instead every supported accumulator decomposes associatively
-    (count / sum / sum-of-squares / min / max), so compute a prefix
-    within each range partition and add the exclusive-prefix carry of
-    the earlier partitions (``_carry`` folds the per-partition (count,
-    sum, sum², min, max) and reads it back as one struct). Rows are
-    ordered by their range position; no global row number is needed.
-    One range exchange, one collect, no SinglePartition anywhere.
+    One body (_ordered): every accumulator is a running statistic within
+    a window partition combined with the partition's carry. count, sum,
+    min and max combine by +/min/max; var and stddev keep (count, mean,
+    M2) and combine by _merge_moments, which stays exact where a
+    sum-of-squares difference cancels (values near 1e9). Grouped, the
+    partition is the group and the carry is null. Ungrouped, a bare
+    expanding window is a single-task stage, so rows are
+    range-partitioned on the order keys and each partition's carry is
+    the exclusive prefix of the earlier partitions' statistics (``_carry``
+    folds one row per partition and reads it back as one struct). One
+    range exchange, one collect, no SinglePartition anywhere.
 
     Output columns are named ``{field}_{acc}`` (stats1 -s emits the
     record plus the running stats under the batch naming). Supported
@@ -2702,100 +2568,89 @@ def stats1_iterative(
     for a in accs:
         if a not in _WIN_ACCS:
             raise ValueError(f"stats1 -s accumulator not supported: {a}")
-    if by:
-        frame = (
-            Window.partitionBy(*_cols(by))
-            .orderBy(*[F.col(c) for c in _cols(order_by)])
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return df.withColumns(
-            {
-                f"{f}_{a}": _WIN_ACCS[a](F.col(f)).over(frame)
-                for f in values
-                for a in accs
-            }
-        )
-
-    # ---- ungrouped: per-range-partition prefix + one carry struct
-    ordered = _range_pass(df, [F.col(c) for c in _cols(order_by)])
-    run = Window.partitionBy("__pid").orderBy("__mid").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
     need_var = any(a in ("var", "stddev") for a in accs)
-    need_sum = need_var or any(a in ("sum", "mean") for a in accs)
-    need_cnt = need_var or any(a in ("count", "mean") for a in accs)
-    # Miller-typed results: min/max/sum of an integer column stay integer
-    # (reference pkg/lib/arithmetic.go:69-100) — mirror the grouped path,
-    # which aggregates the uncast column. Only the moment terms (s2, and
-    # anything feeding mean/var) are forced to double.
+    need = {"c": True, "s": any(a in ("sum", "mean") for a in accs), "mn": "min" in accs,
+            "mx": "max" in accs, "mu": need_var, "m2": need_var}
+    int_t = {"tinyint", "smallint", "int", "bigint"}
     dtypes = dict(df.dtypes)
-    _INT_T = {"tinyint", "smallint", "int", "bigint"}
 
-    def _is_int(f: str) -> bool:
-        return dtypes.get(f) in _INT_T
+    def stats(over) -> dict[str, tuple[Column, object]]:
+        """name -> (the statistic, its type), over the rows ``over``
+        selects: per partition (an aggregate) or per row (a running
+        window). Miller-typed results: min/max/sum of an integer column
+        stay integer (reference pkg/lib/arithmetic.go:69-100); only the
+        moments are forced to double."""
+        out = {}
+        for f in values:
+            raw, v = F.col(f), F.col(f).cast("double")
+            is_int = dtypes[f] in int_t
+            every = {
+                "c": (over(F.count(raw)), LongType()),
+                "s": (over(F.sum(raw if is_int else v)), LongType() if is_int else DoubleType()),
+                "mn": (over(F.min(raw)), df.schema[f].dataType),
+                "mx": (over(F.max(raw)), df.schema[f].dataType),
+                "mu": (over(F.avg(v)), DoubleType()),
+                "m2": (over(F.var_pop(v)) * over(F.count(raw)), DoubleType()),
+            }
+            out |= {f"{k}_{f}": spec for k, spec in every.items() if need[k]}
+        return out
 
-    # the associative per-partition statistics the accumulators need:
-    # name -> (aggregate, how two partitions' values combine, carry type)
-    need = {"c": need_cnt, "s": need_sum, "s2": need_var, "mn": "min" in accs, "mx": "max" in accs}
-    stats = {}
-    for f in values:
-        raw, v = F.col(f), F.col(f).cast("double")
-        every = {
-            "c": (F.count(raw), operator.add, LongType()),
-            "s": (F.sum(raw if _is_int(f) else v), operator.add,
-                  LongType() if _is_int(f) else DoubleType()),
-            "s2": (F.sum(v * v), operator.add, DoubleType()),
-            "mn": (F.min(raw), min, df.schema[f].dataType),
-            "mx": (F.max(raw), max, df.schema[f].dataType),
-        }
-        stats |= {f"{k}_{f}": spec for k, spec in every.items() if need[k]}
+    carried = stats(lambda agg: agg)
+    init = {k: {"c": 0, "mu": 0.0, "m2": 0.0}.get(k.split("_", 1)[0]) for k in carried}
 
     def fold(acc, r, _):  # exclusive prefix: a partition joins the carry after it
-        nxt = tuple(
-            a if r[k] is None else r[k] if a is None else op(a, r[k])
-            for a, (k, (_agg, op, _t)) in zip(acc, stats.items())
-        )
-        return acc, nxt
+        nxt = dict(acc)
+        for f in values:
+            for k, op in ((f"s_{f}", operator.add), (f"mn_{f}", min), (f"mx_{f}", max)):
+                if k in acc and r[k] is not None:
+                    nxt[k] = r[k] if acc[k] is None else op(acc[k], r[k])
+            c, mu, m2 = f"c_{f}", f"mu_{f}", f"m2_{f}"
+            nxt[c] = acc[c] + r[c]
+            if need_var and r[c]:
+                _, nxt[mu], nxt[m2] = _merge_moments((acc[c], acc[mu], acc[m2]), (r[c], r[mu], r[m2]))
+        return tuple(acc.values()), nxt
 
-    ordered, carry, _ = _carry(
-        ordered, [agg.alias(k) for k, (agg, _o, _t) in stats.items()], fold, (None,) * len(stats),
-        StructType([StructField(k, t) for k, (_a, _o, t) in stats.items()]),
+    ordered, w, carry, _ = _ordered(
+        df, order_by, by, [agg.alias(k) for k, (agg, _t) in carried.items()], fold, init,
+        StructType([StructField(k, t) for k, (_a, t) in carried.items()]),
     )
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     # each running statistic once, as a column: a repeated window
     # expression is evaluated once per use
-    ordered = ordered.withColumns({f"__run_{k}": agg.over(run) for k, (agg, _o, _t) in stats.items()})
+    ordered = ordered.withColumns(
+        {f"__run_{k}": agg for k, (agg, _t) in stats(lambda agg: agg.over(run)).items()}
+    )
 
-    def total(k: str, f: str) -> Column:  # the running value plus the carry; null-free sums
-        if k in ("mn", "mx"):
-            return (F.least if k == "mn" else F.greatest)(F.col(f"__run_{k}_{f}"), carry[f"{k}_{f}"])
-        return F.coalesce(F.col(f"__run_{k}_{f}"), F.lit(0)) + F.coalesce(carry[f"{k}_{f}"], F.lit(0))
+    def total(k: str) -> Column:  # the running value plus the carry; null-free sums
+        here, before = F.col(f"__run_{k}"), carry[k]
+        if k.startswith(("mn_", "mx_")):
+            return (F.least if k.startswith("mn_") else F.greatest)(here, before)
+        return F.coalesce(here, F.lit(0)) + F.coalesce(before, F.lit(0))
 
     out_cols: dict[str, Column] = {}
     for f in values:
-        cnt = total("c", f) if need_cnt else None
-        ssum = total("s", f) if need_sum else None
-        ssum2 = total("s2", f) if need_var else None
+        cnt = total(f"c_{f}")
         for a in accs:
             name = f"{f}_{a}"
             if a == "count":
                 out_cols[name] = cnt
             elif a == "sum":
-                out_cols[name] = F.when(cnt > 0, ssum)
+                out_cols[name] = F.when(cnt > 0, total(f"s_{f}"))
             elif a == "mean":
-                out_cols[name] = F.when(cnt > 0, ssum.cast("double") / cnt)
+                out_cols[name] = F.when(cnt > 0, total(f"s_{f}").cast("double") / cnt)
             elif a == "min":
-                out_cols[name] = total("mn", f)
+                out_cols[name] = total(f"mn_{f}")
             elif a == "max":
-                out_cols[name] = total("mx", f)
-            elif a in ("var", "stddev"):
-                sd = ssum.cast("double")
-                var = (ssum2 - sd * sd / cnt) / (cnt - 1)
-                out_cols[name] = F.when(
-                    cnt > 1, F.sqrt(var) if a == "stddev" else var
+                out_cols[name] = total(f"mx_{f}")
+            else:  # var, stddev: the carry's moments merged with the running ones
+                ident = ((f"c_{f}", 0), (f"mu_{f}", 0.0), (f"m2_{f}", 0.0))
+                n, _, m2 = _merge_moments(
+                    [F.coalesce(carry[k], F.lit(z)) for k, z in ident],
+                    [F.coalesce(F.col(f"__run_{k}"), F.lit(z)) for k, z in ident],
                 )
-    return ordered.withColumns(out_cols).select(
-        *df.columns, *[f"{f}_{a}" for f in values for a in accs]
-    )
+                var = m2 / (n - 1)
+                out_cols[name] = F.when(n > 1, F.sqrt(var) if a == "stddev" else var)
+    return _keep(ordered.withColumns(out_cols), [*df.columns, *out_cols])
 
 
 def count_distinct_n(df: DataFrame, fields: Sequence[str]) -> DataFrame:

@@ -583,10 +583,10 @@ def bootstrap_ci_sketch(
     partitioning. Output: by..., {value}_mean, {value}_ci_lo,
     {value}_ci_hi.
 
-    This is the 10^12-row shape for CI estimation; exact.bootstrap_ci
-    (applyInPandas index resampling) and exact.bootstrap_ci_hash (the
-    engine-portable oracle variant) are the test-scale references it is
-    validated against (tests/test_sketch_verbs_spark.py)."""
+    This is the 10^12-row shape for CI estimation.
+    tests/test_sketch_verbs_spark.py checks it against the exact mean
+    and a classical-theory interval width, salted and unsalted;
+    exact.bootstrap_ci_hash is the engine-portable oracle variant."""
 
     def prepare(d: DataFrame, of: str) -> DataFrame:
         return d.withColumn(

@@ -5,13 +5,16 @@ same data — including nulls and repeated values — while its plan
 contains no 'Window.partitionBy()' full funnel.
 
 The naive reference implementations here are intentionally the
-single-partition formulations the library used to have."""
+single-partition formulations the library used to have. step, stats1 -s
+and fill-down run one body grouped and ungrouped, so their references
+take group keys and check both paths."""
 
 from __future__ import annotations
 
 import inspect
 import math
 import random
+import statistics
 
 import pytest
 from pyspark.sql import Window
@@ -39,8 +42,8 @@ def data(spark):
         if i == 0:
             x = 1.234  # a non-null head keeps the ewma seed well-defined
         y = random.choice([1.0, 2.0, 2.0, 3.0, None])
-        rows.append((i, x, y))
-    df = spark.createDataFrame(rows, "ord long, x double, y double")
+        rows.append((i, x, y, "abc"[i % 3]))
+    df = spark.createDataFrame(rows, "ord long, x double, y double, g string")
     # spread across many partitions so cross-partition carries matter
     return df.repartition(16).cache()
 
@@ -56,23 +59,25 @@ def collect_map(df, key="ord"):
     return {r[key]: r.asDict() for r in df.collect()}
 
 
-def check_step_matches_naive(df, alphas=(0.3,)):
+def check_step_matches_naive(df, alphas=(0.3,), by=()):
     # The naive reference encodes Miller's heterogeneity event model
     # (see exact.step docstring): with F = max look-forward (2 here,
     # from shift_lead_2), each record's event gates on the presence of
-    # x on the record F ahead (its own presence at the stream tail),
-    # prev-caches lag over the GATED value sequence, and running state
-    # advances only on gated-present values.
+    # x on the record F ahead (its own presence at the stream or group
+    # tail), prev-caches lag over the GATED value sequence, and running
+    # state advances only on gated-present values. One single-task
+    # window per group (or over the stream) is the reference for both
+    # of step's paths.
     steppers = ["shift", "shift_lag_3", "shift_lead_2", "delta", "ratio_2",
                 "rsum", "rprod", "counter", "from-first"]
-    got = collect_map(ev.step(df, steppers, ["x"], order_by=["ord"],
+    got = collect_map(ev.step(df, steppers, ["x"], order_by=["ord"], by=list(by),
                               ewma_alphas=list(alphas)))
-    w = Window.partitionBy().orderBy("ord")
+    w = Window.partitionBy(*by).orderBy("ord")
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     c = F.col("x")
-    n_total = df.count()
+    n_total = F.count(F.lit(1)).over(Window.partitionBy(*by))
     rn = F.row_number().over(w)
-    gate = F.when(rn + 2 <= F.lit(n_total), F.lead(c, 2).over(w).isNotNull()).otherwise(
+    gate = F.when(rn + 2 <= n_total, F.lead(c, 2).over(w).isNotNull()).otherwise(
         c.isNotNull()
     )
     base = df.withColumn("__g", gate).withColumn(
@@ -114,25 +119,36 @@ def check_step_matches_naive(df, alphas=(0.3,)):
     # ewma vs sequential reference: the recursion advances only on
     # gated-present values; gated-off or absent rows emit nothing
     for alpha in alphas:
-        check_ewma(got, {k: exp[k]["x"] if exp[k]["__g"] else None for k in exp}, alpha)
+        check_ewma(got, {k: exp[k]["x"] if exp[k]["__g"] else None for k in exp}, alpha,
+                   {k: tuple(exp[k][b] for b in by) for k in exp})
 
 
-def check_ewma(got, xs, alpha):
+def check_ewma(got, xs, alpha, groups=None):
     """``got``'s x ewma against Miller's recursion (step.go:647-651) over
-    ``xs`` (key -> x, None where no event advances it)."""
+    ``xs`` (key -> x, None where no event advances it), one recursion
+    per group of ``groups`` (key -> group; one group when None)."""
     name = "x_ewma_" + ("%g" % alpha).replace(".", "_")
-    y = None
+    ys = {}
     for k in sorted(xs):
         x = xs[k]
         if x is None:
             assert got[k][name] is None, (k, alpha)
             continue
-        y = x if y is None else alpha * x + (1 - alpha) * y
+        g = groups[k] if groups else None
+        y = x if ys.get(g) is None else alpha * x + (1 - alpha) * ys[g]
+        ys[g] = y
         assert math.isclose(got[k][name], y, rel_tol=1e-9, abs_tol=1e-12), (k, alpha, got[k][name], y)
 
 
 def test_step_ungrouped_matches_naive(data):
     check_step_matches_naive(data)
+
+
+def test_step_grouped_matches_naive(data):
+    """The grouped path against the same reference per group: x spans
+    [-5, 5], so a running product through exp(sum(log x)) would lose
+    every sign and zero."""
+    check_step_matches_naive(data, by=("g",))
 
 
 @pytest.fixture(scope="module")
@@ -175,20 +191,28 @@ def test_step_tiny_partitions_with_nulls_match_naive(spark):
     check_step_matches_naive(df)
 
 
-def test_fill_down_ungrouped_matches_naive(data):
-    got = collect_map(ev.fill_down(data, ["x", "y"], order_by=["ord"]))
+def check_fill_down_matches_naive(df, by=()):
+    got = collect_map(ev.fill_down(df, ["x", "y"], order_by=["ord"], by=list(by)))
     w = (
-        Window.partitionBy()
+        Window.partitionBy(*by)
         .orderBy("ord")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    naive = data.withColumns(
+    naive = df.withColumns(
         {f: F.last(F.col(f), ignorenulls=True).over(w) for f in ("x", "y")}
     )
     exp = collect_map(naive)
     for k in exp:
         assert got[k]["x"] == exp[k]["x"], k
         assert got[k]["y"] == exp[k]["y"], k
+
+
+def test_fill_down_ungrouped_matches_naive(data):
+    check_fill_down_matches_naive(data)
+
+
+def test_fill_down_grouped_matches_naive(data):
+    check_fill_down_matches_naive(data, by=("g",))
 
 
 def test_slwin_ungrouped_matches_naive(data):
@@ -267,15 +291,17 @@ def test_rank_ungrouped_matches_naive(data):
         assert got[k] is None
 
 
-def test_stats1_iterative_ungrouped_matches_naive(data):
-    accs = ["count", "sum", "mean", "min", "max", "var", "stddev"]
-    got = collect_map(ev.stats1_iterative(data, accs, ["x", "y"], order_by=["ord"]))
-    run = Window.partitionBy().orderBy("ord").rowsBetween(
+_STATS1_S_ACCS = ["count", "sum", "mean", "min", "max", "var", "stddev"]
+
+
+def check_stats1_iterative_matches_naive(df, by=(), accs=_STATS1_S_ACCS):
+    got = collect_map(ev.stats1_iterative(df, accs, ["x", "y"], order_by=["ord"], by=list(by)))
+    run = Window.partitionBy(*by).orderBy("ord").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     naive = {"count": F.count, "sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
              "var": F.var_samp, "stddev": F.stddev_samp}
-    exp = collect_map(data.withColumns(
+    exp = collect_map(df.withColumns(
         {f"{f}_{a}": naive[a](f).over(run) for f in ("x", "y") for a in accs}
     ))
     for k in exp:
@@ -285,6 +311,45 @@ def test_stats1_iterative_ungrouped_matches_naive(data):
                 assert g == e, (k, col, g, e)
             else:
                 assert math.isclose(g, e, rel_tol=1e-9, abs_tol=1e-9), (k, col, g, e)
+
+
+def test_stats1_iterative_ungrouped_matches_naive(data):
+    check_stats1_iterative_matches_naive(data)
+
+
+def test_stats1_iterative_grouped_matches_naive(data):
+    check_stats1_iterative_matches_naive(data, by=("g",))
+
+
+def test_stats1_iterative_each_accumulator_alone_matches_naive(data):
+    """An accumulator asked for alone still gets the running count it is
+    built on (sum alone once raised a TypeError ungrouped)."""
+    for a in _STATS1_S_ACCS:
+        check_stats1_iterative_matches_naive(data, accs=[a])
+
+
+@pytest.mark.parametrize("by", [(), ("g",)], ids=["ungrouped", "grouped"])
+def test_stats1_iterative_variance_at_large_magnitude(spark, by):
+    """Running var/stddev of values near 1e9 (epoch seconds) against the
+    exact variance of every prefix. A sum-of-squares difference
+    (sum x^2 - (sum x)^2/n) cancels there, down to negative variances.
+    The tolerance is rel 1e-5: Spark's own var_samp window is 3.4e-7 off
+    on this data."""
+    rows = [(i, 1e9 + (i % 7) * 0.1, i % 3) for i in range(200)]
+    df = spark.createDataFrame(rows, "ord long, x double, g long").repartition(8)
+    assert len(pid_sizes(df, ["ord"])) > 1
+    got = collect_map(ev.stats1_iterative(df, ["var", "stddev"], ["x"], order_by=["ord"],
+                                          by=list(by)))
+    prefixes = {}
+    for i, x, g in rows:
+        prefix = prefixes.setdefault(g if by else None, [])
+        prefix.append(x)
+        if len(prefix) < 2:
+            assert got[i]["x_var"] is None and got[i]["x_stddev"] is None, i
+            continue
+        var = statistics.variance(prefix)
+        assert got[i]["x_var"] >= 0 and math.isclose(got[i]["x_var"], var, rel_tol=1e-5), (i, got[i], var)
+        assert math.isclose(got[i]["x_stddev"], math.sqrt(var), rel_tol=1e-5), (i, got[i], var)
 
 
 def test_fraction_cumulative_ungrouped_matches_naive(data):

@@ -454,12 +454,37 @@ _EMPTY_CASES = {
 }
 
 
+# the grouped forms of the one-body ordered verbs: the same body over
+# Window.partitionBy(g) with a typed-null carry, so no Spark job runs
+# until the result is read
+_GROUPED_CASES = {
+    "fill_down": lambda d: ev.fill_down(d, ["x", "y"], order_by=["ord"], by=["g"]),
+    "stats1_iterative": lambda d: ev.stats1_iterative(
+        d, ["count", "sum", "mean", "min", "max", "var", "stddev"], ["x"], order_by=["ord"],
+        by=["g"],
+    ),
+    "step": lambda d: ev.step(
+        d, ["shift", "shift_lead_1", "delta", "rsum", "rprod", "counter", "from-first"], ["x"],
+        order_by=["ord"], by=["g"], ewma_alphas=[0.5], slwins=[(1, 1)],
+    ),
+}
+
+
 @pytest.mark.parametrize("verb", sorted(_EMPTY_CASES))
 def test_ungrouped_ordered_verbs_on_empty_input(spark, verb):
     """A 0-row frame gives 0 rows with the columns a 1-row frame gets:
     an empty carry table must not become an untyped map()."""
+    check_empty_input(spark, _EMPTY_CASES[verb])
+
+
+@pytest.mark.parametrize("verb", sorted(_GROUPED_CASES))
+def test_grouped_ordered_verbs_on_empty_input(spark, verb):
+    """The null carry of a grouped verb keeps the columns too."""
+    check_empty_input(spark, _GROUPED_CASES[verb])
+
+
+def check_empty_input(spark, run):
     schema = "ord long, g string, x double, y double"
-    run = _EMPTY_CASES[verb]
     one = run(spark.createDataFrame(_ONE, schema))
     empty = run(spark.createDataFrame([], schema))
     assert empty.collect() == []
@@ -481,19 +506,29 @@ def ordered_frame(spark):
 _CALL_JOBS = dict.fromkeys(_EMPTY_CASES, 5) | {"rank": 6}
 
 
+def call_time_jobs(spark, run, frame, group):
+    """The Spark jobs ``run(frame)`` runs before it returns its plan."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run(frame)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("verb", sorted(_EMPTY_CASES))
 def test_ungrouped_ordered_verbs_call_time_jobs(spark, ordered_frame, verb):
     """Building an ordered verb's plan runs one range pass and one collect,
     whatever it carries across partitions."""
-    sc = spark.sparkContext
-    group = f"call-jobs-{verb}"
-    sc.setJobGroup(group, group)
-    try:
-        _EMPTY_CASES[verb](ordered_frame)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = call_time_jobs(spark, _EMPTY_CASES[verb], ordered_frame, f"call-jobs-{verb}")
     assert jobs <= _CALL_JOBS[verb], jobs
+
+
+@pytest.mark.parametrize("verb", sorted(_GROUPED_CASES))
+def test_grouped_ordered_verbs_run_no_call_time_job(spark, ordered_frame, verb):
+    jobs = call_time_jobs(spark, _GROUPED_CASES[verb], ordered_frame, f"call-jobs-grouped-{verb}")
+    assert jobs == 0, jobs
 
 
 @pytest.mark.parametrize("verb", sorted(_EMPTY_CASES))
